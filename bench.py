@@ -150,7 +150,7 @@ def main() -> None:
     qs = e.queries()
 
     # Warm-up: JVM JIT, codegen cache, parquet footer cache, and the
-    # memoized source loads (so concurrent workers never race on them).
+    # memoized source loads.
     qs["hourly_pivot"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # Streaming queries drain AvailableNow triggers with their own sinks
@@ -162,17 +162,6 @@ def main() -> None:
     # Longest-processing-time-first: launching the known-heavy queries
     # before the sub-second tail keeps the pool busy to the end instead
     # of finishing on a lone 5 s straggler (classic LPT makespan cut).
-    # pagerank_copurchase leads because it BUILDS the shared memoized
-    # pair-count table; the other graph-family queries are pushed to the
-    # very end so they start after the build exists (reusing it costs
-    # ~1 s) instead of blocking a pool thread on the build lock.
-    # Memo-builder discipline: pagerank_copurchase builds the shared
-    # pair-count table, minhash_lsh_dedup the shared verified-LSH pair
-    # table, logistic_gd the trained logistic chain, pq_encode the PQ
-    # codebook. Each launches FIRST; its cache consumers run in the late
-    # group so they find the memo built instead of racing 4 threads into
-    # 4 redundant builds (the benign race is correct but wastes the
-    # sharing).
     slow_first = [
         "pagerank_copurchase", "minhash_lsh_dedup",
         "logistic_gd", "pq_encode",
@@ -186,21 +175,6 @@ def main() -> None:
         "stats_moments", "q21_waiting_supplier", "q1_pricing_summary",
         "basket_similarity_join",
     ]
-    graph_late = [
-        "triangle_count", "label_propagation", "bfs_hops",
-        "assoc_rules", "pagerank_weighted",
-        "neighbor_jaccard", "modularity_communities", "item_cf_scores",
-        # consume the shared pair table AND share the _cf_eval_frames
-        # memo (split + scores + top-10 built once for both metrics)
-        "cf_holdout_hitrate", "cf_ndcg_at10",
-        # shared-LSH-pairs consumers (minhash_lsh_dedup builds the memo)
-        "dedup_groups_cc", "dedup_groups_cc_star", "cluster_split",
-        # trained-chain consumers
-        "logistic_calibration", "pq_adc_topk",
-        # Lloyd-assignment consumer (kmeans_units builds the memo)
-        "semdedup",
-    ]
-
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
 
@@ -216,7 +190,6 @@ def main() -> None:
         wall0 = time.time()
         batch = [n for n in qs if n not in serial]
         rank = {n: i for i, n in enumerate(slow_first)}
-        rank.update({n: 10_000 for n in graph_late})
         batch.sort(key=lambda n: rank.get(n, len(slow_first)))
         if par == 1:
             for name in batch:

@@ -15,6 +15,7 @@ it). Conventions that keep the value-hash comparison honest:
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,13 +83,50 @@ def _fan_out_narrow_scan(spark: SparkSession, df: DataFrame, path: str) -> DataF
     return df.repartition(target)
 
 
-# Memoized source DataFrames: a DataFrame is an immutable logical plan, so
-# reusing one per (session, sf_dir, table) is safe and skips the parquet
-# footer listing + schema read that spark.read.parquet pays on every call —
-# across an 85-query suite that's hundreds of redundant footer reads. This
-# is the engine's (tiny) catalog layer. Key element [1] stays sf_dir — the
-# dataset-scoped clear below relies on that position.
-_LOAD_CACHE: dict[tuple, DataFrame] = {}
+# The memo layer: builds shared across the queries of one session (scan
+# frames, checkpointed pair tables, trained chains) live in ONE store
+# under one key layout, (session, sf_dir, name, *params); clear_memos
+# below walks it.
+_MEMO: dict[tuple, object] = {}
+_MEMO_LOCKS: dict[tuple, threading.Lock] = {}
+_MEMO_LOCKS_GUARD = threading.Lock()
+_UNBUILT = object()
+
+
+def shared(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], object], *params
+):
+    """``build()``'s result, built once per ``(spark, sf_dir, name,
+    *params)`` and served to every later caller with that key.
+
+    Keyed by the SESSION OBJECT, not the application id: session clones
+    (the streaming ``_stream_session``) share an applicationId, and a
+    DataFrame is bound to the session that created it — under an
+    app-wide key a streaming query's load() poisoned the memo with a
+    clone-bound frame, so a later createOrReplaceTempView registered the
+    view in the CLONE's catalog and the main session's spark.sql failed
+    with TABLE_OR_VIEW_NOT_FOUND (sql_shipping_priority /
+    sql_lateral_topk, r12 gate), and clone-bound frames would silently
+    run batch consumers under the clone's conf.
+
+    Every input the build depends on besides the session and dataset
+    goes in ``params``. Each key has its own lock, held across the
+    build, so a caller arriving mid-build waits for that build instead
+    of running its own. Builders nest (several call ``load``, and
+    ``_cf_eval_frames`` calls ``_copurchase_pair_counts``); the builder
+    graph is acyclic, so per-key locks cannot deadlock. A build that
+    raises stores nothing, and the next caller builds again."""
+    key = (spark, sf_dir, name, *params)
+    value = _MEMO.get(key, _UNBUILT)
+    if value is not _UNBUILT:
+        return value
+    with _MEMO_LOCKS_GUARD:
+        lock = _MEMO_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        value = _MEMO.get(key, _UNBUILT)
+        if value is _UNBUILT:
+            value = _MEMO[key] = build()
+    return value
 
 
 def load(
@@ -99,51 +137,46 @@ def load(
     Expands, per-row vector math) whose work would otherwise serialize on
     a single-split input; the default stays a raw scan because the extra
     exchange is pure overhead for shuffle-first queries (joins, windows,
-    plain groupBys) — measured 2x either way on the respective tiers."""
-    # Keyed by the SESSION OBJECT, not the application id: session clones
-    # (the streaming `_stream_session`) share an applicationId, and a
-    # DataFrame is bound to the session that created it — under an
-    # app-wide key a streaming query's load() poisoned the memo with a
-    # clone-bound frame, so a later createOrReplaceTempView registered
-    # the view in the CLONE's catalog and the main session's spark.sql
-    # failed with TABLE_OR_VIEW_NOT_FOUND (sql_shipping_priority /
-    # sql_lateral_topk, r12 gate), and clone-bound frames would silently
-    # run batch consumers under the clone's conf.
-    key = (spark, sf_dir, table, fan_out)
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None:
-        return cached
-    nanos_cols = _NANOS_TS_COLS.get(table, [])
-    if nanos_cols:
-        # get_spark sessions already carry this conf (session.py) so the
-        # set never fires there — but entry() may be handed a VANILLA
-        # session by the external driver, which would otherwise reject the
-        # TIMESTAMP(NANOS) column. Set-if-unset keeps that path working
-        # without mutating conf on every memoized load (thread-safety
-        # under multi-threaded bench submission).
-        # NB: distinct name — reusing ``key`` here once shadowed the cache
-        # key and silently disabled memoization for every nanos table.
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        if spark.conf.get(conf_key, "false") != "true":
-            spark.conf.set(conf_key, "true")
-    path = f"{sf_dir}/{table}.parquet"
-    df = spark.read.parquet(path)
-    if fan_out:
-        df = _fan_out_narrow_scan(spark, df, path)
-    for c in nanos_cols:
-        dtype = dict(df.dtypes).get(c)
-        if dtype == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} DIV 1000")))
-        elif dtype == "timestamp_ntz":
-            # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
-            # TIMESTAMP_NTZ under Spark 4. Normalize to the session-zoned
-            # TIMESTAMP the rest of the engine (watermarks, interval
-            # arithmetic, the DuckDB oracle comparison under the UTC
-            # session) is written against; with a UTC session the cast is
-            # a wall-clock identity.
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    _LOAD_CACHE[key] = df
-    return df
+    plain groupBys) — measured 2x either way on the respective tiers.
+
+    A DataFrame is an immutable logical plan, so reusing one per
+    (session, sf_dir, table) is safe and skips the parquet footer
+    listing + schema read that spark.read.parquet pays on every call —
+    across an 85-query suite that's hundreds of redundant footer reads.
+    This is the engine's (tiny) catalog layer."""
+
+    def build() -> DataFrame:
+        nanos_cols = _NANOS_TS_COLS.get(table, [])
+        if nanos_cols:
+            # get_spark sessions already carry this conf (session.py) so
+            # the set never fires there — but entry() may be handed a
+            # VANILLA session by the external driver, which would
+            # otherwise reject the TIMESTAMP(NANOS) column. Set-if-unset
+            # keeps that path working without mutating conf on every
+            # memoized load (thread-safety under multi-threaded bench
+            # submission).
+            conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+            if spark.conf.get(conf_key, "false") != "true":
+                spark.conf.set(conf_key, "true")
+        path = f"{sf_dir}/{table}.parquet"
+        df = spark.read.parquet(path)
+        if fan_out:
+            df = _fan_out_narrow_scan(spark, df, path)
+        for c in nanos_cols:
+            dtype = dict(df.dtypes).get(c)
+            if dtype == "bigint":
+                df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} DIV 1000")))
+            elif dtype == "timestamp_ntz":
+                # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers
+                # as TIMESTAMP_NTZ under Spark 4. Normalize to the
+                # session-zoned TIMESTAMP the rest of the engine
+                # (watermarks, interval arithmetic, the DuckDB oracle
+                # comparison under the UTC session) is written against;
+                # with a UTC session the cast is a wall-clock identity.
+                df = df.withColumn(c, F.col(c).cast("timestamp"))
+        return df
+
+    return shared(spark, sf_dir, "load", build, table, fan_out)
 
 
 # Import side-effect registration of all query groups.
@@ -162,45 +195,30 @@ from taxi_data_datapipeline_spark import queries_curation  # noqa: E402,F401
 from taxi_data_datapipeline_spark import queries_curation2  # noqa: E402,F401
 
 def clear_memos(sf_dir: str | None = None) -> int:
-    """Release the memoized heavy builds (checkpointed pair tables, LSH
-    pair sets, CF-eval frames, trained chains, PQ codebooks, gram indexes)
-    and the scan memo — the memo layer's cache-invalidation API.
+    """Release the ``shared`` memo store's entries (checkpointed pair
+    tables, LSH pair sets, CF-eval frames, trained chains, PQ codebooks,
+    gram indexes, scan frames) — the memo layer's cache-invalidation API.
 
-    The memos are keyed by (applicationId, sf_dir, ...) and hold
-    localCheckpoint blocks PINNED in the unified memory pool for the
-    session's lifetime. In a long-lived session that switches datasets
-    (the sf3 -> sf6 scale ladder; a production job retiring one table
-    generation for the next) the retired dataset's blocks squeeze the
-    execution pool until aggregations die with UNABLE_TO_ACQUIRE_MEMORY —
-    found live when the sf6 pair-table build OOMed under the sf3 memo's
-    residency. ``sf_dir=None`` clears everything; passing a path clears
-    only that dataset's entries (the second key element by convention).
+    Many entries hold localCheckpoint blocks PINNED in the unified memory
+    pool for the session's lifetime. In a long-lived session that
+    switches datasets (the sf3 -> sf6 scale ladder; a production job
+    retiring one table generation for the next) the retired dataset's
+    blocks squeeze the execution pool until aggregations die with
+    UNABLE_TO_ACQUIRE_MEMORY — found live when the sf6 pair-table build
+    OOMed under the sf3 memo's residency. ``sf_dir=None`` clears
+    everything; passing a path clears only that dataset's entries.
 
-    Returns the number of cache entries released. Release is BEST-EFFORT
-    and GC-driven, not immediate: ``DataFrame.unpersist()`` on a
+    Returns the number of entries released. Release is BEST-EFFORT and
+    GC-driven, not immediate: ``DataFrame.unpersist()`` on a
     localCheckpoint'ed frame goes through the SQL cache manager, which
     has no entry for the LogicalRDD plan, so the call itself is usually
     a no-op — the checkpoint blocks are actually freed once the dropped
-    dict reference lets the Python/JVM GC and ContextCleaner reclaim the
+    store reference lets the Python/JVM GC and ContextCleaner reclaim the
     underlying RDD (observed sufficient for the sf3->sf6 ladder: the
-    rebuild no longer OOMs). Thread-safety matches the memos' own
-    benign-race discipline: clearing while a consumer builds can strand
-    one redundant build, never corrupt results; concurrent clears race
-    benignly on pop.
+    rebuild no longer OOMs). A clear does not interrupt a build in
+    progress: that build stores its result when it finishes. Concurrent
+    clears release each entry once.
     """
-    import importlib
-
-    specs = [
-        ("taxi_data_datapipeline_spark.queries", "_LOAD_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_advanced", "_EDGE_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_data", "_LSH_PAIRS_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_data", "_BLOCKED_PAIRS_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_data", "_KMEANS_UNITS_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_data", "_PQ_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_mining", "_GRAM_INDEX_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_stats", "_LOGIT_CHAIN_CACHE"),
-        ("taxi_data_datapipeline_spark.queries_stats", "_CF_EVAL_CACHE"),
-    ]
 
     def unpersist(value) -> None:
         if isinstance(value, (tuple, list)):
@@ -213,24 +231,15 @@ def clear_memos(sf_dir: str | None = None) -> int:
                 pass  # session already stopped — nothing to release
 
     released = 0
-    for mod_name, attr in specs:
-        try:
-            cache = getattr(importlib.import_module(mod_name), attr)
-        except (ImportError, AttributeError):
+    for key in [k for k in list(_MEMO) if sf_dir is None or k[1] == sf_dir]:
+        # pop with default: a concurrent clear_memos() may have already
+        # removed the key since the list() snapshot (ADVICE r10 — bare
+        # pop raced to KeyError).
+        value = _MEMO.pop(key, _UNBUILT)
+        if value is _UNBUILT:
             continue
-        keys = [
-            k for k in list(cache)
-            if sf_dir is None or (len(k) > 1 and k[1] == sf_dir)
-        ]
-        for k in keys:
-            # pop with default: a concurrent clear_memos() may have
-            # already removed the key between the list() snapshot and
-            # here (ADVICE r10 — bare pop raced to KeyError).
-            value = cache.pop(k, None)
-            if value is None:
-                continue
-            unpersist(value)
-            released += 1
+        unpersist(value)
+        released += 1
     return released
 
 

@@ -12,14 +12,13 @@ from __future__ import annotations
 
 import itertools
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from taxi_data_datapipeline_spark.functions.text import bpe_ish_tokens
 from taxi_data_datapipeline_spark.operators.asof import asof_join
-from taxi_data_datapipeline_spark.queries import load, register
+from taxi_data_datapipeline_spark.queries import load, register, shared
 
 # --- as-of join ---------------------------------------------------------------
 
@@ -351,7 +350,7 @@ _stream_counter = itertools.count()
 # output, the difference being 4x fewer state-store commits per batch.
 _STREAM_BYTES_PER_PARTITION = 32 * 1024 * 1024
 _STREAM_MIN_PARTITIONS = 4
-_STREAM_SESSION_CACHE: dict[tuple[str, int], SparkSession] = {}
+_STREAM_SESSION_CACHE: dict[tuple[SparkSession, int], SparkSession] = {}
 
 
 def _stream_session(
@@ -368,8 +367,11 @@ def _stream_session(
     total). Non-local sources (s3a://...) keep the caller's session
     untouched — there the store's split sizing governs and the safe
     default is the session's own configuration. Clones share the
-    SparkContext (same memos, same executors); memoized per derived
-    partition count with the registry's benign-race discipline."""
+    SparkContext (same executors). Memoized per (parent session, derived
+    partition count): the clone copies its parent's time zone, so a
+    clone made from one session must never serve another session's
+    drains. The memo holds no data blocks, so ``clear_memos`` leaves it
+    alone."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if env is not None:
         parts = max(1, int(env))
@@ -384,7 +386,7 @@ def _stream_session(
         )
     if int(spark.conf.get("spark.sql.shuffle.partitions")) == parts:
         return spark
-    key = (spark.sparkContext.applicationId, parts)
+    key = (spark, parts)
     cached = _STREAM_SESSION_CACHE.get(key)
     if cached is not None:
         return cached
@@ -2190,10 +2192,6 @@ e AS (
 """
 
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_EDGE_CACHE_LOCK = threading.Lock()
-
-
 def _copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (a < b) part co-purchase pairs WITH their order-support
     count: parts appearing in the same order. One groupBy collects each
@@ -2204,7 +2202,7 @@ def _copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     four for the equivalent self-join formulation, and the per-order
     bound k keeps the intermediate linear in the table.
 
-    The materialized pair-count table is memoized per (app, sf_dir) —
+    The materialized pair-count table is memoized per session —
     the triangle census, PageRank AND the support-thresholded community
     detection all derive their edge list from it with a map-side
     project/filter, and a shared graph is exactly what a production
@@ -2212,16 +2210,8 @@ def _copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized-CTE layer, same idea as the scan memo in queries.py).
     The build is localCheckpointed so each consumer's own multi-pass
     logic doesn't re-run the pair generation either."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # Build INSIDE the lock: five query families consume this table, and
-    # under the bench's threaded submission a check-then-build race would
-    # run the (expensive) pair generation once per concurrent consumer.
-    # Latecomers block until the first builder finishes, then reuse —
-    # exactly what they would have waited for anyway.
-    with _EDGE_CACHE_LOCK:
-        cached = _EDGE_CACHE.get(key)
-        if cached is not None:
-            return cached
+
+    def build() -> DataFrame:
         li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         baskets = li.groupBy("l_orderkey").agg(
             F.sort_array(F.collect_set("l_partkey")).alias("ps")
@@ -2230,15 +2220,15 @@ def _copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "flatten(transform(ps, (x, i) -> "
             "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS a, y AS b))))"
         )
-        counts = (
+        return (
             baskets.select(F.explode(pairs).alias("p"))
             .select("p.a", "p.b")
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("support"))
             .localCheckpoint(eager=True)
         )
-        _EDGE_CACHE[key] = counts
-        return counts
+
+    return shared(spark, sf_dir, "copurchase_pair_counts", build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,24 +27,19 @@ from taxi_data_datapipeline_spark.operators.dedup import (
     ranked_gram_index,
 )
 from taxi_data_datapipeline_spark.operators.skyline import skyline_2d
-from taxi_data_datapipeline_spark.queries import load, register
+from taxi_data_datapipeline_spark.queries import load, register, shared
 
-# Memoized df-ranked shingle index, one per (app, sf_dir): the shared
-# substrate of the prefix-filter family (setsim + containment both fold
-# it), localCheckpointed ONCE per session like the co-purchase pair
-# table in the graph/recommender family. Flat narrow rows — not the
+
+# Memoized df-ranked shingle index: the shared substrate of the
+# prefix-filter family (setsim + containment both fold it),
+# localCheckpointed ONCE per session. Flat narrow rows — not the
 # gram-ARRAY frame of the GC-cliff landmine.
-_GRAM_INDEX_CACHE: dict = {}
-
-
 def _shared_gram_index(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GRAM_INDEX_CACHE.get(key)
-    if cached is None:
+    def build():
         docs = load(spark, sf_dir, "documents", fan_out=True)
-        cached = ranked_gram_index(docs).localCheckpoint(eager=True)
-        _GRAM_INDEX_CACHE[key] = cached
-    return cached
+        return ranked_gram_index(docs).localCheckpoint(eager=True)
+
+    return shared(spark, sf_dir, "gram_index", build)
 
 _SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t != '')"
 _SQL_GRAMS = f"""

@@ -11,8 +11,6 @@ order.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -20,7 +18,7 @@ from taxi_data_datapipeline_spark.functions.text import (
     bpe_ish_tokens,
     quality_features,
 )
-from taxi_data_datapipeline_spark.queries import load, register
+from taxi_data_datapipeline_spark.queries import load, register, shared
 
 # Same tokenizer contracts as queries_advanced / queries_data.
 _SQL_SUBTOKS = (
@@ -4542,11 +4540,7 @@ WITH base AS (
 # decimal gradient sums). Each round is a full pass over lineitem that
 # materializes eagerly (localCheckpoint), so recomputing the chain in
 # calibration would double the training passes for bit-identical 1-row
-# results — memoize the (upd, beta) pairs per (app, sf_dir) exactly like
-# the co-purchase pair table. Thread-safe under the bench's concurrent
-# submission: a race computes the chain twice (deterministic integer
-# results, last write wins), never corrupts it.
-_LOGIT_CHAIN_CACHE: dict[tuple[str, str], list] = {}
+# results — memoize the (upd, beta) pairs per session.
 
 
 def _logit_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4569,44 +4563,43 @@ def _logit_z_p(beta_joined):
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def _logit_chain(spark: SparkSession, sf_dir: str, rounds: int = 2) -> list:
+def _logit_chain(spark: SparkSession, sf_dir: str, rounds: int) -> list:
     """[(upd, beta)] per training round; upd carries n_pred_pos + the
     integer gradient units, beta the post-update micro-unit weights."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LOGIT_CHAIN_CACHE.get(key)
-    if cached is not None and len(cached) >= rounds:
-        return cached[:rounds]
-    base = _logit_base(spark, sf_dir)
-    beta = spark.createDataFrame([(0, 0, 0)], "u0 bigint, u1 bigint, u2 bigint")
-    chain = []
-    dec = lambda c: F.round(c, 9).cast("decimal(28,12)")  # noqa: E731
-    for _k in range(rounds):
-        j = base.crossJoin(F.broadcast(beta))
-        p = _logit_z_p(j)
-        upd = j.agg(
-            F.sum((p >= 0.5).cast("bigint")).alias("n_pred_pos"),
-            F.floor(F.sum(dec(p - F.col("y"))) * 1000000)
-            .cast("bigint")
-            .alias("g0"),
-            F.floor(F.sum(dec((p - F.col("y")) * F.col("x1").cast("double"))) * 1000000)
-            .cast("bigint")
-            .alias("g1"),
-            F.floor(F.sum(dec((p - F.col("y")) * F.col("x2").cast("double"))) * 1000000)
-            .cast("bigint")
-            .alias("g2"),
-        ).localCheckpoint(eager=True)
-        beta = (
-            beta.crossJoin(F.broadcast(upd))
-            .select(
-                (F.col("u0") - F.expr(f"g0 DIV {_LOGIT_LR0}")).alias("u0"),
-                (F.col("u1") - F.expr(f"g1 DIV {_LOGIT_LRX}")).alias("u1"),
-                (F.col("u2") - F.expr(f"g2 DIV {_LOGIT_LRX}")).alias("u2"),
+
+    def build() -> list:
+        base = _logit_base(spark, sf_dir)
+        beta = spark.createDataFrame([(0, 0, 0)], "u0 bigint, u1 bigint, u2 bigint")
+        chain = []
+        dec = lambda c: F.round(c, 9).cast("decimal(28,12)")  # noqa: E731
+        for _k in range(rounds):
+            j = base.crossJoin(F.broadcast(beta))
+            p = _logit_z_p(j)
+            upd = j.agg(
+                F.sum((p >= 0.5).cast("bigint")).alias("n_pred_pos"),
+                F.floor(F.sum(dec(p - F.col("y"))) * 1000000)
+                .cast("bigint")
+                .alias("g0"),
+                F.floor(F.sum(dec((p - F.col("y")) * F.col("x1").cast("double"))) * 1000000)
+                .cast("bigint")
+                .alias("g1"),
+                F.floor(F.sum(dec((p - F.col("y")) * F.col("x2").cast("double"))) * 1000000)
+                .cast("bigint")
+                .alias("g2"),
+            ).localCheckpoint(eager=True)
+            beta = (
+                beta.crossJoin(F.broadcast(upd))
+                .select(
+                    (F.col("u0") - F.expr(f"g0 DIV {_LOGIT_LR0}")).alias("u0"),
+                    (F.col("u1") - F.expr(f"g1 DIV {_LOGIT_LRX}")).alias("u1"),
+                    (F.col("u2") - F.expr(f"g2 DIV {_LOGIT_LRX}")).alias("u2"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        chain.append((upd, beta))
-    _LOGIT_CHAIN_CACHE[key] = chain
-    return chain
+            chain.append((upd, beta))
+        return chain
+
+    return shared(spark, sf_dir, "logit_chain", build, rounds)
 
 
 @register("logistic_gd", _logit_oracle())
@@ -4634,7 +4627,7 @@ def q_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints; ROUND_NOTES landmine 18). At 100 TB each round is a
     single pass and the model state is 3 integers. Saturated sigmoids
     are IEEE-safe on both engines (exp overflow -> inf -> p -> {{0,1}}).
-    The trained chain is memoized per (app, sf_dir) and shared with
+    The trained chain is memoized per session and shared with
     `logistic_calibration` (_logit_chain).
     """
     rows = []
@@ -4824,16 +4817,12 @@ def q_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CF_EVAL_CACHE: dict = {}
-_CF_EVAL_LOCK = threading.Lock()  # import-time: lazy check-then-set races
-
-
 def _cf_eval_frames(spark: SparkSession, sf_dir: str):
     """Shared leave-last-order-out recommender-eval scaffolding for
     `cf_holdout_hitrate` and `cf_ndcg_at10` — the two metrics evaluate
     the SAME model on the SAME split, so the expensive part (candidate
-    generation + per-customer top-10) is built once per (app, sf) and
-    localCheckpointed, the co-purchase-pair-table convention.
+    generation + per-customer top-10) is built once per session and
+    localCheckpointed.
 
     Returns (holdout, topk, truth): holdout = (o_custkey, o_orderkey)
     of each held-out last order; topk = (o_custkey, cand, rk) top-10
@@ -4850,11 +4839,7 @@ def _cf_eval_frames(spark: SparkSession, sf_dir: str):
         _copurchase_pair_counts,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _CF_EVAL_LOCK:
-        cached = _CF_EVAL_CACHE.get(key)
-        if cached is not None:
-            return cached
+    def build():
         li = (
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_partkey")
@@ -4927,13 +4912,13 @@ def _cf_eval_frames(spark: SparkSession, sf_dir: str):
             .select("o_custkey", F.col("l_partkey").alias("item"))
             .distinct()
         )
-        result = (
+        return (
             holdout.localCheckpoint(eager=True),
             topk.localCheckpoint(eager=True),
             truth.localCheckpoint(eager=True),
         )
-        _CF_EVAL_CACHE[key] = result
-        return result
+
+    return shared(spark, sf_dir, "cf_eval_frames", build)
 
 
 # NDCG@10 discount weights as exact integers, computed ONCE driver-side

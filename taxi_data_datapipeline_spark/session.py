@@ -84,7 +84,11 @@ def get_spark(
     # extra_conf, which callers control programmatically).
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for pair in filter(None, env_conf.split(";")):
-        k, _, v = pair.partition("=")
+        k, eq, v = pair.partition("=")
+        if not eq:
+            raise ValueError(
+                f"SPARK_GRAFT_CONF entry {pair!r} is not of the form key=value"
+            )
         builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,4 +1,4 @@
-"""clear_memos(): the memo layer's cache-invalidation API.
+"""clear_memos() and the ``shared`` memo store behind it.
 
 The heavy shared builds (co-purchase pair table, LSH pairs, CF-eval
 frames, ...) localCheckpoint into the unified memory pool and stay
@@ -8,18 +8,28 @@ UNABLE_TO_ACQUIRE_MEMORY (observed live: the sf6 pair-table build OOMed
 under the sf3 memo's residency during the round-10 scale ladder).
 clear_memos() releases the blocks and the cache entries; subsequent
 consumers rebuild transparently with identical results.
+
+Every build goes through ``queries.shared``: one store keyed by
+(session object, sf_dir, name, *params), with a per-key lock so
+concurrent callers share one build.
 """
 
 from __future__ import annotations
 
-from taxi_data_datapipeline_spark.queries import QUERIES, clear_memos
-from taxi_data_datapipeline_spark import queries_advanced  # noqa: E402  (after the registry orchestrator — direct first import would cycle)
+import sys
+import threading
+
+import pytest
+
+from taxi_data_datapipeline_spark import queries
+from taxi_data_datapipeline_spark.queries import QUERIES, clear_memos, shared
+from taxi_data_datapipeline_spark import queries_advanced, queries_data  # noqa: E402  (after the registry orchestrator — direct first import would cycle)
 
 SF = "/root/testdata/sf0.001"
 
 
 def _edge_cache_keys():
-    return list(queries_advanced._EDGE_CACHE)
+    return [k for k in list(queries._MEMO) if k[2] == "copurchase_pair_counts"]
 
 
 def test_clear_memos_releases_and_rebuilds_identically(spark):
@@ -55,16 +65,80 @@ def test_clear_memos_tolerates_concurrent_pop(monkeypatch):
     """ADVICE r10: two racing clear_memos() calls — a pop of a key already
     removed between the list() snapshot and the pop must be skipped, not
     raise KeyError (and must not count as released)."""
-    from taxi_data_datapipeline_spark import queries_advanced
-
-    clear_memos()  # drain every real cache so only the shim has entries
+    clear_memos()  # drain the real store so only the shim has entries
 
     class RacingDict(dict):
         def pop(self, k, *default):
             dict.pop(self, k, None)  # the racing clear got here first
             return dict.pop(self, k, *default)
 
-    racing = RacingDict({("app", SF): object()})
-    monkeypatch.setattr(queries_advanced, "_EDGE_CACHE", racing)
+    racing = RacingDict({("session", SF, "probe"): object()})
+    monkeypatch.setattr(queries, "_MEMO", racing)
     assert clear_memos() == 0  # the pop lost the race: skipped, no KeyError
     assert not racing
+
+
+def test_concurrent_callers_share_one_build(spark, monkeypatch):
+    """Late callers wait on the key's lock for the first build instead
+    of running their own (this memo used to race benignly into
+    redundant builds)."""
+    clear_memos()
+    calls = []
+    real = queries_data.blocked_jaccard_pairs
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(queries_data, "blocked_jaccard_pairs", counting)
+    results = []
+    start = threading.Barrier(4)
+
+    def grab():
+        start.wait()
+        results.append(queries_data.blocked_pairs_cached(spark, SF))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        threads = [threading.Thread(target=grab) for _ in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert len(results) == 4 and all(r is results[0] for r in results)
+
+
+def test_failed_build_stores_nothing(spark):
+    def boom():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        shared(spark, SF, "failing_probe", boom)
+    assert not [k for k in list(queries._MEMO) if k[2] == "failing_probe"]
+
+    builds = []
+
+    def ok():
+        builds.append(1)
+        return "built"
+
+    assert shared(spark, SF, "failing_probe", ok) == "built"
+    assert shared(spark, SF, "failing_probe", ok) == "built"
+    assert len(builds) == 1
+    clear_memos()
+
+
+def test_clone_built_frame_never_served_to_parent(spark):
+    """Session clones share the applicationId; a frame built under one
+    is bound to it and must not be served to the parent."""
+    clone = spark.newSession()
+    from_clone = queries_advanced._copurchase_pair_counts(clone, SF)
+    from_parent = queries_advanced._copurchase_pair_counts(spark, SF)
+    assert from_clone.sparkSession is clone
+    assert from_parent.sparkSession is spark
+    clear_memos()

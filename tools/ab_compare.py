@@ -21,18 +21,21 @@ import tempfile
 
 
 def run_side(repo: str, names: list[str], tag: str) -> dict[str, float]:
-    out = tempfile.mktemp(suffix=f"_{tag}.json")
-    subprocess.run(
-        [sys.executable, os.path.join(repo, "tools", "warm_profile.py"), out]
-        + names,
-        cwd=repo,
-        check=True,
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
-    )
-    with open(out) as f:
-        rec = json.load(f)
-    os.unlink(out)
+    fd, out = tempfile.mkstemp(suffix=f"_{tag}.json")
+    os.close(fd)
+    try:
+        subprocess.run(
+            [sys.executable, os.path.join(repo, "tools", "warm_profile.py"), out]
+            + names,
+            cwd=repo,
+            check=True,
+            stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL,
+        )
+        with open(out) as f:
+            rec = json.load(f)
+    finally:
+        os.unlink(out)
     return {n: r["warm_min"] for n, r in rec["queries"].items()}
 
 
@@ -41,8 +44,11 @@ def main() -> None:
     names = sys.argv[4:]
     best_a: dict[str, float] = {}
     best_b: dict[str, float] = {}
+    sides = [("A", dir_a, best_a), ("B", dir_b, best_b)]
     for r in range(rounds):
-        for tag, repo, best in (("A", dir_a, best_a), ("B", dir_b, best_b)):
+        # Alternate which side runs first so load drift within a round
+        # does not always favour the same side.
+        for tag, repo, best in sides if r % 2 == 0 else sides[::-1]:
             got = run_side(repo, names, tag)
             for n, v in got.items():
                 best[n] = min(best.get(n, float("inf")), v)

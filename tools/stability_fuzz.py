@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from check_oracle import frame_hash  # noqa: E402
 
 import __spark_entry__ as e  # noqa: E402
+from taxi_data_datapipeline_spark.queries import clear_memos  # noqa: E402
 from taxi_data_datapipeline_spark.session import get_spark  # noqa: E402
 
 # (shuffle partitions, scan split size, AQE): vary the reduce-side
@@ -49,6 +50,9 @@ def main() -> None:
         hashes = []
         try:
             for parts, split, aqe in PARTITION_SETTINGS:
+                # A memo built under the previous setting would be served
+                # as-is, leaving the shared builds unfuzzed.
+                clear_memos()
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
                 spark.conf.set("spark.sql.files.maxPartitionBytes", split)
                 spark.conf.set("spark.sql.adaptive.enabled", aqe)
