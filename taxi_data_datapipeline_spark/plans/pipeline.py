@@ -1,11 +1,14 @@
 """Flagship pipeline runner: discover -> normalize -> pivot -> sink -> report.
 
 Re-expresses the reference's end-to-end ``main()`` (``pivot_all_files.py:
-366-554``) as ONE Spark job:
+366-554``) as one footer job per input file plus the pivot/write jobs:
 
 * file discovery + name filter + priority sort + max-files slice
   (reference ``pivot_all_files.py:399-409``) stay driver-side — they are
   metadata operations on a path list;
+* each file's footer schema is read once (one small Spark job per file,
+  run concurrently on a driver thread pool); the group scans and the
+  advisory schema check both reuse it;
 * the per-file process fan-out, per-batch partial aggregation, intermediate
   parquet materialization, and final combine (reference §3.1 steps 6-7)
   collapse into the single-shuffle ``hourly_pivot`` plan — Spark's task
@@ -30,11 +33,12 @@ from __future__ import annotations
 
 import json
 import time
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from taxi_data_datapipeline_spark.operators.pivot import HOUR_COLUMNS, row_total
 from taxi_data_datapipeline_spark.operators.pivot import pivot_counts
@@ -43,6 +47,7 @@ from taxi_data_datapipeline_spark.sources.paths import (
     discover_parquet_files,
     infer_taxi_type_from_path,
 )
+from taxi_data_datapipeline_spark.sources.schema_detect import resolve_trip_schema
 
 
 @dataclass
@@ -107,31 +112,28 @@ def select_input_files(config: PipelineConfig) -> list[str]:
 
 
 def run_schema_check(
-    spark: SparkSession, files: list[str], sample: int = 5
+    files: list[str], footers: Mapping[str, StructType | None], sample: int = 5
 ) -> dict[str, str | None]:
     """Advisory schema pre-flight (reference ``pivot_all_files.py:343-363``):
     resolve the first ``sample`` files' footer schemas and WARN about any
-    whose pickup-datetime column cannot be detected, before the run spends
-    cluster time. Advisory ONLY — per-file detection inside
+    whose pickup-datetime column cannot be detected, before the pivot
+    spends cluster time. Advisory ONLY — per-file detection inside
     ``normalize_trips`` remains authoritative (a warned file may still
     resolve via the first-batch sniff fallback, and an unsampled file may
     still fail and be skip-reported).
+
+    ``footers`` maps each file to its Spark footer schema, or None where
+    inference failed (``IngestReport.footers``): the check reads no footer
+    itself.
 
     Returns {file: detected_datetime_col_or_None} for the sampled files.
     """
     import warnings
 
-    from taxi_data_datapipeline_spark.sources.ingest import _footer_schema
-    from taxi_data_datapipeline_spark.sources.schema_detect import (
-        resolve_trip_schema,
-    )
-
     results: dict[str, str | None] = {}
     for f in files[:sample]:
-        try:
-            ts = resolve_trip_schema(_footer_schema(spark, f))
-        except Exception:
-            ts = None
+        footer = footers[f]
+        ts = resolve_trip_schema(footer) if footer is not None else None
         results[f] = ts.datetime_col if ts is not None else None
         if ts is None:
             warnings.warn(
@@ -254,9 +256,9 @@ def run_pivot_pipeline(
     """Execute the full pipeline; returns the observed run metrics."""
     t0 = time.time()
     files = select_input_files(config)
-    if config.schema_check:
-        run_schema_check(spark, files)
     trips, ingest_report = normalize_trips(spark, files, typed_place=True)
+    if config.schema_check:
+        run_schema_check(files, ingest_report.footers)
     types = sorted(
         {infer_taxi_type_from_path(f) for f in ingest_report.resolved}
     )

@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -148,16 +150,7 @@ def load(
     def build() -> DataFrame:
         nanos_cols = _NANOS_TS_COLS.get(table, [])
         if nanos_cols:
-            # get_spark sessions already carry this conf (session.py) so
-            # the set never fires there — but entry() may be handed a
-            # VANILLA session by the external driver, which would
-            # otherwise reject the TIMESTAMP(NANOS) column. Set-if-unset
-            # keeps that path working without mutating conf on every
-            # memoized load (thread-safety under multi-threaded bench
-            # submission).
-            conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-            if spark.conf.get(conf_key, "false") != "true":
-                spark.conf.set(conf_key, "true")
+            ensure_nanos_as_long(spark)
         path = f"{sf_dir}/{table}.parquet"
         df = spark.read.parquet(path)
         if fan_out:

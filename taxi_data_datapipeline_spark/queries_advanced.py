@@ -10,6 +10,7 @@ modules.
 
 from __future__ import annotations
 
+import glob
 import itertools
 import os
 
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 from taxi_data_datapipeline_spark.functions.text import bpe_ish_tokens
 from taxi_data_datapipeline_spark.operators.asof import asof_join
 from taxi_data_datapipeline_spark.queries import load, register, shared
+from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
 
 # --- as-of join ---------------------------------------------------------------
 
@@ -376,10 +378,12 @@ def _stream_session(
     if env is not None:
         parts = max(1, int(env))
     else:
-        try:
-            nbytes = os.path.getsize(f"{sf_dir}/{table}.parquet")
-        except OSError:
+        # Size from every file the stream source reads (its glob), not
+        # just the table's first file.
+        paths = glob.glob(f"{sf_dir}/{table}*.parquet")
+        if not paths:
             return spark
+        nbytes = sum(os.path.getsize(p) for p in paths)
         parts = min(
             max(_STREAM_MIN_PARTITIONS, -(-nbytes // _STREAM_BYTES_PER_PARTITION)),
             spark.sparkContext.defaultParallelism,
@@ -410,7 +414,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark 4 and is cast to the session-zoned TIMESTAMP that watermarks
     require. Glob form: the file-stream source needs a directory basePath,
     which it infers from the non-glob path prefix."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_nanos_as_long(spark)
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(schema)

@@ -1060,47 +1060,50 @@ def q_fasttext_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dec = lambda c: F.round(c, 9).cast("decimal(28,12)")  # noqa: E731
     out = None
-    for k in range(1, _FT_ROUNDS + 1):
-        j = feat.crossJoin(F.broadcast(beta))
-        z = F.col("u0")
-        for b in range(_FT_BUCKETS):
-            z = z + F.col(f"u{b + 1}") * F.col(f"x{b}")
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(z.cast("double") * F.lit(1e-6))))
-        pred = (p >= 0.5).cast("int")
-        upd = j.agg(
-            F.sum(pred.cast("bigint")).alias("n_pred_pos"),
-            F.sum((pred == F.col("y")).cast("bigint")).alias("n_correct"),
-            F.floor(F.sum(dec(p - F.col("y"))) * 1000000)
-            .cast("bigint")
-            .alias("g0"),
-            *[
-                F.floor(
-                    F.sum(dec((p - F.col("y")) * F.col(f"x{b}").cast("double")))
-                    * 1000000
-                )
+    try:
+        for k in range(1, _FT_ROUNDS + 1):
+            j = feat.crossJoin(F.broadcast(beta))
+            z = F.col("u0")
+            for b in range(_FT_BUCKETS):
+                z = z + F.col(f"u{b + 1}") * F.col(f"x{b}")
+            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(z.cast("double") * F.lit(1e-6))))
+            pred = (p >= 0.5).cast("int")
+            upd = j.agg(
+                F.sum(pred.cast("bigint")).alias("n_pred_pos"),
+                F.sum((pred == F.col("y")).cast("bigint")).alias("n_correct"),
+                F.floor(F.sum(dec(p - F.col("y"))) * 1000000)
                 .cast("bigint")
-                .alias(f"g{b + 1}")
-                for b in range(_FT_BUCKETS)
-            ],
-        ).localCheckpoint(eager=True)
-        beta = (
-            beta.crossJoin(F.broadcast(upd))
-            .select(
+                .alias("g0"),
                 *[
-                    (F.col(f"u{i}") - F.expr(f"g{i} DIV {_FT_LR}")).alias(f"u{i}")
-                    for i in range(_FT_BUCKETS + 1)
-                ]
+                    F.floor(
+                        F.sum(dec((p - F.col("y")) * F.col(f"x{b}").cast("double")))
+                        * 1000000
+                    )
+                    .cast("bigint")
+                    .alias(f"g{b + 1}")
+                    for b in range(_FT_BUCKETS)
+                ],
+            ).localCheckpoint(eager=True)
+            beta = (
+                beta.crossJoin(F.broadcast(upd))
+                .select(
+                    *[
+                        (F.col(f"u{i}") - F.expr(f"g{i} DIV {_FT_LR}")).alias(f"u{i}")
+                        for i in range(_FT_BUCKETS + 1)
+                    ]
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        row = upd.crossJoin(beta).select(
-            F.lit(k).alias("round"),
-            "n_pred_pos",
-            "n_correct",
-            *[F.col(f"u{i}") for i in range(_FT_BUCKETS + 1)],
-        )
-        out = row if out is None else out.unionAll(row)
-    # Every round's gradients are checkpointed above; the returned frame
-    # never touches feat again. Release the cache deterministically.
-    feat.unpersist()
+            row = upd.crossJoin(beta).select(
+                F.lit(k).alias("round"),
+                "n_pred_pos",
+                "n_correct",
+                *[F.col(f"u{i}") for i in range(_FT_BUCKETS + 1)],
+            )
+            out = row if out is None else out.unionAll(row)
+    finally:
+        # Every round's gradients are checkpointed above; the returned
+        # frame never touches feat again. Release the cache
+        # deterministically, also when a round's action raises.
+        feat.unpersist()
     return out

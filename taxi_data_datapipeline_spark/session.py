@@ -97,6 +97,19 @@ def get_spark(
     return spark
 
 
+def ensure_nanos_as_long(spark: SparkSession) -> None:
+    """Let ``spark`` read parquet TIMESTAMP(NANOS) columns as long.
+
+    get_spark sessions already carry this conf (above), so the set never
+    fires there — but a caller of ``entry()`` may pass a VANILLA session,
+    which would otherwise reject the column. Set-if-unset keeps that path
+    working without writing shared session conf on every read
+    (thread-safety under multi-threaded bench submission)."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    if spark.conf.get(key, "false") != "true":
+        spark.conf.set(key, "true")
+
+
 def configure_scan_partitions(spark: SparkSession, partition_size: str | int) -> int:
     """The reference's empirical batch-size optimizer (X1,
     ``partition_optimization.py:61-134``) reduced to what it actually

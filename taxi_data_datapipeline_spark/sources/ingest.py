@@ -7,10 +7,15 @@ Canonical trip schema (reference ``pivot_all_files.py:47-51``):
 
 Strategy (SURVEY §1.3): read each file's parquet *footer* schema driver-side
 (cheap, metadata only), resolve it with the fuzzy detector, group files whose
-resolution is identical, build ONE ``spark.read.parquet(*group)`` scan per
-group with a plain ``select`` projection, and ``unionByName`` the groups.
-Catalyst prunes each scan to exactly the projected columns and pushes the
-null filter down; the union is a no-shuffle narrow op.
+resolution is identical, build ONE ``spark.read.schema(...).parquet(*group)``
+scan per group with a plain ``select`` projection, and ``unionByName`` the
+groups. Catalyst prunes each scan to exactly the projected columns and pushes
+the null filter down; the union is a no-shuffle narrow op.
+
+Each footer is read ONCE per pass, with Spark's own inference: the group scan
+declares the detected columns' types from that footer instead of inferring
+the group again, and ``IngestReport.footers`` hands the same schemas to the
+pipeline's advisory schema check.
 
 This scales: for N files the driver does N footer reads (parallelizable, and
 identical-schema files collapse into one scan), while data never leaves the
@@ -25,9 +30,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from taxi_data_datapipeline_spark.functions.keys import latlon_place_key, place_key
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
+from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
 from taxi_data_datapipeline_spark.sources.paths import (
     infer_month_from_path,
     infer_taxi_type_from_path,
@@ -39,19 +46,42 @@ CANONICAL_COLUMNS = ["pickup_datetime", "pickup_place", "taxi_type", "file_year"
 
 @dataclass
 class IngestReport:
-    """Files that resolved vs were skipped (no detectable datetime column)."""
+    """Files that resolved vs were skipped (no detectable datetime column),
+    and every input file's footer schema as Spark inferred it (None where
+    inference failed)."""
 
     resolved: dict[str, TripSchema]
     skipped: list[str]
+    footers: dict[str, StructType | None]
 
 
-def _footer_schema(spark: SparkSession, path: str):
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
     # Footer-only read: Spark resolves the schema without scanning data pages.
     # nanosAsLong lets TIMESTAMP(NANOS) files (pandas/pyarrow default) resolve
     # as bigint instead of failing analysis; coerce_timestamp's magnitude
     # ladder then restores them to microsecond timestamps.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_nanos_as_long(spark)
     return spark.read.parquet(path).schema
+
+
+def read_footers(spark: SparkSession, files: list[str]) -> dict[str, StructType | None]:
+    """Every file's footer schema, None where Spark cannot infer one.
+
+    Footer reads are metadata-only but latency-bound (one round-trip per
+    file — significant against S3 with 10^4-10^5 files). They are
+    independent, so fetch them on a driver-side thread pool. A file whose
+    footer cannot be read (corrupt, truncated, not parquet, or rejected by
+    Spark's inference) maps to None, not a crash — reference behavior
+    ``pivot_all_files.py:204-216``."""
+
+    def safe_footer(f: str) -> StructType | None:
+        try:
+            return _footer_schema(spark, f)
+        except Exception:
+            return None
+
+    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as pool:
+        return dict(zip(files, pool.map(safe_footer, files)))
 
 
 def _sniff_first_batch(path: str):
@@ -72,22 +102,39 @@ def _sniff_first_batch(path: str):
         return None
 
 
-def _declared_schema_for(arrow_schema, ts: TripSchema):
+def _detected_columns(ts: TripSchema) -> list[str]:
+    return [c for c in (ts.datetime_col, ts.location_col, ts.lat_col, ts.lon_col) if c]
+
+
+def _pruned(footer: StructType, ts: TripSchema) -> StructType:
+    """The footer schema cut down to the detected columns: what a group scan
+    declares, so Spark does not infer the group's schema a second time."""
+    return StructType([footer[c] for c in _detected_columns(ts)])
+
+
+def _declared_schema_for(path: str, arrow_schema, ts: TripSchema) -> StructType:
     """Build a PRUNED declared Spark schema covering only the detected
     columns, so the scan never touches whatever column broke inference
     (landmine: a declared schema also survives footers Spark cannot infer
     from). ns timestamps are declared as LongType to match the session's
     nanosAsLong read path; coerce_timestamp's magnitude ladder restores
-    them."""
+    them. INT96 columns (Spark/Hive/Impala legacy timestamps) also read as
+    timestamp[ns] in arrow, but Spark reads them as TimestampType only, so
+    the parquet physical type decides."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField, TimestampType
 
-    needed = [c for c in (ts.datetime_col, ts.location_col, ts.lat_col, ts.lon_col) if c]
+    physical = pq.ParquetFile(path).schema
+    int96 = {physical.column(i).path for i in range(len(physical))
+             if physical.column(i).physical_type == "INT96"}
     fields = []
-    for name in needed:
+    for name in _detected_columns(ts):
         at = arrow_schema.field(name).type
-        if pa.types.is_timestamp(at) and at.unit == "ns":
+        if name in int96:
+            st = TimestampType()
+        elif pa.types.is_timestamp(at) and at.unit == "ns":
             st = LongType()
         else:
             st = from_arrow_type(at)
@@ -121,25 +168,10 @@ def normalize_trips(
     skipped: list[str] = []
     groups: dict[tuple, list[str]] = defaultdict(list)
 
-    # Footer reads are metadata-only but latency-bound (one round-trip per
-    # file — significant against S3 with 10^4-10^5 files). They are
-    # independent, so fetch them on a driver-side thread pool; order is
-    # restored by zipping back to `files`. A file whose footer cannot be
-    # read (corrupt, truncated, not parquet) is skipped with an error
-    # record, not a crash — reference behavior ``pivot_all_files.py:204-216``.
-    def safe_footer(f: str):
-        try:
-            return _footer_schema(spark, f)
-        except Exception:
-            return None
-
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as pool:
-        schemas = list(pool.map(safe_footer, files))
-
-    declared: dict[tuple, object] = {}
-    for f, schema in zip(files, schemas):
-        decl = None
-        if schema is None:
+    footers = read_footers(spark, files)
+    for f in files:
+        footer = footers[f]
+        if footer is None:
             # Footer-only resolution failed: reference fallback — sniff the
             # first <=1000-row batch with the secondary reader and, if the
             # canonical columns detect, scan with a PRUNED declared schema
@@ -149,49 +181,33 @@ def normalize_trips(
             ts = resolve_trip_schema(arrow_schema) if arrow_schema is not None else None
             if ts is not None:
                 try:
-                    decl = _declared_schema_for(arrow_schema, ts)
+                    decl = _declared_schema_for(f, arrow_schema, ts)
                 except Exception:
                     ts = None
-            schema = decl
         else:
-            ts = resolve_trip_schema(schema)
+            ts = resolve_trip_schema(footer)
+            if ts is not None:
+                decl = _pruned(footer, ts)
         if ts is None:
             skipped.append(f)
             continue
         resolved[f] = ts
         ttype = (taxi_types or {}).get(f) or infer_taxi_type_from_path(f)
         ym = infer_month_from_path(f)
-        dtype = schema[ts.datetime_col].dataType
-        # Files sharing (projection recipe, taxi type, year-month) share a scan.
-        # Sniff-fallback files additionally key on the FULL declared schema
-        # (every pruned field's name+type), not just a decl-present flag:
-        # two footer-hostile files whose detected columns and datetime type
-        # match but whose location/lat/lon physical types differ must NOT
-        # share one file's declared-schema scan (last-writer-wins on
-        # ``declared[key]`` would misread or fail the other file).
-        key = (
-            ts,
-            ttype,
-            ym,
-            dtype.simpleString(),
-            decl.simpleString() if decl is not None else None,
-        )
-        groups[key].append(f)
-        if decl is not None:
-            declared[key] = decl
+        # Files sharing (projection recipe, taxi type, year-month, declared
+        # schema) share a scan. The declared schema carries every detected
+        # column's type, so two files whose detected columns match but whose
+        # physical types differ (int64 vs string location ids, say) never
+        # share one scan that would misread or fail the other file.
+        groups[(ts, ttype, ym, decl)].append(f)
 
     typed_ok = typed_place and all(
         ts.place_mode == "location" for (ts, *_rest) in groups
     )
     parts: list[DataFrame] = []
-    for key, group_files in groups.items():
-        ts, ttype, ym = key[0], key[1], key[2]
-        decl = declared.get(key)
-        if decl is not None:
-            raw = spark.read.schema(decl).parquet(*group_files)
-        else:
-            raw = spark.read.parquet(*group_files)
-        dt_type = raw.schema[ts.datetime_col].dataType
+    for (ts, ttype, ym, decl), group_files in groups.items():
+        raw = spark.read.schema(decl).parquet(*group_files)
+        dt_type = decl[ts.datetime_col].dataType
         if ts.place_mode == "location":
             loc = F.col(ts.location_col)
             place = loc if typed_ok else place_key(loc)
@@ -216,9 +232,9 @@ def normalize_trips(
             "pickup_datetime timestamp, pickup_place string, taxi_type string, "
             "file_year int, file_month int",
         )
-        return empty, IngestReport(resolved, skipped)
+        return empty, IngestReport(resolved, skipped, footers)
 
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out, IngestReport(resolved, skipped)
+    return out, IngestReport(resolved, skipped, footers)

@@ -232,6 +232,38 @@ def test_sniff_fallback_reads_footer_hostile_file(spark, tmp_path):
     assert all(r.pickup_datetime is not None for r in rows)
 
 
+def test_sniff_fallback_reads_footer_hostile_int96_file(spark, tmp_path):
+    """A footer-hostile file whose timestamps are INT96 (Spark/Hive/Impala
+    legacy) reads as timestamp[ns] in arrow, like a TIMESTAMP(NANOS) column,
+    but Spark reads INT96 only as a timestamp. The sniff fallback declares
+    it as one, so the file is read (not failed, not skipped) and its
+    instants round-trip."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    micros = [1_675_240_200_000_000, 1_675_243_800_000_000, 1_675_247_400_000_000]
+    p = str(tmp_path / "yellow_tripdata_2023-02.parquet")
+    tbl = pa.table(
+        {
+            "tpep_pickup_datetime": pa.array(micros, pa.timestamp("us")),
+            "PULocationID": pa.array([132, 132, 7], pa.int64()),
+            "Extra": pa.array([1, 2, 3], pa.int64()),
+            "extra": pa.array([4, 5, 6], pa.int64()),
+        }
+    )
+    pq.write_table(tbl, p, use_deprecated_int96_timestamps=True)
+    assert pq.ParquetFile(p).schema.column(0).physical_type == "INT96"
+    with pytest.raises(Exception):
+        spark.read.parquet(p).schema  # noqa: B018
+
+    df, report = normalize_trips(spark, [p])
+    assert report.skipped == []
+    got = df.select(F.unix_micros("pickup_datetime").alias("us"), "pickup_place")
+    assert sorted((r.us, r.pickup_place) for r in got.collect()) == sorted(
+        zip(micros, ["132", "132", "7"])
+    )
+
+
 def test_sniff_fallback_groups_by_full_declared_schema(spark, tmp_path):
     """Two footer-hostile files whose DETECTED columns and datetime type
     match but whose location column differs physically (int64 vs string)

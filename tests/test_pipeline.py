@@ -269,6 +269,7 @@ def test_run_schema_check_warns_on_undetectable_file(spark, tmp_path):
     import warnings as _warnings
 
     from taxi_data_datapipeline_spark.plans.pipeline import run_schema_check
+    from taxi_data_datapipeline_spark.sources.ingest import read_footers
 
     good = spark.createDataFrame(
         [("2023-01-05 07:30:00", 1)],
@@ -282,9 +283,84 @@ def test_run_schema_check_warns_on_undetectable_file(spark, tmp_path):
 
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
-        res = run_schema_check(spark, [good_path, bad_path])
+        files = [good_path, bad_path]
+        res = run_schema_check(files, read_footers(spark, files))
     assert res[good_path] == "tpep_pickup_datetime"
     assert res[bad_path] is None
     msgs = [str(w.message) for w in caught]
     assert any("no pickup-datetime column" in m and bad_path in m for m in msgs)
     assert not any(good_path in m for m in msgs)  # advisory only for bad
+
+
+def _ungrouped_jobs(spark) -> set[int]:
+    """Ids of the jobs started without a job group. The footer reads run on
+    thread-pool threads, which carry no job group; waiting for the listener
+    bus makes every job started so far visible to the status tracker."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def _write_two_era_trips(base) -> list[str]:
+    """Four monthly yellow files: two in the current column naming, two in
+    the older trip-record naming."""
+    paths = []
+    for month, (ts_col, loc_col) in enumerate(
+        [("tpep_pickup_datetime", "PULocationID")] * 2
+        + [("Trip_Pickup_DateTime", "PU_Location_ID")] * 2,
+        start=1,
+    ):
+        ts = pd.Timestamp(f"2024-{month:02d}-03 10:00:00")
+        path = str(base / f"yellow_tripdata_2024-{month:02d}.parquet")
+        pq.write_table(
+            pa.table({ts_col: pa.array([ts] * 3, pa.timestamp("us")),
+                      loc_col: pa.array([5, 5, 9], pa.int32()),
+                      "fare_amount": pa.array([1.0, 2.0, 3.0])}),
+            path,
+        )
+        paths.append(path)
+    return paths
+
+
+def test_normalize_reads_each_footer_once(spark, tmp_path):
+    """normalize_trips starts one Spark job per input file (its footer
+    read): each group scan declares the schema that footer gave instead
+    of inferring the group's schema again."""
+    from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
+
+    files = _write_two_era_trips(tmp_path)
+    before = _ungrouped_jobs(spark)
+    trips, report = normalize_trips(spark, files, typed_place=True)
+    assert len(_ungrouped_jobs(spark) - before) == len(files)
+    assert set(report.footers) == set(files) == set(report.resolved)
+    assert trips.count() == 3 * len(files)
+
+
+def test_pipeline_schema_check_starts_no_jobs(spark, tmp_path, monkeypatch):
+    """run_pivot_pipeline answers its advisory schema check from the
+    footers normalize_trips already read: the check starts no Spark job,
+    and its {file: datetime column} result is the same."""
+    from taxi_data_datapipeline_spark.plans import pipeline
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    files = _write_two_era_trips(in_dir)
+    checks = []
+    real_check = pipeline.run_schema_check
+
+    def counted_check(*args, **kwargs):
+        before = _ungrouped_jobs(spark)
+        result = real_check(*args, **kwargs)
+        checks.append((result, len(_ungrouped_jobs(spark) - before)))
+        return result
+
+    monkeypatch.setattr(pipeline, "run_schema_check", counted_check)
+    cfg = PipelineConfig(input_path=str(in_dir), output_path=str(tmp_path / "out"),
+                         min_rides=1, name_filter="tripdata")
+    metrics = run_pivot_pipeline(spark, cfg)
+    assert metrics.files_processed == len(files)
+    assert metrics.input_rows == 3 * len(files)
+    [(result, jobs)] = checks
+    assert jobs == 0
+    assert result == {f: ("tpep_pickup_datetime" if i < 2 else "Trip_Pickup_DateTime")
+                      for i, f in enumerate(sorted(files))}

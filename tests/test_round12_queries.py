@@ -195,6 +195,22 @@ class TestFasttextClassifier:
         # the round-1 update must actually move some weight
         assert any(rows[1][f"u{i}"] != 0 for i in range(17))
 
+    def test_feature_cache_released_when_a_round_raises(self, spark, monkeypatch):
+        """The persisted feature table is released on the error path too:
+        a round whose action fails (after its aggregate has read, and so
+        cached, the features) leaves no persisted RDD behind."""
+
+        def failing_checkpoint(self, *args, **kwargs):
+            self.collect()  # the round's aggregate runs and fills the cache
+            raise RuntimeError("round failed")
+
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", failing_checkpoint)
+        with pytest.raises(RuntimeError, match="round failed"):
+            QUERIES["fasttext_hash_classifier"](spark, SF)
+        assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
 
 class TestTokenizerFertility:
     def test_char_budget_dominates_subtokens(self, spark):

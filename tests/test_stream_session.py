@@ -41,6 +41,23 @@ def test_clone_gets_size_derived_partitions(spark):
     assert sess.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
 
 
+def test_partitions_sized_from_every_source_file(spark, tmp_path, monkeypatch):
+    """The stream source reads the events*.parquet glob, so the partition
+    count is sized from all of it: two files that each fit one partition's
+    bytes but together cross _STREAM_BYTES_PER_PARTITION get two
+    partitions. The files are sparse: sizing reads only their lengths."""
+    from taxi_data_datapipeline_spark import queries_advanced
+
+    monkeypatch.setattr(queries_advanced, "_STREAM_MIN_PARTITIONS", 1)
+    size = _STREAM_BYTES_PER_PARTITION * 3 // 4
+    for name in ("events.parquet", "events_late.parquet"):
+        with open(tmp_path / name, "wb") as fh:
+            fh.truncate(size)
+    sess = _stream_session(spark, str(tmp_path))
+    expect = min(2, spark.sparkContext.defaultParallelism)
+    assert int(sess.conf.get("spark.sql.shuffle.partitions")) == expect
+
+
 def test_clone_is_memoized_per_partition_count(spark):
     assert _stream_session(spark, SF) is _stream_session(spark, SF)
 
