@@ -1,14 +1,14 @@
 """Flagship pipeline runner: discover -> normalize -> pivot -> sink -> report.
 
 Re-expresses the reference's end-to-end ``main()`` (``pivot_all_files.py:
-366-554``) as one footer job per input file plus the pivot/write jobs:
+366-554``) as footers read driver-side with pyarrow, no Spark job, plus the
+pivot/write jobs:
 
 * file discovery + name filter + priority sort + max-files slice
   (reference ``pivot_all_files.py:399-409``) stay driver-side — they are
   metadata operations on a path list;
-* each file's footer schema is read once (one small Spark job per file,
-  run concurrently on a driver thread pool); the group scans and the
-  advisory schema check both reuse it;
+* each file's footer schema is read once, driver-side with pyarrow; the
+  group scans and the advisory schema check both reuse it;
 * the per-file process fan-out, per-batch partial aggregation, intermediate
   parquet materialization, and final combine (reference §3.1 steps 6-7)
   collapse into the single-shuffle ``hourly_pivot`` plan — Spark's task
@@ -36,9 +36,9 @@ import time
 from collections.abc import Mapping, Sequence
 from dataclasses import asdict, dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from taxi_data_datapipeline_spark.operators.pivot import HOUR_COLUMNS, row_total
 from taxi_data_datapipeline_spark.operators.pivot import pivot_counts
@@ -112,19 +112,18 @@ def select_input_files(config: PipelineConfig) -> list[str]:
 
 
 def run_schema_check(
-    files: list[str], footers: Mapping[str, StructType | None], sample: int = 5
+    files: list[str], footers: Mapping[str, pa.Schema | None], sample: int = 5
 ) -> dict[str, str | None]:
     """Advisory schema pre-flight (reference ``pivot_all_files.py:343-363``):
     resolve the first ``sample`` files' footer schemas and WARN about any
     whose pickup-datetime column cannot be detected, before the pivot
-    spends cluster time. Advisory ONLY — per-file detection inside
-    ``normalize_trips`` remains authoritative (a warned file may still
-    resolve via the first-batch sniff fallback, and an unsampled file may
-    still fail and be skip-reported).
+    spends cluster time. Advisory ONLY: a warned file is one
+    ``normalize_trips`` skips, and an unsampled file may still fail and be
+    skip-reported.
 
-    ``footers`` maps each file to its Spark footer schema, or None where
-    inference failed (``IngestReport.footers``): the check reads no footer
-    itself.
+    ``footers`` maps each file to its pyarrow footer schema, or None where
+    the footer could not be read (``IngestReport.footers``): the check
+    reads no footer itself.
 
     Returns {file: detected_datetime_col_or_None} for the sampled files.
     """
@@ -138,8 +137,7 @@ def run_schema_check(
         if ts is None:
             warnings.warn(
                 f"schema check: no pickup-datetime column detected in {f} "
-                "(file will be retried with the first-batch sniff at ingest, "
-                "then skipped if still undetectable)",
+                "(file will be skipped at ingest)",
                 stacklevel=2,
             )
     return results

@@ -12,25 +12,35 @@ scan per group with a plain ``select`` projection, and ``unionByName`` the
 groups. Catalyst prunes each scan to exactly the projected columns and pushes
 the null filter down; the union is a no-shuffle narrow op.
 
-Each footer is read ONCE per pass, with Spark's own inference: the group scan
-declares the detected columns' types from that footer instead of inferring
-the group again, and ``IngestReport.footers`` hands the same schemas to the
-pipeline's advisory schema check.
+Each footer is read ONCE per pass, driver-side with pyarrow and no Spark
+job: the group scan declares the detected columns' types from that footer,
+so Spark neither infers the file's schema nor touches any other column, and
+``IngestReport.footers`` hands the same schemas to the pipeline's advisory
+schema check.
 
-This scales: for N files the driver does N footer reads (parallelizable, and
-identical-schema files collapse into one scan), while data never leaves the
-executors.
+This scales: for N files the driver does N footer reads (identical-schema
+files collapse into one scan), while data never leaves the executors.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import (
+    DecimalType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructField,
+    StructType,
+)
 
 from taxi_data_datapipeline_spark.functions.keys import latlon_place_key, place_key
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
@@ -47,112 +57,84 @@ CANONICAL_COLUMNS = ["pickup_datetime", "pickup_place", "taxi_type", "file_year"
 @dataclass
 class IngestReport:
     """Files that resolved vs were skipped (no detectable datetime column),
-    and every input file's footer schema as Spark inferred it (None where
-    inference failed)."""
+    and every input file's footer schema as pyarrow reads it (None where
+    the footer could not be read)."""
 
     resolved: dict[str, TripSchema]
     skipped: list[str]
-    footers: dict[str, StructType | None]
+    footers: dict[str, pa.Schema | None]
 
 
-def _footer_schema(spark: SparkSession, path: str) -> StructType:
-    # Footer-only read: Spark resolves the schema without scanning data pages.
-    # nanosAsLong lets TIMESTAMP(NANOS) files (pandas/pyarrow default) resolve
-    # as bigint instead of failing analysis; coerce_timestamp's magnitude
-    # ladder then restores them to microsecond timestamps.
-    ensure_nanos_as_long(spark)
-    return spark.read.parquet(path).schema
+# INT96 (Spark/Hive/Impala legacy timestamps) surfaces as timestamp[us], the
+# type Spark reads it as, instead of the timestamp[ns] arrow defaults to.
+_FOOTER_FORMAT = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
 
 
-def read_footers(spark: SparkSession, files: list[str]) -> dict[str, StructType | None]:
-    """Every file's footer schema, None where Spark cannot infer one.
-
-    Footer reads are metadata-only but latency-bound (one round-trip per
-    file — significant against S3 with 10^4-10^5 files). They are
-    independent, so fetch them on a driver-side thread pool. A file whose
-    footer cannot be read (corrupt, truncated, not parquet, or rejected by
-    Spark's inference) maps to None, not a crash — reference behavior
+def read_footers(files: list[str]) -> dict[str, pa.Schema | None]:
+    """Every file's footer schema, read driver-side with pyarrow (metadata
+    only, no Spark job). A path may be one file or a Spark-written
+    directory of part files. A file whose footer cannot be read (corrupt,
+    truncated, not parquet) maps to None, not a crash — reference behavior
     ``pivot_all_files.py:204-216``."""
-
-    def safe_footer(f: str) -> StructType | None:
+    footers: dict[str, pa.Schema | None] = {}
+    for f in files:
         try:
-            return _footer_schema(spark, f)
-        except Exception:
-            return None
-
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as pool:
-        return dict(zip(files, pool.map(safe_footer, files)))
-
-
-def _sniff_first_batch(path: str):
-    """First-batch schema sniff — the reference's fallback when footer-only
-    detection fails (``pivot_all_files.py:196-202``): open the file with the
-    SECONDARY reader (pyarrow) and read one <=1000-row batch; its schema
-    feeds the same duck-typed detector. Catches files Spark's inference
-    rejects but whose needed columns are perfectly readable — e.g. a footer
-    with case-duplicate column names (COLUMN_ALREADY_EXISTS) or an exotic
-    unrelated column. Returns the arrow schema, or None."""
-    try:
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(path)
-        batch = next(pf.iter_batches(batch_size=1000))
-        return batch.schema
-    except Exception:
-        return None
+            footers[f] = ds.dataset(f, format=_FOOTER_FORMAT).schema
+        except (OSError, pa.ArrowException):
+            footers[f] = None
+    return footers
 
 
 def _detected_columns(ts: TripSchema) -> list[str]:
     return [c for c in (ts.datetime_col, ts.location_col, ts.lat_col, ts.lon_col) if c]
 
 
-def _pruned(footer: StructType, ts: TripSchema) -> StructType:
-    """The footer schema cut down to the detected columns: what a group scan
-    declares, so Spark does not infer the group's schema a second time."""
-    return StructType([footer[c] for c in _detected_columns(ts)])
+# Spark's parquet reader widens unsigned ints to the next signed type that
+# holds every value; from_arrow_type rejects them.
+_UNSIGNED = {
+    pa.uint8(): ShortType(),
+    pa.uint16(): IntegerType(),
+    pa.uint32(): LongType(),
+    pa.uint64(): DecimalType(20, 0),
+}
 
 
-def _declared_schema_for(path: str, arrow_schema, ts: TripSchema) -> StructType:
-    """Build a PRUNED declared Spark schema covering only the detected
-    columns, so the scan never touches whatever column broke inference
-    (landmine: a declared schema also survives footers Spark cannot infer
-    from). ns timestamps are declared as LongType to match the session's
-    nanosAsLong read path; coerce_timestamp's magnitude ladder restores
-    them. INT96 columns (Spark/Hive/Impala legacy timestamps) also read as
-    timestamp[ns] in arrow, but Spark reads them as TimestampType only, so
-    the parquet physical type decides."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import LongType, StructField, TimestampType
+def _spark_type(at: pa.DataType):
+    if pa.types.is_timestamp(at) and at.unit == "ns":
+        # Read as bigint under nanosAsLong; coerce_timestamp restores it.
+        return LongType()
+    return _UNSIGNED.get(at) or from_arrow_type(at)
 
-    physical = pq.ParquetFile(path).schema
-    int96 = {physical.column(i).path for i in range(len(physical))
-             if physical.column(i).physical_type == "INT96"}
-    fields = []
-    for name in _detected_columns(ts):
-        at = arrow_schema.field(name).type
-        if name in int96:
-            st = TimestampType()
-        elif pa.types.is_timestamp(at) and at.unit == "ns":
-            st = LongType()
-        else:
-            st = from_arrow_type(at)
-        fields.append(StructField(name, st))
-    return StructType(fields)
+
+def _declared_schema(footer: pa.Schema, ts: TripSchema) -> StructType | None:
+    """The Spark schema a group scan declares: only the detected columns, so
+    the scan never touches any other column (a case-duplicate name, say,
+    which Spark's own inference rejects). None where a detected column is
+    ambiguous (a duplicate name) or of a type Spark cannot read."""
+    try:
+        return StructType(
+            [StructField(c, _spark_type(footer.field(c).type)) for c in _detected_columns(ts)]
+        )
+    except (KeyError, PySparkTypeError):
+        return None
 
 
 def normalize_trips(
     spark: SparkSession,
     files: list[str],
-    taxi_types: dict[str, str] | None = None,
     typed_place: bool = False,
 ) -> tuple[DataFrame, IngestReport]:
     """Resolve every file's schema and return one canonical trips DataFrame.
 
-    ``taxi_types`` optionally overrides the per-file path inference.
-    Files with no detectable datetime column are skipped (reported, not
-    fatal) — reference behavior ``pivot_all_files.py:204-216``.
+    Each file's schema comes from its parquet footer, read driver-side with
+    pyarrow; the only Spark work is the group scans, which start no job
+    until an action runs. Discovery is local-only (``discover_parquet_files``
+    raises for S3 URIs), so every file the pipeline hands in is one pyarrow
+    can open. The taxi type comes from the path. Files with no detectable
+    datetime column, or whose footer cannot be read, are skipped (reported,
+    not fatal) — reference behavior ``pivot_all_files.py:204-216``.
 
     ``typed_place=True`` keeps location-id place keys in their NATIVE
     numeric type instead of the canonical string: hashing/comparing a
@@ -168,39 +150,24 @@ def normalize_trips(
     skipped: list[str] = []
     groups: dict[tuple, list[str]] = defaultdict(list)
 
-    footers = read_footers(spark, files)
+    footers = read_footers(files)
     for f in files:
         footer = footers[f]
-        if footer is None:
-            # Footer-only resolution failed: reference fallback — sniff the
-            # first <=1000-row batch with the secondary reader and, if the
-            # canonical columns detect, scan with a PRUNED declared schema
-            # (only the detected columns, so the scan never touches the
-            # column that broke inference).
-            arrow_schema = _sniff_first_batch(f)
-            ts = resolve_trip_schema(arrow_schema) if arrow_schema is not None else None
-            if ts is not None:
-                try:
-                    decl = _declared_schema_for(f, arrow_schema, ts)
-                except Exception:
-                    ts = None
-        else:
-            ts = resolve_trip_schema(footer)
-            if ts is not None:
-                decl = _pruned(footer, ts)
-        if ts is None:
+        ts = resolve_trip_schema(footer) if footer is not None else None
+        decl = _declared_schema(footer, ts) if ts is not None else None
+        if decl is None:
             skipped.append(f)
             continue
         resolved[f] = ts
-        ttype = (taxi_types or {}).get(f) or infer_taxi_type_from_path(f)
         ym = infer_month_from_path(f)
         # Files sharing (projection recipe, taxi type, year-month, declared
         # schema) share a scan. The declared schema carries every detected
         # column's type, so two files whose detected columns match but whose
         # physical types differ (int64 vs string location ids, say) never
         # share one scan that would misread or fail the other file.
-        groups[(ts, ttype, ym, decl)].append(f)
+        groups[(ts, infer_taxi_type_from_path(f), ym, decl)].append(f)
 
+    ensure_nanos_as_long(spark)
     typed_ok = typed_place and all(
         ts.place_mode == "location" for (ts, *_rest) in groups
     )

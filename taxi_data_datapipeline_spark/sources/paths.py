@@ -61,6 +61,8 @@ def parse_size(size: str | int | float) -> int:
 def discover_parquet_files(input_path: str, pattern: str = "*.parquet") -> list[str]:
     """Recursively list parquet files under a local directory, sorted.
 
+    Only regular files are listed: a Spark-written dataset directory named
+    ``x.parquet`` contributes its ``part-*.parquet`` files, not itself too.
     For object stores pass the ``s3a://`` URI straight to ``spark.read``
     (Hadoop FS handles listing); driver-side S3 listing is deliberately not
     reimplemented here. A single file path is returned as-is.
@@ -73,7 +75,9 @@ def discover_parquet_files(input_path: str, pattern: str = "*.parquet") -> list[
     if os.path.isfile(input_path):
         return [input_path]
     return sorted(
-        glob.glob(os.path.join(input_path, "**", pattern), recursive=True)
+        p
+        for p in glob.glob(os.path.join(input_path, "**", pattern), recursive=True)
+        if os.path.isfile(p)
     )
 
 

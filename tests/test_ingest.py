@@ -8,9 +8,11 @@ normalize_trips + hourly_pivot.
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
 from taxi_data_datapipeline_spark.operators.pivot import hourly_pivot
@@ -198,9 +200,9 @@ def test_sniff_fallback_reads_footer_hostile_file(spark, tmp_path):
     """Reference pivot_all_files.py:196-202 analog: a file whose footer
     Spark's inference REJECTS (case-duplicate column names ->
     COLUMN_ALREADY_EXISTS) but whose canonical columns are perfectly
-    readable. Footer-only resolution must fall back to the pyarrow
-    first-batch sniff and scan with a pruned declared schema; the skip
-    list stays empty."""
+    readable. The pyarrow footer resolves it, and the scan declares only
+    the detected columns, so Spark never infers the file's schema; the
+    skip list stays empty."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -235,9 +237,9 @@ def test_sniff_fallback_reads_footer_hostile_file(spark, tmp_path):
 def test_sniff_fallback_reads_footer_hostile_int96_file(spark, tmp_path):
     """A footer-hostile file whose timestamps are INT96 (Spark/Hive/Impala
     legacy) reads as timestamp[ns] in arrow, like a TIMESTAMP(NANOS) column,
-    but Spark reads INT96 only as a timestamp. The sniff fallback declares
-    it as one, so the file is read (not failed, not skipped) and its
-    instants round-trip."""
+    but Spark reads INT96 only as a timestamp. The footer reader surfaces
+    it as timestamp[us] and the scan declares it as a timestamp, so the
+    file is read (not failed, not skipped) and its instants round-trip."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -300,3 +302,63 @@ def test_sniff_fallback_groups_by_full_declared_schema(spark, tmp_path):
     rows = df.collect()
     assert len(rows) == 4
     assert {r.pickup_place for r in rows} == {"132", "7", "214", "88"}
+
+
+_MICROS = [1_675_240_200_000_000, 1_675_243_800_000_000, 1_675_247_400_000_000]
+
+
+def _write_typed_case(spark, path, case):
+    """One three-row yellow file whose datetime or location column has a
+    type the footer-to-Spark mapping handles by hand. Returns the expected
+    pickup_place values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = pa.array(_MICROS, pa.timestamp("us", tz="UTC"))
+    if case == "int96_spark":
+        ids = [132, 132, 7]
+        rows = [(datetime.datetime.fromtimestamp(m / 1e6, datetime.timezone.utc), i)
+                for m, i in zip(_MICROS, ids)]
+        spark.createDataFrame(
+            rows, "tpep_pickup_datetime timestamp, PULocationID int"
+        ).coalesce(1).write.parquet(path)
+        part = next(f for f in os.listdir(path) if f.endswith(".parquet"))
+        # precondition: Spark's default timestamp output really is INT96
+        assert pq.ParquetFile(os.path.join(path, part)).schema.column(0).physical_type == "INT96"
+        return ids
+    if case == "timestamp_us_ntz":
+        ts, ids = pa.array(_MICROS, pa.timestamp("us")), pa.array([132, 132, 7], pa.int64())
+    elif case == "dictionary":
+        ids = pa.array(["132", "132", "7"]).dictionary_encode()
+    else:  # unsigned location ids, up to the type's maximum
+        width = {"uint8": 8, "uint32": 32, "uint64": 64}[case]
+        ids = pa.array([132, 2**width - 1, 7], getattr(pa, case)())
+    pq.write_table(pa.table({"tpep_pickup_datetime": ts, "PULocationID": ids}), path)
+    return ids.to_pylist()
+
+
+@pytest.mark.parametrize(
+    "case, place_type",
+    [
+        ("uint8", T.ShortType()),
+        ("uint32", T.LongType()),
+        ("uint64", T.DecimalType(20, 0)),
+        ("timestamp_us_ntz", T.LongType()),
+        ("int96_spark", T.IntegerType()),
+        ("dictionary", T.StringType()),
+    ],
+)
+def test_footer_types_resolve_like_spark_inference(spark, tmp_path, case, place_type):
+    """Each file resolves, and keeps the location id type Spark's own
+    parquet reader gives it (unsigned ints widen to the next signed type,
+    uint64 to decimal(20,0)), with every instant intact."""
+    p = str(tmp_path / "yellow_tripdata_2023-02.parquet")
+    ids = _write_typed_case(spark, p, case)
+
+    df, report = normalize_trips(spark, [p], typed_place=True)
+    assert report.skipped == [] and p in report.resolved
+    assert df.schema["pickup_place"].dataType == place_type
+    got = df.select(F.unix_micros("pickup_datetime").alias("us"), "pickup_place")
+    assert sorted((r.us, str(r.pickup_place)) for r in got.collect()) == sorted(
+        zip(_MICROS, map(str, ids))
+    )

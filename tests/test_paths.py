@@ -59,9 +59,13 @@ def test_parse_size():
 
 def test_discover_parquet_files(tmp_path):
     (tmp_path / "sub").mkdir()
-    for name in ["b.parquet", "a.parquet", "sub/c.parquet", "notes.txt"]:
+    # A Spark-written dataset: a directory named like a file, holding parts.
+    (tmp_path / "d.parquet").mkdir()
+    for name in ["b.parquet", "a.parquet", "sub/c.parquet", "notes.txt",
+                 "d.parquet/part-00000.parquet", "d.parquet/_SUCCESS"]:
         (tmp_path / name).write_bytes(b"")
     found = discover_parquet_files(str(tmp_path))
-    assert [f.rsplit("/", 1)[-1] for f in found] == ["a.parquet", "b.parquet", "c.parquet"]
+    assert [f.rsplit("/", 1)[-1] for f in found] == [
+        "a.parquet", "b.parquet", "part-00000.parquet", "c.parquet"]
     single = discover_parquet_files(str(tmp_path / "a.parquet"))
     assert len(single) == 1

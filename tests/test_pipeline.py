@@ -284,7 +284,7 @@ def test_run_schema_check_warns_on_undetectable_file(spark, tmp_path):
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
         files = [good_path, bad_path]
-        res = run_schema_check(files, read_footers(spark, files))
+        res = run_schema_check(files, read_footers(files))
     assert res[good_path] == "tpep_pickup_datetime"
     assert res[bad_path] is None
     msgs = [str(w.message) for w in caught]
@@ -293,9 +293,9 @@ def test_run_schema_check_warns_on_undetectable_file(spark, tmp_path):
 
 
 def _ungrouped_jobs(spark) -> set[int]:
-    """Ids of the jobs started without a job group. The footer reads run on
-    thread-pool threads, which carry no job group; waiting for the listener
-    bus makes every job started so far visible to the status tracker."""
+    """Ids of the jobs started without a job group (the test thread sets
+    none); waiting for the listener bus makes every job started so far
+    visible to the status tracker."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return set(sc.statusTracker().getJobIdsForGroup(None))
@@ -323,15 +323,15 @@ def _write_two_era_trips(base) -> list[str]:
 
 
 def test_normalize_reads_each_footer_once(spark, tmp_path):
-    """normalize_trips starts one Spark job per input file (its footer
-    read): each group scan declares the schema that footer gave instead
-    of inferring the group's schema again."""
+    """normalize_trips starts no Spark job: each footer is read once,
+    driver-side with pyarrow, and each group scan declares the schema
+    that footer gave instead of having Spark infer it."""
     from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
 
     files = _write_two_era_trips(tmp_path)
     before = _ungrouped_jobs(spark)
     trips, report = normalize_trips(spark, files, typed_place=True)
-    assert len(_ungrouped_jobs(spark) - before) == len(files)
+    assert len(_ungrouped_jobs(spark) - before) == 0
     assert set(report.footers) == set(files) == set(report.resolved)
     assert trips.count() == 3 * len(files)
 
