@@ -6,10 +6,10 @@ Canonical trip schema (reference ``pivot_all_files.py:47-51``):
     plus path-derived audit columns file_year / file_month (nullable ints).
 
 Strategy (SURVEY §1.3): read each file's parquet *footer* schema driver-side
-(cheap, metadata only), resolve it with the fuzzy detector, group files whose
-resolution is identical, build ONE ``spark.read.schema(...).parquet(*group)``
-scan per group with a plain ``select`` projection, and ``unionByName`` the
-groups. Catalyst prunes each scan to exactly the projected columns and pushes
+(cheap, metadata only), resolve it with the fuzzy detector, group files that
+share a resolution, taxi type, year-month and declared schema, build ONE
+``spark.read.schema(...).parquet(*group)`` scan per group with a plain
+``select`` projection, and ``unionByName`` the groups. Catalyst prunes each scan to exactly the projected columns and pushes
 the null filter down; the union is a no-shuffle narrow op.
 
 Each footer is read ONCE per pass, driver-side with pyarrow and no Spark
@@ -18,8 +18,10 @@ so Spark neither infers the file's schema nor touches any other column, and
 ``IngestReport.footers`` hands the same schemas to the pipeline's advisory
 schema check.
 
-This scales: for N files the driver does N footer reads (identical-schema
-files collapse into one scan), while data never leaves the executors.
+For N files the driver does N footer reads, while data never leaves the
+executors. Taxi type and year-month come from each file's path and are part
+of the group key, so each monthly file gets its own scan today; the cost of
+that grows with the file count, not the row count.
 """
 
 from __future__ import annotations

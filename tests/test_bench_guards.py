@@ -1,284 +1,41 @@
-"""Pins for bench.py's reporting guards (no Spark needed).
+"""Pins for bench.py's convergence rule (no Spark needed).
 
-1. probe_verdict: the published JSON must self-label contention so a
-   reader never recomputes the convergence gate's thresholds from the raw
-   probe arrays (VERDICT r8 wrong #2 — the r8 artifact was produced at
-   loadavg 29-32 and nothing in the JSON said so explicitly).
-2. snapshot_path: a slower rerun must never clobber a round's committed
-   record detail (ADVICE r8 medium — a 132.5 s degraded-host rerun
-   overwrote the 72.5 s r8 record snapshot, destroying the per-query
-   detail behind the published record).
+bench.py stops taking passes once the two fastest walls agree within 10%
+and the fastest pass lost less than perfbench's QUIET_STEAL_SHARE of the
+machine's CPU to hypervisor steal: two passes that lost the same CPU also
+agree, so agreement alone does not show the minimum is reproduced.
 """
 
 from __future__ import annotations
 
-import json
-import sys
 import os
+import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import probe_verdict_for, round_best_wall, snapshot_path
+from bench import converged
+from perfbench.run import CPUS
 
 
-class TestProbeVerdict:
-    def test_quiet_host(self):
-        # Fastest pass bracketed by ~10 ms single / ~13 ms parallel probes.
-        assert probe_verdict_for(
-            [80.0, 72.5], [10.5, 10.8, 10.2, 10.6], [13.0, 13.5, 12.8, 13.1]
-        ) == "QUIET"
-
-    def test_degraded_multicore_is_noisy(self):
-        # Healthy single probes, 3x-degraded parallel probes — the r8
-        # regime the lone-thread probe was blind to.
-        assert probe_verdict_for(
-            [80.0, 72.5], [10.5, 10.8, 10.2, 10.6], [30.0, 33.5, 31.8, 35.1]
-        ) == "NOISY"
-
-    def test_slow_single_probe_is_noisy(self):
-        assert probe_verdict_for(
-            [72.5], [15.0, 16.0], [18.0, 19.0]
-        ) == "NOISY"
-
-    def test_fastest_pass_on_quiet_bracket_wins(self):
-        # Pass 0 contended, pass 1 quiet and fastest: verdict follows the
-        # REPORTED pass, not the worst pass.
-        assert probe_verdict_for(
-            [130.0, 72.5], [11.0, 30.0, 10.2, 10.6], [14.0, 60.0, 12.8, 13.1]
-        ) == "QUIET"
-
-    def test_fastest_pass_on_noisy_bracket_loses(self):
-        # The fastest wall itself ran between degraded probes.
-        assert probe_verdict_for(
-            [95.0, 90.0], [10.2, 10.6, 11.0, 14.5], [13.0, 13.1, 14.0, 40.0]
-        ) == "NOISY"
-
-    def test_cross_bracket_maxima_cannot_mask(self):
-        # ADVICE r10: the opening bracket (8, 14) has a 1.75x par/single
-        # ratio (NOISY on its own) but pairing max(singles)=10 with
-        # max(pars)=14 reads as 14 <= 1.6*10 = QUIET, and every relative
-        # bound also passes. The verdict must judge each bracket pair
-        # independently.
-        assert probe_verdict_for(
-            [72.5], [8.0, 10.0], [14.0, 13.0]
-        ) == "NOISY"
-
-    def test_pairs_helper_requires_every_pair_quiet(self):
-        from tools.probe_thresholds import quiet_verdict_pairs
-
-        assert quiet_verdict_pairs([10.0, 10.5], [13.0, 13.5]) == "QUIET"
-        assert quiet_verdict_pairs([8.0, 10.0], [14.0, 13.0]) == "NOISY"
-        assert quiet_verdict_pairs([], []) == "NOISY"
-        assert quiet_verdict_pairs([10.0], [13.0, 13.5]) == "NOISY"
+def _pass(wall_s: float, stolen: float = 0.0) -> dict:
+    """A pass record whose stolen share of the machine's CPU is ``stolen``."""
+    return {"wall_s": wall_s, "steal_s": stolen * wall_s * CPUS}
 
 
-class TestSnapshotGuard:
-    def _write(self, path, wall):
-        with open(path, "w") as f:
-            json.dump({"value": wall, "queries": {}}, f)
+class TestConverged:
+    def test_close_walls_with_quiet_fastest_pass_stop(self):
+        assert converged([_pass(80.0), _pass(75.0)])
 
-    def test_first_write_takes_round_slot(self, tmp_path):
-        p = snapshot_path(str(tmp_path), "9", 75.0, force=False)
-        assert p.endswith("bench_detail_r9.json")
+    def test_close_walls_with_stolen_fastest_pass_continue(self):
+        assert not converged([_pass(80.0), _pass(75.0, stolen=0.05)])
 
-    def test_faster_wall_replaces_record(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r9.json", 75.0)
-        p = snapshot_path(str(tmp_path), "9", 70.0, force=False)
-        assert p.endswith("bench_detail_r9.json")
+    def test_stolen_slower_pass_does_not_block(self):
+        # Only the reported (fastest) pass has to be quiet.
+        assert converged([_pass(80.0, stolen=0.05), _pass(75.0)])
 
-    def test_slower_wall_diverts_to_rerun(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r9.json", 72.5)
-        p = snapshot_path(str(tmp_path), "9", 132.5, force=False)
-        assert p.endswith("bench_detail_r9_rerun.json")
+    def test_one_wall_continues(self):
+        assert not converged([_pass(75.0)])
+        assert not converged([])
 
-    def test_force_overrides(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r9.json", 72.5)
-        p = snapshot_path(str(tmp_path), "9", 132.5, force=True)
-        assert p.endswith("bench_detail_r9.json")
-
-    def test_corrupt_existing_snapshot_diverts_to_rerun(self, tmp_path):
-        # Unreadable record: its bytes may be partially recoverable, so
-        # the new run diverts to the rerun sibling instead of destroying
-        # them (ADVICE r9 — the old behavior clobbered the corrupt file).
-        (tmp_path / "bench_detail_r9.json").write_text("{corrupt")
-        p = snapshot_path(str(tmp_path), "9", 100.0, force=False)
-        assert p.endswith("bench_detail_r9_rerun.json")
-
-    def test_second_rerun_gets_unique_suffix(self, tmp_path):
-        # A second degraded rerun must not clobber the first rerun's
-        # per-query detail (ADVICE r9 — same data-loss class, one tier
-        # down).
-        self._write(tmp_path / "bench_detail_r9.json", 72.5)
-        self._write(tmp_path / "bench_detail_r9_rerun.json", 120.0)
-        p = snapshot_path(str(tmp_path), "9", 132.5, force=False)
-        assert p.endswith("bench_detail_r9_rerun2.json")
-        self._write(tmp_path / "bench_detail_r9_rerun2.json", 132.5)
-        p = snapshot_path(str(tmp_path), "9", 140.0, force=False)
-        assert p.endswith("bench_detail_r9_rerun3.json")
-
-
-class TestRoundBestWall:
-    def _write(self, path, wall):
-        with open(path, "w") as f:
-            json.dump({"value": wall, "queries": {}}, f)
-
-    def test_no_snapshot_yet_reports_this_run(self, tmp_path):
-        assert round_best_wall(str(tmp_path), "10", 88.2) == 88.2
-
-    def test_slower_rerun_still_reports_round_best(self, tmp_path):
-        # VERDICT r9 wrong #2: BENCH_r09's top-line was a 93.9 s rerun
-        # while the round's converged best was 89.65 s — the published
-        # JSON must carry the round-best alongside the run's own wall.
-        self._write(tmp_path / "bench_detail_r10.json", 89.65)
-        assert round_best_wall(str(tmp_path), "10", 93.87) == 89.65
-
-    def test_faster_run_updates_round_best(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r10.json", 89.65)
-        assert round_best_wall(str(tmp_path), "10", 71.0) == 71.0
-
-    def test_corrupt_snapshot_falls_back_to_this_run(self, tmp_path):
-        (tmp_path / "bench_detail_r10.json").write_text("{corrupt")
-        assert round_best_wall(str(tmp_path), "10", 90.0) == 90.0
-
-
-class TestThresholdSharing:
-    def test_verdict_and_gate_share_constants(self):
-        # ADVICE r9: probe_verdict_for once re-hardcoded the gate's
-        # thresholds; both must come from tools/probe_thresholds so an
-        # edit can't desync them. Source-level pin: no bare numeric
-        # threshold literals left in either site.
-        import inspect
-
-        import bench
-        from tools import probe_thresholds as pt
-
-        src = inspect.getsource(bench.probe_verdict_for)
-        for lit in ("1.30", "1.40", "13.0", "1.6"):
-            assert lit not in src, f"hardcoded threshold {lit} in verdict"
-        assert pt.quiet_verdict(10.0, 14.0) == "QUIET"
-        assert pt.quiet_verdict(10.0, 17.0) == "NOISY"
-        assert pt.quiet_verdict(14.0, 15.0) == "NOISY"
-
-
-class TestFlagshipArtifacts:
-    def test_samples_accumulate_never_overwrite(self, tmp_path):
-        # VERDICT r9 wrong #3: flagship samples were prose-only; now each
-        # run persists a probe-bracketed JSON to a fresh slot.
-        import importlib.util
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        spec = importlib.util.spec_from_file_location(
-            "pivot_throughput", os.path.join(repo, "tools", "pivot_throughput.py")
-        )
-        pt = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(pt)
-        p1 = pt.flagship_artifact_path(str(tmp_path), "10")
-        assert p1.endswith("flagship_r10_1.json")
-        open(p1, "w").write("{}")
-        p2 = pt.flagship_artifact_path(str(tmp_path), "10")
-        assert p2.endswith("flagship_r10_2.json")
-
-
-class TestCrossScaleSnapshotGuard:
-    """Round-11 live finding: an sf0.001 smoke run's 56 s wall 'beat' the
-    82.8 s sf0.1 round record and clobbered bench_detail_r10.json — wall
-    comparisons are only meaningful at the same scale factor."""
-
-    def _write(self, path, wall, sf):
-        with open(path, "w") as f:
-            json.dump({"value": wall, "sf": sf, "queries": {}}, f)
-
-    def test_smaller_sf_run_cannot_claim_headline_slot(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r10.json", 82.8, 0.1)
-        p = snapshot_path(str(tmp_path), "10", 56.7, force=False, sf=0.001)
-        assert p.endswith("bench_detail_r10_sf0.001.json")
-
-    def test_same_sf_faster_run_still_claims_slot(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r10.json", 82.8, 0.1)
-        p = snapshot_path(str(tmp_path), "10", 72.5, force=False, sf=0.1)
-        assert p.endswith("bench_detail_r10.json")
-
-    def test_nonheadline_sf_gets_its_own_guarded_slot(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r10_sf1.json", 391.0, 1.0)
-        slower = snapshot_path(str(tmp_path), "10", 400.0, force=False, sf=1.0)
-        assert slower.endswith("bench_detail_r10_sf1_rerun.json")
-        faster = snapshot_path(str(tmp_path), "10", 352.5, force=False, sf=1.0)
-        assert faster.endswith("bench_detail_r10_sf1.json")
-
-    def test_cross_sf_occupant_diverts_same_sf_rerun_to_rerun_slot(self, tmp_path):
-        # pre-fix contamination: slot holds an sf0.001 record. An sf0.1 run
-        # must not clobber those bytes (preserve-and-divert, like corrupt).
-        self._write(tmp_path / "bench_detail_r10.json", 56.7, 0.001)
-        p = snapshot_path(str(tmp_path), "10", 92.0, force=False, sf=0.1)
-        assert p.endswith("bench_detail_r10_rerun.json")
-
-    def test_round_best_ignores_cross_sf_occupant(self, tmp_path):
-        self._write(tmp_path / "bench_detail_r10.json", 56.7, 0.001)
-        assert round_best_wall(str(tmp_path), "10", 92.0, sf=0.1) == 92.0
-        self._write(tmp_path / "bench_detail_r10.json", 82.8, 0.1)
-        assert round_best_wall(str(tmp_path), "10", 92.0, sf=0.1) == 82.8
-
-
-class TestRoundDefault:
-    """Shared round default (VERDICT r11 wrong #1 / ADVICE r11 #3).
-
-    bench.py's hard-coded ``"10"`` default sent the driver's round-11
-    bench snapshot into round 10's slots and mislabeled BENCH_r11's
-    ``round_best_wall``; quiet_hunter.py simultaneously defaulted to
-    "11", so two tools in one tree disagreed on the round.  All round
-    consumers now import tools.round_default.current_round, which reads
-    the committed ROUND marker (env var still wins for manual runs).
-    """
-
-    def test_env_var_wins(self, monkeypatch):
-        from tools.round_default import current_round
-
-        monkeypatch.setenv("SPARK_GRAFT_ROUND", "99")
-        assert current_round() == "99"
-
-    def test_marker_file_is_the_unparameterized_default(self, monkeypatch, tmp_path):
-        from tools.round_default import current_round
-
-        monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-        (tmp_path / "ROUND").write_text("17\n")
-        (tmp_path / "CORRECTNESS_r11.json").write_text("{}")
-        assert current_round(str(tmp_path)) == "17"
-
-    def test_falls_back_to_newest_correctness_plus_one(self, monkeypatch, tmp_path):
-        from tools.round_default import current_round
-
-        monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-        (tmp_path / "CORRECTNESS_r09.json").write_text("{}")
-        (tmp_path / "CORRECTNESS_r11.json").write_text("{}")
-        assert current_round(str(tmp_path)) == "12"
-
-    def test_marker_matches_newest_correctness_file(self):
-        """The staleness lint the verdict asked for: the committed ROUND
-        marker must equal newest-CORRECTNESS-round + 1 (during round N the
-        newest correctness file on disk is round N-1's), so forgetting to
-        bump the marker at a round boundary fails the suite instead of
-        silently mislabeling every artifact the driver writes."""
-        from tools.round_default import marker_round, newest_correctness_round
-
-        marker = marker_round()
-        newest = newest_correctness_round()
-        assert marker is not None, "committed ROUND marker file is missing"
-        assert newest is not None
-        assert int(marker) == newest + 1
-
-    def test_no_literal_round_defaults_remain(self):
-        """No tool may reintroduce a per-file literal round default."""
-        import re
-
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        offenders = []
-        for rel in [
-            "bench.py",
-            "tools/pivot_throughput.py",
-            "tools/skew_probe.py",
-            "tools/quiet_hunter.py",
-        ]:
-            src = open(os.path.join(repo, rel)).read()
-            if re.search(r"SPARK_GRAFT_ROUND[\"']\s*,\s*[\"']\d+[\"']", src):
-                offenders.append(rel)
-        assert not offenders, offenders
+    def test_walls_more_than_ten_percent_apart_continue(self):
+        assert not converged([_pass(90.0), _pass(75.0)])

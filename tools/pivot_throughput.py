@@ -21,12 +21,10 @@ Usage:
 Prints one JSON line: {"rows": N, "wall_sec": W, "rows_per_sec": R,
 "baseline_rows_per_sec": 4329435, "speedup_vs_baseline": R/B, ...}.
 
-Every run is bracketed by the same single-thread + 8-thread CPU probes
-bench.py uses (VERDICT r9 wrong #3: flagship samples were prose-only and
-unauditable against host contention) — the JSON carries cpu_probe_ms /
-cpu_probe_par_ms / probe_verdict, and the line is persisted to
-bench_history/flagship_r{SPARK_GRAFT_ROUND}_{i}.json (first free i, never
-overwriting an earlier sample).
+The JSON also carries ``steal_s``, the CPU seconds the hypervisor stole
+during the measured run (perfbench's ``steal_s`` delta), and ``quiet``:
+whether that stolen share stayed under perfbench's QUIET_STEAL_SHARE. A
+sample that is not quiet is an upper bound on the engine's time.
 """
 
 from __future__ import annotations
@@ -40,21 +38,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.round_default import current_round  # noqa: E402
+from perfbench.run import QUIET_STEAL_SHARE, stolen_share  # noqa: E402
+from perfbench.trace import steal_s  # noqa: E402
 
 BASELINE_ROWS_PER_SEC = 3_410_052_578 / 787.67  # performance.md:33
-
-
-def flagship_artifact_path(hist: str, rnd: str) -> str:
-    """First free bench_history/flagship_r{rnd}_{i}.json — samples from the
-    same round accumulate instead of overwriting (the auditable-trail rule
-    snapshot_path enforces for suite details)."""
-    i = 1
-    while True:
-        p = os.path.join(hist, f"flagship_r{rnd}_{i}.json")
-        if not os.path.exists(p):
-            return p
-        i += 1
 
 
 def generate(data_dir: str, n_rows: int, n_files: int) -> int:
@@ -140,19 +127,11 @@ def main() -> None:
         name_filter="tripdata",
         report_path=None,
     )
-    # Bracket the measured run with bench.py's probe pair so the sample
-    # self-labels host contention (QUIET samples are record-grade; NOISY
-    # ones are floor-bounded by tenancy, not the engine).
-    from tools.host_probe import parallel_ms, single_ms
-    from tools.probe_thresholds import quiet_verdict_pairs
-
-    probes = [single_ms()]
-    par_probes = [parallel_ms()]
+    steal0 = steal_s()
     t0 = time.time()
     metrics = run_pivot_pipeline(spark, cfg)
     wall = time.time() - t0
-    probes.append(single_ms())
-    par_probes.append(parallel_ms())
+    stolen = steal_s() - steal0
     rps = metrics.input_rows / wall if wall else 0.0
     result = {
         "metric": "pivot_end_to_end_rows_per_sec",
@@ -166,20 +145,10 @@ def main() -> None:
         "baseline_rows_per_sec": int(BASELINE_ROWS_PER_SEC),
         "speedup_vs_baseline": round(rps / BASELINE_ROWS_PER_SEC, 2),
         "loadavg": round(os.getloadavg()[0], 2),
-        "cpu_probe_ms": probes,
-        "cpu_probe_par_ms": par_probes,
-        "probe_verdict": quiet_verdict_pairs(probes, par_probes),
+        "steal_s": round(stolen, 2),
+        "quiet": stolen_share({"steal_s": stolen, "wall_s": wall}) < QUIET_STEAL_SHARE,
     }
-    line = json.dumps(result)
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist = os.path.join(here, "bench_history")
-    os.makedirs(hist, exist_ok=True)
-    rnd = current_round()
-    artifact = flagship_artifact_path(hist, rnd)
-    with open(artifact, "w") as f:
-        f.write(line + "\n")
-    print(f"sample persisted to {artifact}", file=sys.stderr)
-    print(line)
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":

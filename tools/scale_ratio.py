@@ -4,7 +4,11 @@ and report the wall ratio against 10x data.
 The sf0.1 bench cannot see super-linear candidate/pair growth (VERDICT
 r4 §missing #3); this probe can. Queries run SERIALLY (min of
 ``--passes`` timed passes after one warm-up) so each number is a clean
-single-query wall, with loadavg annotations per query for audit.
+single-query wall, with loadavg annotations per query for audit. The
+output also carries ``steal_s``/``quiet``: the CPU seconds the hypervisor
+stole over the whole ladder and whether that stayed under perfbench's
+QUIET_STEAL_SHARE. On a stolen run trust the RATIOS (both sides ran under
+the same host) over the absolute seconds.
 
 A family is scale-clean when ratio <= ~15 at 10x data (headroom over
 linear for fixed overheads + O(n log n) sorts); documented-quadratic
@@ -14,7 +18,8 @@ against their stated complexity instead.
 Usage:
   python tools/scale_ratio.py --top 20              # slowest from bench_detail.json
   python tools/scale_ratio.py q1_pricing_summary …  # explicit names
-Writes scale_ratio.json and prints one markdown row per query.
+Writes the ``--out`` JSON (default scale_ratio.json), prints one markdown
+row per query, then one JSON summary line.
 """
 
 from __future__ import annotations
@@ -28,6 +33,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench.run import QUIET_STEAL_SHARE, stolen_share
+from perfbench.trace import steal_s
 from taxi_data_datapipeline_spark.session import get_spark
 
 
@@ -54,7 +61,7 @@ def main() -> None:
                     "which cancels in the ratio)")
     ap.add_argument("--small", default="/root/testdata/sf0.1")
     ap.add_argument("--big", default=os.path.join(REPO, ".scale", "sf1"))
-    ap.add_argument("--out", default="bench_history/scale_ratio_r8.json",
+    ap.add_argument("--out", default="scale_ratio.json",
                     help="output JSON filename (repo-relative) — name runs "
                     "distinctly so a new run never clobbers a committed record")
     ap.add_argument("--clear-memos-per-query", action="store_true",
@@ -81,15 +88,7 @@ def main() -> None:
     spark = get_spark("scale_ratio")
     # One global warm-up amortizes JVM/codegen start-up out of the first row.
     qs["hourly_pivot"](spark, args.small).write.format("noop").mode("overwrite").save()
-    # Bracket the whole run with the host probes (tools/probe_thresholds):
-    # ladder walls are contention-confounded like every other number on
-    # this host, and a NOISY label tells the reader to trust the RATIOS
-    # (both sides ran under the same tenancy) over the absolute seconds.
-    from tools.host_probe import parallel_ms, single_ms
-    from tools.probe_thresholds import quiet_verdict_pairs
-
-    probes = [single_ms()]
-    par_probes = [parallel_ms()]
+    steal0, t0 = steal_s(), time.time()
     rows = []
     for name in names:
         load0 = round(os.getloadavg()[0], 1)
@@ -105,12 +104,6 @@ def main() -> None:
 
             clear_memos()
         ratio = round(t_big / t_small, 1) if t_small > 0 else None
-        # Probe BETWEEN queries, not just around the whole ladder: a
-        # multi-query sf6 run lasts tens of minutes, and a contention
-        # burst that starts and ends mid-run is invisible to endpoint
-        # brackets (ADVICE r10). Each row carries its own closing pair.
-        probes.append(single_ms())
-        par_probes.append(parallel_ms())
         rows.append(
             {
                 "query": name,
@@ -118,20 +111,18 @@ def main() -> None:
                 "sf1_sec": t_big,
                 "ratio": ratio,
                 "loadavg": load0,
-                "probe_ms": probes[-1],
-                "probe_par_ms": par_probes[-1],
             }
         )
         print(f"| {name} | {t_small} | {t_big} | {ratio} | load {load0} |", flush=True)
 
+    stolen, wall = steal_s() - steal0, time.time() - t0
     out = {
         "small": args.small,
         "big": args.big,
         "passes": args.passes,
         "rows": rows,
-        "cpu_probe_ms": probes,
-        "cpu_probe_par_ms": par_probes,
-        "probe_verdict": quiet_verdict_pairs(probes, par_probes),
+        "steal_s": round(stolen, 2),
+        "quiet": stolen_share({"steal_s": stolen, "wall_s": wall}) < QUIET_STEAL_SHARE,
     }
     with open(os.path.join(REPO, args.out), "w") as fh:
         json.dump(out, fh, indent=1)

@@ -18,9 +18,11 @@ each answered by an A/B wall at matched data:
   8-way salt+replicate join — the production defense when the dim can't
   broadcast.
 
-Results are probe-bracketed (tools/probe_thresholds.py) and persisted to
-bench_history/skew_stress_r{SPARK_GRAFT_ROUND}_{i}.json — same audit
-discipline as bench.py / pivot_throughput.py.
+Prints one JSON line with every variant's best wall, the ratios between
+them, and ``steal_s``/``quiet``: the CPU seconds the hypervisor stole over
+all the timed variants and whether that stayed under perfbench's
+QUIET_STEAL_SHARE — the same host-noise signal as bench.py and
+pivot_throughput.py.
 
 Usage:
   python tools/skew_probe.py [--rows 20000000] [--customers 200000]
@@ -38,9 +40,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.host_probe import parallel_ms, single_ms  # noqa: E402
-from tools.round_default import current_round  # noqa: E402
-from tools.probe_thresholds import quiet_verdict_pairs  # noqa: E402
+from perfbench.run import QUIET_STEAL_SHARE, stolen_share  # noqa: E402
+from perfbench.trace import steal_s  # noqa: E402
 
 HOT_USER_SHARE = 0.40   # hottest user_id owns this fraction of all events
 HOT_TYPE_SHARE = 0.80   # hottest event_type owns this fraction
@@ -239,8 +240,7 @@ def main() -> None:
         "join_salted_8": join_salted,
     }
 
-    probes = [single_ms()]
-    par_probes = [parallel_ms()]
+    steal0, t_all = steal_s(), time.time()
     walls: dict[str, float] = {}
     for name, fn in variants.items():
         fn()  # warm (codegen + scan cache) — skew effects survive warmth
@@ -251,8 +251,7 @@ def main() -> None:
             best = min(best, time.time() - t0)
         walls[name] = round(best, 2)
         print(f"{name}: {walls[name]} s", file=sys.stderr)
-    probes.append(single_ms())
-    par_probes.append(parallel_ms())
+    stolen, wall_all = steal_s() - steal0, time.time() - t_all
 
     result = {
         "metric": "skew_stress_walls",
@@ -271,20 +270,10 @@ def main() -> None:
             walls["join_salted_8"] / walls["join_smj_skewsplit_off"], 2),
         "passes": args.passes,
         "loadavg": round(os.getloadavg()[0], 2),
-        "cpu_probe_ms": probes,
-        "cpu_probe_par_ms": par_probes,
-        "probe_verdict": quiet_verdict_pairs(probes, par_probes),
+        "steal_s": round(stolen, 2),
+        "quiet": stolen_share({"steal_s": stolen, "wall_s": wall_all}) < QUIET_STEAL_SHARE,
     }
-    line = json.dumps(result)
-    hist = os.path.join(REPO, "bench_history")
-    os.makedirs(hist, exist_ok=True)
-    rnd = current_round()
-    i = 1
-    while os.path.exists(os.path.join(hist, f"skew_stress_r{rnd}_{i}.json")):
-        i += 1
-    with open(os.path.join(hist, f"skew_stress_r{rnd}_{i}.json"), "w") as f:
-        f.write(line + "\n")
-    print(line)
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":
