@@ -394,15 +394,22 @@ def _stream_session(
     cached = _STREAM_SESSION_CACHE.get(key)
     if cached is not None:
         return cached
-    sess = spark.newSession()
-    sess.conf.set("spark.sql.shuffle.partitions", str(parts))
-    # newSession() re-reads only the context-level conf; carry over the
-    # session-zone + nanos settings streaming correctness depends on.
-    sess.conf.set(
-        "spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone")
-    )
-    sess.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sess = _session_like(spark, {"spark.sql.shuffle.partitions": str(parts)})
     _STREAM_SESSION_CACHE[key] = sess
+    return sess
+
+
+def _session_like(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A new session on ``spark``'s SparkContext with ``conf`` set. newSession()
+    re-reads only the context-level conf, so the shuffle partition count and
+    the session-zone + nanos settings streaming correctness depends on are
+    carried over first."""
+    sess = spark.newSession()
+    for k in ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone"):
+        sess.conf.set(k, spark.conf.get(k))
+    sess.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for k, v in conf.items():
+        sess.conf.set(k, v)
     return sess
 
 
@@ -4657,30 +4664,25 @@ def q_streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessionize_stream_tws,
     )
 
-    spark = _stream_session(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    # A session of its own for the RocksDB provider: the stream session (or
+    # the caller's, when the partition count already matches) is shared by
+    # concurrent drains, so its conf must never change.
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark = _session_like(
+        _stream_session(spark, sf_dir),
+        {"spark.sql.streaming.stateStore.providerClass": rocksdb},
     )
-    try:
-        raw = _stream_events(spark, sf_dir).select("user_id", "ts")
-        sessions = sessionize_stream_tws(raw, gap_seconds=30 * 60)
-        name = f"stream_tws_{next(_stream_counter)}"
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    raw = _stream_events(spark, sf_dir).select("user_id", "ts")
+    sessions = sessionize_stream_tws(raw, gap_seconds=30 * 60)
+    name = f"stream_tws_{next(_stream_counter)}"
+    q = (
+        sessions.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return spark.table(name).select(
         "user_id",
         "session_start",

@@ -6,8 +6,6 @@ from taxi_data_datapipeline_spark.sources.paths import (
     infer_taxi_type_from_path,
     is_s3_path,
     parse_size,
-    taxi_type_expr,
-    year_month_expr,
 )
 from taxi_data_datapipeline_spark.sources.schema_detect import (
     find_pickup_datetime_col,
@@ -22,8 +20,6 @@ __all__ = [
     "infer_taxi_type_from_path",
     "is_s3_path",
     "parse_size",
-    "taxi_type_expr",
-    "year_month_expr",
     "find_pickup_datetime_col",
     "find_pickup_lat_lon_cols",
     "find_pickup_location_col",

@@ -7,10 +7,12 @@ Canonical trip schema (reference ``pivot_all_files.py:47-51``):
 
 Strategy (SURVEY §1.3): read each file's parquet *footer* schema driver-side
 (cheap, metadata only), resolve it with the fuzzy detector, group files that
-share a resolution, taxi type, year-month and declared schema, build ONE
-``spark.read.schema(...).parquet(*group)`` scan per group with a plain
-``select`` projection, and ``unionByName`` the groups. Catalyst prunes each scan to exactly the projected columns and pushes
-the null filter down; the union is a no-shuffle narrow op.
+share a resolution, taxi type and declared schema (one group per schema era
+and taxi type), build ONE ``spark.read.schema(...).parquet(*group)`` scan
+per group with a plain ``select`` projection, and ``unionByName`` the
+groups. Catalyst prunes each scan to exactly the projected columns and
+pushes the null filter down; the union is a no-shuffle narrow op, and
+Spark packs a group's small files into shared splits.
 
 Each footer is read ONCE per pass, driver-side with pyarrow and no Spark
 job: the group scan declares the detected columns' types from that footer,
@@ -18,21 +20,27 @@ so Spark neither infers the file's schema nor touches any other column, and
 ``IngestReport.footers`` hands the same schemas to the pipeline's advisory
 schema check.
 
-For N files the driver does N footer reads, while data never leaves the
-executors. Taxi type and year-month come from each file's path and are part
-of the group key, so each monthly file gets its own scan today; the cost of
-that grows with the file count, not the row count.
+Path metadata is parsed driver-side once per file (``sources.paths``). The
+taxi type is a per-group literal. A group spans months, so each row takes
+its year-month from ONE lookup of its file's ``_metadata.file_path`` in a
+literal (path hash) -> ``year*100 + month`` map, built from the group scan's
+own file list (``inputFiles()``, driver-side). A group whose input paths
+number more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+(32) is listed by one parallel Spark job when its scan is built.
 """
 
 from __future__ import annotations
 
+import os
 from collections import defaultdict
 from dataclasses import dataclass
+from pathlib import PurePosixPath
+from urllib.parse import unquote, urlsplit
 
 import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.errors import PySparkTypeError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import (
@@ -123,6 +131,37 @@ def _declared_schema(footer: pa.Schema, ts: TripSchema) -> StructType | None:
         return None
 
 
+def _year_month(raw: DataFrame, inputs: list[str]) -> Column:
+    """``file_year * 100 + file_month`` for each row of the scan ``raw`` over
+    ``inputs``: ``infer_month_from_path`` of the input path that named the
+    row's file (a Spark-written directory input names its part files), NULL
+    where that path names no month. One per-row lookup on
+    ``_metadata.file_path``; a literal when the whole scan shares one value."""
+    owner = {os.path.abspath(f): f for f in inputs}
+    months: dict[str, int | None] = {}
+    for uri in raw.inputFiles():
+        scheme, netloc, path, _, _ = urlsplit(uri)
+        local = unquote(path)
+        named_by = next(
+            (owner[d] for d in (local, *map(str, PurePosixPath(local).parents)) if d in owner),
+            local,
+        )
+        ym = infer_month_from_path(named_by)
+        # inputFiles() spells an empty authority out ("file:///p");
+        # _metadata.file_path drops it ("file:/p"). Both percent-encode alike.
+        months[uri if netloc else f"{scheme}:{path}"] = ym and ym[0] * 100 + ym[1]
+    values = set(months.values())
+    if len(values) <= 1:
+        return F.lit(values.pop() if values else None).cast("int")
+    # Keyed on the path's 64-bit hash: the map scan compares longs, not
+    # strings. Every row's path is one of the keys, so only two keys that
+    # collide could mislead, and create_map raises on a duplicate key.
+    lookup = F.create_map(
+        *[c for k, v in months.items() for c in (F.xxhash64(F.lit(k)), F.lit(v))]
+    )
+    return lookup[F.xxhash64(F.col("_metadata.file_path"))]
+
+
 def normalize_trips(
     spark: SparkSession,
     files: list[str],
@@ -161,20 +200,19 @@ def normalize_trips(
             skipped.append(f)
             continue
         resolved[f] = ts
-        ym = infer_month_from_path(f)
-        # Files sharing (projection recipe, taxi type, year-month, declared
-        # schema) share a scan. The declared schema carries every detected
-        # column's type, so two files whose detected columns match but whose
-        # physical types differ (int64 vs string location ids, say) never
-        # share one scan that would misread or fail the other file.
-        groups[(ts, infer_taxi_type_from_path(f), ym, decl)].append(f)
+        # Files sharing (projection recipe, taxi type, declared schema) share
+        # a scan. The declared schema carries every detected column's type,
+        # so two files whose detected columns match but whose physical types
+        # differ (int64 vs string location ids, say) never share one scan
+        # that would misread or fail the other file.
+        groups[(ts, infer_taxi_type_from_path(f), decl)].append(f)
 
     ensure_nanos_as_long(spark)
     typed_ok = typed_place and all(
         ts.place_mode == "location" for (ts, *_rest) in groups
     )
     parts: list[DataFrame] = []
-    for (ts, ttype, ym, decl), group_files in groups.items():
+    for (ts, ttype, decl), group_files in groups.items():
         raw = spark.read.schema(decl).parquet(*group_files)
         dt_type = decl[ts.datetime_col].dataType
         if ts.place_mode == "location":
@@ -184,14 +222,15 @@ def normalize_trips(
             place = latlon_place_key(F.col(ts.lat_col), F.col(ts.lon_col))
         else:
             place = F.lit("")
-        year, month = (ym if ym is not None else (None, None))
+        # Whole-stage codegen evaluates the shared lookup once per row.
+        ym = _year_month(raw, group_files)
         parts.append(
             raw.select(
                 coerce_timestamp(F.col(ts.datetime_col), dt_type).alias("pickup_datetime"),
                 place.alias("pickup_place"),
                 F.lit(ttype).alias("taxi_type"),
-                F.lit(year).cast("int").alias("file_year"),
-                F.lit(month).cast("int").alias("file_month"),
+                (ym / 100).cast("int").alias("file_year"),
+                (ym % 100).alias("file_month"),
             )
         )
 

@@ -15,9 +15,8 @@ Reference semantics (cited for parity, implementation is new):
 Spark-first notes: discovery is only needed when per-file schema control
 matters (multi-era taxi schemas); a homogeneous dataset should be read as
 ``spark.read.parquet(base)`` with ``recursiveFileLookup`` so Catalyst handles
-listing and partition pruning. Path metadata is *also* exposed as Column
-expressions over ``input_file_name()`` (``taxi_type_expr`` /
-``year_month_expr``) so it stays JVM-side in distributed plans.
+listing and partition pruning. Path metadata is parsed here, driver-side,
+once per file; ingest attaches it to rows by file path.
 """
 
 from __future__ import annotations
@@ -25,9 +24,6 @@ from __future__ import annotations
 import glob
 import os
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _SIZE_RE = re.compile(r"^\s*([0-9]*\.?[0-9]+)\s*([KMGTP]?)B?\s*$", re.IGNORECASE)
 _SIZE_MULT = {"": 1, "K": 1024, "M": 1024**2, "G": 1024**3, "T": 1024**4, "P": 1024**5}
@@ -104,41 +100,3 @@ def infer_month_from_path(path: str) -> tuple[int, int] | None:
                 return year, month
     return None
 
-
-def taxi_type_expr(path_col: Column | None = None) -> Column:
-    """Column form of ``infer_taxi_type_from_path`` over ``input_file_name()``.
-
-    Stays JVM-side (no UDF) so it costs nothing in a distributed scan.
-    """
-    p = F.lower(path_col if path_col is not None else F.input_file_name())
-    return (
-        F.when(p.contains("yellow"), F.lit("yellow"))
-        .when(p.contains("green"), F.lit("green"))
-        .when(p.contains("fhv"), F.lit("fhv"))
-        .otherwise(F.lit("unknown"))
-    )
-
-
-def year_month_expr(path_col: Column | None = None) -> tuple[Column, Column]:
-    """(year, month) Columns over ``input_file_name()``, same precedence as
-    ``infer_month_from_path``; NULLs when not inferable."""
-    p = path_col if path_col is not None else F.input_file_name()
-    hive_y = F.regexp_extract(p, r"year=(\d{4})/month=(\d{1,2})", 1)
-    hive_m = F.regexp_extract(p, r"year=(\d{4})/month=(\d{1,2})", 2)
-    anch_y = F.regexp_extract(p, r"(\d{4})[-_](\d{1,2})(?=\.parquet$|/|$)", 1)
-    anch_m = F.regexp_extract(p, r"(\d{4})[-_](\d{1,2})(?=\.parquet$|/|$)", 2)
-    any_y = F.regexp_extract(p, r"(\d{4})[-_](\d{1,2})", 1)
-    any_m = F.regexp_extract(p, r"(\d{4})[-_](\d{1,2})", 2)
-
-    tiers = [(hive_y, hive_m), (anch_y, anch_m), (any_y, any_m)]
-
-    def pick(idx: int) -> Column:
-        # First tier whose month parses into 1..12 wins, mirroring the
-        # regex-precedence fallthrough of the driver-side parser.
-        out = F.lit(None).cast("int")
-        for y, m in reversed(tiers):
-            ok = (m != "") & m.cast("int").between(1, 12)
-            out = F.when(ok, (y if idx == 0 else m).cast("int")).otherwise(out)
-        return out
-
-    return pick(0), pick(1)

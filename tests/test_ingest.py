@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
 from taxi_data_datapipeline_spark.operators.pivot import hourly_pivot
 from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
-from taxi_data_datapipeline_spark.sources.paths import taxi_type_expr, year_month_expr
+from taxi_data_datapipeline_spark.sources.paths import infer_month_from_path
 
 
 @pytest.fixture(scope="module")
@@ -103,13 +103,41 @@ def test_end_to_end_pivot_over_ingest(spark, trip_files):
     assert got[("fhv", "Z1")]["hour_7"] == 2
 
 
-def test_path_metadata_exprs(spark, trip_files):
-    df = spark.read.parquet(trip_files[0]).select(
-        taxi_type_expr().alias("taxi_type"),
-        *[c.alias(n) for c, n in zip(year_month_expr(), ["y", "m"])],
-    )
-    r = df.collect()[0]
-    assert r["taxi_type"] == "yellow" and r["y"] == 2023 and r["m"] == 1
+def test_month_follows_each_rows_input_path(spark, tmp_path):
+    """One scan spans a schema era's months, so each row takes its
+    file_year/file_month from the input path that named its file: a
+    monthly file, or a dataset directory whose part file names another
+    month. The lookup must match Spark's spelling of that path (``file:/``
+    with a percent-encoded space), not ``inputFiles()``'s (``file:///``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "taxi trips"
+    base.mkdir()
+    files = []
+    for month in (1, 2, 3, 4):
+        path = base / f"yellow_tripdata_2023-{month:02d}.parquet"
+        files.append(str(path))
+        if month == 4:
+            path.mkdir()
+            path = path / "part-00000-2023-09.parquet"
+        pq.write_table(
+            pa.table({
+                "tpep_pickup_datetime": pa.array(
+                    [datetime.datetime(2023, month, 5)] * month, pa.timestamp("us")),
+                "PULocationID": pa.array([month] * month, pa.int32()),
+            }),
+            str(path),
+        )
+
+    trips, _ = normalize_trips(spark, files)
+    plan = trips._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    rows = trips.collect()
+    assert len(rows) == 10
+    for r in rows:
+        path = files[int(r["pickup_place"]) - 1]
+        assert (r["file_year"], r["file_month"]) == infer_month_from_path(path)
 
 
 def test_coerce_timestamp_type_dispatch(spark):

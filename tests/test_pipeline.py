@@ -325,7 +325,9 @@ def _write_two_era_trips(base) -> list[str]:
 def test_normalize_reads_each_footer_once(spark, tmp_path):
     """normalize_trips starts no Spark job: each footer is read once,
     driver-side with pyarrow, and each group scan declares the schema
-    that footer gave instead of having Spark infer it."""
+    that footer gave instead of having Spark infer it. Files group by
+    schema era, not by month: four monthly files in two eras are two
+    parquet scans."""
     from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
 
     files = _write_two_era_trips(tmp_path)
@@ -333,6 +335,8 @@ def test_normalize_reads_each_footer_once(spark, tmp_path):
     trips, report = normalize_trips(spark, files, typed_place=True)
     assert len(_ungrouped_jobs(spark) - before) == 0
     assert set(report.footers) == set(files) == set(report.resolved)
+    plan = trips._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 2
     assert trips.count() == 3 * len(files)
 
 

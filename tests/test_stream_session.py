@@ -114,3 +114,28 @@ def test_streaming_query_result_unchanged_on_clone(spark, name):
     assert got.count() == n_default
     assert got.exceptAll(wide).count() == 0
     assert wide.exceptAll(got).count() == 0
+
+
+def test_sessions_tws_sets_no_shared_conf(spark, monkeypatch):
+    """streaming_sessions_tws needs the RocksDB state store, and sets it on
+    a session of its own: the caller's session and every memoized stream
+    session are shared by concurrent drains, so a conf set there leaks into
+    them even when it is restored afterwards."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from taxi_data_datapipeline_spark import queries_advanced
+    from taxi_data_datapipeline_spark.queries import QUERIES
+
+    _stream_session(spark, SF)  # memoize the stream session before recording
+    calls = []
+    for method in ("set", "unset"):
+        def record(self, key, *args, _real=getattr(RuntimeConfig, method)):
+            calls.append((self, key))
+            return _real(self, key, *args)
+
+        monkeypatch.setattr(RuntimeConfig, method, record)
+    out = QUERIES["streaming_sessions_tws"](spark, SF)
+    assert "spark.sql.streaming.stateStore.providerClass" in {key for _, key in calls}
+    shared = [spark, *queries_advanced._STREAM_SESSION_CACHE.values()]
+    assert [key for conf, key in calls if any(conf is s.conf for s in shared)] == []
+    assert out.count() > 0
