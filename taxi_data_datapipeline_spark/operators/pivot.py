@@ -35,8 +35,6 @@ constant memory per group, no second shuffle.
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import add
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -45,9 +43,14 @@ from pyspark.sql import functions as F
 HOUR_COLUMNS = [f"hour_{h}" for h in range(24)]
 
 
-def row_total(columns: Sequence[str]) -> Column:
-    """Horizontal sum across wide count columns (reference A6)."""
-    return reduce(add, [F.coalesce(F.col(c), F.lit(0)) for c in columns])
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (a backtick inside doubles)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def row_total(columns: Sequence[str]) -> str:
+    """SQL text of the horizontal sum across wide count columns (reference A6)."""
+    return " + ".join(f"coalesce({sql_ident(c)}, 0)" for c in columns)
 
 
 def pivot_counts(
@@ -62,16 +65,15 @@ def pivot_counts(
 
     One shuffle (conditional aggregation over the explicit ``domain``,
     not `.pivot()` — see module doc). Stable output schema
-    ``index_cols + [f'{prefix}{v}' for v in domain]`` with zero fill.
+    ``index_cols + [f'{prefix}{v}' for v in domain]`` with zero fill. Each
+    aggregate is one SQL expression, parsed once in the JVM.
     """
+    bucket = sql_ident(bucket_col)
     wide = df.groupBy(*index_cols).agg(
-        *[
-            F.count_if(F.col(bucket_col) == v).alias(f"{prefix}{v}")
-            for v in domain
-        ]
+        *[F.expr(f"count_if({bucket} = {v}) AS {sql_ident(f'{prefix}{v}')}") for v in domain]
     )
     if min_total is not None and min_total > 0:
-        wide = wide.filter(row_total([f"{prefix}{v}" for v in domain]) >= min_total)
+        wide = wide.filter(f"{row_total([f'{prefix}{v}' for v in domain])} >= {min_total}")
     return wide
 
 
@@ -119,9 +121,9 @@ def cleanup_low_count_rows(
         c for c in wide.columns if c.startswith("hour_")
     ]
     total = row_total(cols)
-    kept = wide.filter(total >= min_rides)
+    kept = wide.filter(f"{total} >= {min_rides}")
     stats = {
-        "kept": F.sum((total >= min_rides).cast("long")).alias("kept"),
-        "dropped": F.sum((total < min_rides).cast("long")).alias("dropped"),
+        "kept": F.expr(f"sum(CAST({total} >= {min_rides} AS BIGINT)) AS kept"),
+        "dropped": F.expr(f"sum(CAST({total} < {min_rides} AS BIGINT)) AS dropped"),
     }
     return kept, stats

@@ -1,8 +1,10 @@
 """Flagship pipeline runner: discover -> normalize -> pivot -> sink -> report.
 
 Re-expresses the reference's end-to-end ``main()`` (``pivot_all_files.py:
-366-554``) as footers read driver-side with pyarrow, no Spark job, plus the
-pivot/write jobs:
+366-554``) as footers read driver-side with pyarrow plus two Spark jobs, the
+pivot and its write. An era group of more than 32 paths
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``) adds one
+parallel-listing job when its scan is built:
 
 * file discovery + name filter + priority sort + max-files slice
   (reference ``pivot_all_files.py:399-409``) stay driver-side — they are
@@ -23,6 +25,10 @@ pivot/write jobs:
 * the metrics report renders to JSON or LaTeX like the reference's
   ``generate_report`` (``pivot_all_files.py:507-541``).
 
+The plan is SQL text (``selectExpr``, ``filter("<sql>")``, ``F.expr``) parsed
+once in the JVM: each ``Column``-API call costs several Py4J round trips
+(about 3 k per pass). Labels go through ``sources.ingest.sql_string``.
+
 Scale: the only data movement is the pivot's one shuffle on the
 (type, date, place) key; everything else is embarrassingly parallel scan +
 map-side work. No driver-side data ever materializes except the observed
@@ -40,9 +46,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from taxi_data_datapipeline_spark.operators.pivot import HOUR_COLUMNS, row_total
-from taxi_data_datapipeline_spark.operators.pivot import pivot_counts
-from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
+from taxi_data_datapipeline_spark.operators.pivot import HOUR_COLUMNS, pivot_counts, row_total
+from taxi_data_datapipeline_spark.sources.ingest import normalize_trips, sql_string
 from taxi_data_datapipeline_spark.sources.paths import (
     discover_parquet_files,
     infer_taxi_type_from_path,
@@ -175,7 +180,7 @@ def build_wide_plan(
     # calendar-window test on the derived DATE (make_date/add_months are
     # int calendar math, no zone lookups) — equivalent to the
     # year()/month() pair for any valid (file_year, file_month).
-    secs = F.col("pickup_datetime").cast("long")
+    secs = "CAST(pickup_datetime AS BIGINT)"
     # pickup_place keeps whatever type ingest resolved (native ints under
     # typed_place): the aggregation below keys on it, and hashing a
     # fixed-width int beats hashing a freshly-cast string ~2.5x at the
@@ -183,66 +188,42 @@ def build_wide_plan(
     # aggregate, where it costs one cast per OUTPUT row (thousands-fold
     # fewer than input rows).
     if taxi_types:
-        enc = F.when(F.col("taxi_type") == taxi_types[0], 0)
-        for i, t in enumerate(taxi_types[1:], start=1):
-            enc = enc.when(F.col("taxi_type") == t, i)
-        type_key = enc.otherwise(len(taxi_types)).cast("int").alias("taxi_key")
+        codes = [(i, sql_string(t)) for i, t in enumerate(taxi_types)]
+        enc = " ".join(f"WHEN taxi_type = {t} THEN {i}" for i, t in codes)
+        dec = " ".join(f"WHEN taxi_key = {i} THEN {t}" for i, t in codes)
+        type_key = f"CAST(CASE {enc} ELSE {len(codes)} END AS INT)"
+        type_out = f"CASE {dec} ELSE 'unknown' END"
     else:
-        type_key = F.col("taxi_type").alias("taxi_key")
-    projected = trips.select(
-        type_key,
-        "file_year",
-        "file_month",
-        F.col("pickup_datetime").isNotNull().alias("has_ts"),
-        F.date_from_unix_date(F.floor(secs / F.lit(86400)).cast("int")).alias("date"),
-        (F.pmod(secs, F.lit(86400)) / F.lit(3600)).cast("int").alias("hour"),
-        "pickup_place",
+        type_key, type_out = "taxi_type", "taxi_key"
+    projected = trips.selectExpr(
+        f"{type_key} AS taxi_key", "file_year", "file_month",
+        "pickup_datetime IS NOT NULL AS has_ts",
+        f"date_from_unix_date(CAST(floor({secs} / 86400) AS INT)) AS date",
+        f"CAST(pmod({secs}, 86400) / 3600 AS INT) AS hour", "pickup_place",
     )
-    month_start = F.make_date("file_year", "file_month", F.lit(1))
-    mismatch = (
-        F.col("has_ts")
-        & F.col("file_year").isNotNull()
-        & (
-            (F.col("date") < month_start)
-            | (F.col("date") >= F.add_months(month_start, 1))
-        )
-    )
+    month_start = "make_date(file_year, file_month, 1)"
+    mismatch = (f"has_ts AND file_year IS NOT NULL AND (date < {month_start}"
+                f" OR date >= add_months({month_start}, 1))")
     projected = projected.observe(
         ingest_obs,
-        F.count(F.lit(1)).alias("input_rows"),
-        F.sum((~F.col("has_ts")).cast("long")).alias("parse_failures"),
-        F.sum(mismatch.cast("long")).alias("month_mismatch"),
+        F.expr("count(1) AS input_rows"),
+        F.expr("sum(CAST(NOT has_ts AS BIGINT)) AS parse_failures"),
+        F.expr(f"sum(CAST({mismatch} AS BIGINT)) AS month_mismatch"),
     )
 
-    prepared = projected.filter(F.col("has_ts")).select(
-        "taxi_key", "date", "pickup_place", "hour"
-    )
+    prepared = projected.filter("has_ts").select("taxi_key", "date", "pickup_place", "hour")
     unfiltered = pivot_counts(
-        prepared,
-        index_cols=["taxi_key", "date", "pickup_place"],
-        bucket_col="hour",
-        domain=range(24),
-        prefix="hour_",
-        min_total=None,
+        prepared, ["taxi_key", "date", "pickup_place"], "hour", range(24), "hour_"
     )
     having_obs = Observation("having")
     total = row_total(HOUR_COLUMNS)
     unfiltered = unfiltered.observe(
         having_obs,
-        F.sum((total < min_rides).cast("long")).alias("low_count_dropped"),
-        F.sum((total >= min_rides).cast("long")).alias("kept"),
+        F.expr(f"sum(CAST(({total}) < {min_rides} AS BIGINT)) AS low_count_dropped"),
+        F.expr(f"sum(CAST(({total}) >= {min_rides} AS BIGINT)) AS kept"),
     )
-    if taxi_types:
-        dec = F.when(F.col("taxi_key") == 0, taxi_types[0])
-        for i, t in enumerate(taxi_types[1:], start=1):
-            dec = dec.when(F.col("taxi_key") == i, t)
-        type_out = dec.otherwise("unknown").alias("taxi_type")
-    else:
-        type_out = F.col("taxi_key").alias("taxi_type")
-    wide = unfiltered.filter(total >= min_rides).select(
-        type_out,
-        "date",
-        F.col("pickup_place").cast("string").alias("pickup_place"),
+    wide = unfiltered.filter(f"({total}) >= {min_rides}").selectExpr(
+        f"{type_out} AS taxi_type", "date", "CAST(pickup_place AS STRING) AS pickup_place",
         *HOUR_COLUMNS,
     )
     return wide, ingest_obs, having_obs

@@ -27,11 +27,17 @@ literal (path hash) -> ``year*100 + month`` map, built from the group scan's
 own file list (``inputFiles()``, driver-side). A group whose input paths
 number more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
 (32) is listed by one parallel Spark job when its scan is built.
+
+Expressions are SQL text (``F.expr``) parsed once in the JVM: each
+``Column``-API call costs several Py4J round trips (built call by call, the
+lookup took most of 10 k at 443 files). Paths and labels spliced into SQL go
+through ``sql_string``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from collections import defaultdict
 from dataclasses import dataclass
 from pathlib import PurePosixPath
@@ -40,7 +46,7 @@ from urllib.parse import unquote, urlsplit
 import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.errors import PySparkTypeError
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import (
@@ -131,14 +137,24 @@ def _declared_schema(footer: pa.Schema, ts: TripSchema) -> StructType | None:
         return None
 
 
-def _year_month(raw: DataFrame, inputs: list[str]) -> Column:
-    """``file_year * 100 + file_month`` for each row of the scan ``raw`` over
-    ``inputs``: ``infer_month_from_path`` of the input path that named the
-    row's file (a Spark-written directory input names its part files), NULL
-    where that path names no month. One per-row lookup on
+# spark.read expands Hadoop globs in its paths; escaping the metacharacters
+# makes each path name exactly the file whose footer pyarrow read.
+_GLOB_CHARS = re.compile(r"([\\{}\[\]*?])")
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a SQL string literal (Spark unescapes ``\\``: escape it first)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _year_month(raw: DataFrame, inputs: list[str]) -> str:
+    """SQL text of ``file_year * 100 + file_month`` for each row of the scan
+    ``raw`` over ``inputs``: ``infer_month_from_path`` of the input path that
+    named the row's file (a Spark-written directory input names its part
+    files), NULL where that path names no month. One per-row lookup on
     ``_metadata.file_path``; a literal when the whole scan shares one value."""
     owner = {os.path.abspath(f): f for f in inputs}
-    months: dict[str, int | None] = {}
+    months: dict[str, str] = {}  # path -> SQL int literal or NULL
     for uri in raw.inputFiles():
         scheme, netloc, path, _, _ = urlsplit(uri)
         local = unquote(path)
@@ -149,17 +165,16 @@ def _year_month(raw: DataFrame, inputs: list[str]) -> Column:
         ym = infer_month_from_path(named_by)
         # inputFiles() spells an empty authority out ("file:///p");
         # _metadata.file_path drops it ("file:/p"). Both percent-encode alike.
-        months[uri if netloc else f"{scheme}:{path}"] = ym and ym[0] * 100 + ym[1]
+        key = uri if netloc else f"{scheme}:{path}"
+        months[key] = str(ym[0] * 100 + ym[1]) if ym else "NULL"
     values = set(months.values())
     if len(values) <= 1:
-        return F.lit(values.pop() if values else None).cast("int")
+        return f"CAST({values.pop() if values else 'NULL'} AS INT)"
     # Keyed on the path's 64-bit hash: the map scan compares longs, not
     # strings. Every row's path is one of the keys, so only two keys that
-    # collide could mislead, and create_map raises on a duplicate key.
-    lookup = F.create_map(
-        *[c for k, v in months.items() for c in (F.xxhash64(F.lit(k)), F.lit(v))]
-    )
-    return lookup[F.xxhash64(F.col("_metadata.file_path"))]
+    # collide could mislead, and map() raises on a duplicate key.
+    entries = ", ".join(f"xxhash64({sql_string(k)}), {v}" for k, v in months.items())
+    return f"map({entries})[xxhash64(_metadata.file_path)]"
 
 
 def normalize_trips(
@@ -213,7 +228,8 @@ def normalize_trips(
     )
     parts: list[DataFrame] = []
     for (ts, ttype, decl), group_files in groups.items():
-        raw = spark.read.schema(decl).parquet(*group_files)
+        paths = [_GLOB_CHARS.sub(r"\\\1", f) for f in group_files]
+        raw = spark.read.schema(decl).parquet(*paths)
         dt_type = decl[ts.datetime_col].dataType
         if ts.place_mode == "location":
             loc = F.col(ts.location_col)
@@ -228,9 +244,9 @@ def normalize_trips(
             raw.select(
                 coerce_timestamp(F.col(ts.datetime_col), dt_type).alias("pickup_datetime"),
                 place.alias("pickup_place"),
-                F.lit(ttype).alias("taxi_type"),
-                (ym / 100).cast("int").alias("file_year"),
-                (ym % 100).alias("file_month"),
+                F.expr(f"{sql_string(ttype)} AS taxi_type"),
+                F.expr(f"CAST(({ym}) / 100 AS INT) AS file_year"),
+                F.expr(f"({ym}) % 100 AS file_month"),
             )
         )
 

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
 from taxi_data_datapipeline_spark.operators.pivot import hourly_pivot
-from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
+from taxi_data_datapipeline_spark.sources.ingest import normalize_trips, sql_string
 from taxi_data_datapipeline_spark.sources.paths import infer_month_from_path
 
 
@@ -138,6 +138,44 @@ def test_month_follows_each_rows_input_path(spark, tmp_path):
     for r in rows:
         path = files[int(r["pickup_place"]) - 1]
         assert (r["file_year"], r["file_month"]) == infer_month_from_path(path)
+
+
+def test_month_lookup_quotes_each_path(spark, tmp_path):
+    """Each path is spliced into the lookup's SQL text as a string literal:
+    under a directory named with a quote, a backslash and glob
+    metacharacters, every row still takes its own file's month."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "it's a \\ [dir]"
+    base.mkdir()
+    files = []
+    for month in (1, 2):
+        path = str(base / f"yellow_tripdata_2023-{month:02d}.parquet")
+        files.append(path)
+        pq.write_table(
+            pa.table({
+                "tpep_pickup_datetime": pa.array(
+                    [datetime.datetime(2023, month, 5)] * month, pa.timestamp("us")),
+                "PULocationID": pa.array([month] * month, pa.int32()),
+            }),
+            path,
+        )
+
+    trips, report = normalize_trips(spark, files)
+    assert set(report.resolved) == set(files)
+    rows = trips.collect()
+    assert len(rows) == 3
+    for r in rows:
+        path = files[int(r["pickup_place"]) - 1]
+        assert (r["file_year"], r["file_month"]) == infer_month_from_path(path)
+
+
+def test_sql_string_round_trips(spark):
+    """The SQL parser reads back exactly the text sql_string quoted."""
+    values = ["'", "\\", "\\u0041", "%", "naïve 東京", "it's a \\ dir\\'", ""]
+    row = spark.sql("SELECT " + ", ".join(sql_string(v) for v in values)).first()
+    assert list(row) == values
 
 
 def test_coerce_timestamp_type_dispatch(spark):

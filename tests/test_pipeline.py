@@ -368,3 +368,28 @@ def test_pipeline_schema_check_starts_no_jobs(spark, tmp_path, monkeypatch):
     assert jobs == 0
     assert result == {f: ("tpep_pickup_datetime" if i < 2 else "Trip_Pickup_DateTime")
                       for i, f in enumerate(sorted(files))}
+
+
+def test_plan_build_round_trip_budget(spark, tmp_path):
+    """normalize_trips and build_wide_plan write their expressions as SQL
+    text that the JVM parses once. Built one Column call at a time, the
+    same plan over four files took 3,200-4,000 Py4J round trips."""
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+
+    from taxi_data_datapipeline_spark.plans.pipeline import build_wide_plan
+    from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
+
+    files = _write_two_era_trips(tmp_path)
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counted(self, command):
+        calls.append(1)
+        return send(self, command)
+
+    with mock.patch.object(ClientServerConnection, "send_command", counted):
+        trips, _ = normalize_trips(spark, files, typed_place=True)
+        build_wide_plan(trips, 1, taxi_types=["yellow"])
+    assert 0 < len(calls) < 1000

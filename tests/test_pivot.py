@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from taxi_data_datapipeline_spark.operators.pivot import (
     HOUR_COLUMNS,
@@ -85,3 +86,17 @@ def test_pivot_counts_generic_domain(spark):
     got = {r["k"]: r for r in wide.collect()}
     assert got["x"]["b_1"] == 2 and got["x"]["b_2"] == 0 and got["x"]["b_3"] == 1
     assert got["y"]["b_2"] == 1
+
+
+def test_pivot_counts_quotes_identifiers(spark):
+    """Each aggregate and the HAVING total are SQL text: a bucket column and
+    a prefix that need backticks (a space, a backtick) still name the right
+    columns."""
+    bucket = "hour `of` day"
+    schema = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField(bucket, T.IntegerType())]
+    )
+    df = spark.createDataFrame([("x", 1), ("x", 1), ("x", 2), ("y", 2)], schema)
+    wide = pivot_counts(df, ["k"], bucket, [1, 2], prefix="n `h` ", min_total=2)
+    assert wide.columns == ["k", "n `h` 1", "n `h` 2"]
+    assert [tuple(r) for r in wide.collect()] == [("x", 2, 1)]

@@ -36,6 +36,10 @@ def test_segments_carry_state_across_batches(spark, tmp_path):
     # batch 2: user 1 event at t=40s — closes the (20, 30s) segment ONLY
     # if state carried the last event across the batch boundary
     _write_shard(f"{d}/b.parquet", [(3, 1, "2024-01-01 00:00:40", 30.0)])
+    # The file source orders files by modification time, and two files
+    # written back to back can share one: make b strictly later than a.
+    a_mtime = os.stat(f"{d}/a.parquet").st_mtime
+    os.utime(f"{d}/b.parquet", (a_mtime + 10, a_mtime + 10))
 
     schema = T.StructType(
         [
