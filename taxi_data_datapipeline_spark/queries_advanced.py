@@ -11,7 +11,6 @@ modules.
 from __future__ import annotations
 
 import glob
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -21,6 +20,7 @@ from taxi_data_datapipeline_spark.functions.text import bpe_ish_tokens
 from taxi_data_datapipeline_spark.operators.asof import asof_join
 from taxi_data_datapipeline_spark.queries import load, register, shared
 from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
+from taxi_data_datapipeline_spark.streaming import drain
 
 # --- as-of join ---------------------------------------------------------------
 
@@ -337,8 +337,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- structured streaming -----------------------------------------------------
 
-_stream_counter = itertools.count()
-
 # One state-store partition per ~32 MB of stream-source input. Streaming
 # micro-batches run with AQE DISABLED (MicroBatchExecution), so nothing
 # ever coalesces the session default of shuffle.partitions = core count:
@@ -467,16 +465,7 @@ def q_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    name = f"stream_hourly_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @register(
@@ -1477,16 +1466,7 @@ def q_streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"stream_hopping_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @register(
@@ -1525,16 +1505,7 @@ def q_streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.value").alias("last_value"),
         )
     )
-    name = f"stream_cdc_{next(_stream_counter)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out, "complete")
 
 
 @register(
@@ -1778,16 +1749,7 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"stream_sessions_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @register(
@@ -1994,16 +1956,7 @@ def q_streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    name = f"stream_enrich_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 # --- Markov transition matrix -------------------------------------------------
@@ -2617,16 +2570,7 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = _stream_session(spark, sf_dir, table="documents")
     raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/documents*.parquet")
     deduped = dedup_stream(raw).select("fingerprint")
-    name = f"stream_dedup_{next(_stream_counter)}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(deduped)
 
 
 @register(
@@ -3029,16 +2973,7 @@ def q_streaming_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = _stream_session(spark, sf_dir)
     raw = _stream_events(spark, sf_dir)
     segments = twap_segment_stream(raw)
-    name = f"stream_twap_{next(_stream_counter)}"
-    q = (
-        segments.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    seg = spark.table(name).filter(F.col("dur_us") > 0)
+    seg = drain(segments).filter(F.col("dur_us") > 0)
     return seg.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_intervals"),
         F.sum("dur_us").cast("bigint").alias("total_dur_us"),
@@ -3479,16 +3414,7 @@ def q_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("win"), "bucket")
         .agg(F.max("rho").alias("mr"))
     )
-    name = f"stream_hll_{next(_stream_counter)}"
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    drained = spark.table(name).select(
+    drained = drain(regs, "complete").select(
         F.col("win.start").cast("date").alias("day"), "bucket", "mr"
     )
     per_day = drained.groupBy("day").agg(
@@ -4674,16 +4600,7 @@ def q_streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = _stream_events(spark, sf_dir).select("user_id", "ts")
     sessions = sessionize_stream_tws(raw, gap_seconds=30 * 60)
-    name = f"stream_tws_{next(_stream_counter)}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return drain(sessions, "update").select(
         "user_id",
         "session_start",
         "session_end",

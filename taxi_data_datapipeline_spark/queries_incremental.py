@@ -33,8 +33,6 @@ re-expression of that contract — same final table, bounded per-batch work.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,9 +41,8 @@ from taxi_data_datapipeline_spark.queries_advanced import (
     _stream_events,
     _stream_session,
 )
+from taxi_data_datapipeline_spark.streaming import drain
 from taxi_data_datapipeline_spark.streaming.joins import interval_join
-
-_sink_counter = itertools.count()
 
 
 # ---------------------------------------------------------------------------
@@ -92,16 +89,7 @@ def q_streaming_interval_attribution(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("r.ts").alias("purchase_ts"),
         F.col("r.value").alias("value"),
     )
-    name = f"stream_attr_{next(_sink_counter)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined)
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,7 @@ from taxi_data_datapipeline_spark.functions.text import (
     quality_features,
 )
 from taxi_data_datapipeline_spark.queries import load, register, shared
+from taxi_data_datapipeline_spark.streaming import drain
 
 # Same tokenizer contracts as queries_advanced / queries_data.
 _SQL_SUBTOKS = (
@@ -1923,11 +1924,8 @@ def q_streaming_geohash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY, which is the oracle. Spatial hot cells are the canonical
     streaming skew case; the state store keys on the cell string exactly
     as a batch shuffle would."""
-    import itertools as _it
-
     from taxi_data_datapipeline_spark.functions.geo import geohash_col
     from taxi_data_datapipeline_spark.queries_advanced import (
-        _stream_counter,
         _stream_events,
         _stream_session,
     )
@@ -1941,16 +1939,7 @@ def q_streaming_geohash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"stream_geohash_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 # --- cohort lifetime value ----------------------------------------------------
@@ -2496,7 +2485,6 @@ def q_streaming_record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point micro-units so the stream and the batch plan cannot
     disagree in the last float ulp."""
     from taxi_data_datapipeline_spark.queries_advanced import (
-        _stream_counter,
         _stream_events,
         _stream_session,
     )
@@ -2507,16 +2495,7 @@ def q_streaming_record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = _stream_session(spark, sf_dir)
     raw = _stream_events(spark, sf_dir)
     highs = record_high_stream(raw)
-    name = f"stream_highs_{next(_stream_counter)}"
-    q = (
-        highs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(highs)
 
 
 # --- PCA by fixed-point power iteration ---------------------------------------
@@ -4262,10 +4241,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     third execution architecture (streaming/dedup.py:
     lsh_incremental_stream). Multi-band duplicate candidates drop via
     answer-sized dropDuplicates state."""
-    from taxi_data_datapipeline_spark.queries_advanced import (
-        _stream_counter,
-        _stream_session,
-    )
+    from taxi_data_datapipeline_spark.queries_advanced import _stream_session
     from taxi_data_datapipeline_spark.streaming.dedup import (
         build_old_buckets,
         lsh_incremental_stream,
@@ -4276,24 +4252,14 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     old_buckets = build_old_buckets(
         docs.filter(F.col("doc_id") % 5 != 0)
     ).localCheckpoint(eager=True)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     new_stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{sf_dir}/documents*.parquet")
         .filter(F.col("doc_id") % 5 == 0)
     )
     out = lsh_incremental_stream(new_stream, old_buckets)
-    name = f"stream_incdedup_{next(_stream_counter)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out)
 
 
 # --- Pareto revenue concentration ---------------------------------------------

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from taxi_data_datapipeline_spark.streaming import drain
+
 DOC_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -83,26 +85,16 @@ def dedup_stream_within_watermark(docs: DataFrame, watermark: str = "24 hours") 
 def run_dedup_to_memory(
     spark: SparkSession,
     input_dir: str,
-    table_name: str = "dedup_docs",
     bounded: bool = False,
     watermark: str = "24 hours",
     schema: T.StructType = DOC_STREAM_SCHEMA,
 ) -> DataFrame:
-    """Drain all available shards through the dedup stream (AvailableNow)
-    into an in-memory sink; returns the surviving first-seen documents."""
+    """Drain all available shards through the dedup stream (AvailableNow);
+    returns the surviving first-seen documents."""
     docs = read_doc_stream(spark, input_dir, schema=schema)
-    stream = (
+    return drain(
         dedup_stream_within_watermark(docs, watermark) if bounded else dedup_stream(docs)
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table_name)
 
 
 def lsh_incremental_stream(

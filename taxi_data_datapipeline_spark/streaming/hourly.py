@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from taxi_data_datapipeline_spark.streaming import drain
+
 TRIP_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("pickup_datetime", T.TimestampType()),
@@ -86,24 +88,15 @@ def hourly_counts_stream(
 def run_stream_to_memory(
     spark: SparkSession,
     input_dir: str,
-    table_name: str = "hourly_counts",
     watermark: str = "2 hours",
     schema: T.StructType = TRIP_STREAM_SCHEMA,
 ) -> DataFrame:
     """Drain all currently-available files through the streaming plan
-    (``Trigger.AvailableNow`` semantics) into an in-memory sink, then return
-    the result as a batch DataFrame. Test/demo harness; production would
+    (``Trigger.AvailableNow`` semantics) and return the result as a batch
+    DataFrame. Test/demo harness; production would
     ``writeStream.format("parquet")`` with a checkpoint dir.
     """
     stream = hourly_counts_stream(
         read_trip_stream(spark, input_dir, schema=schema), watermark=watermark
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table_name)
+    return drain(stream, "complete")

@@ -12,6 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from taxi_data_datapipeline_spark.streaming import drain
 from taxi_data_datapipeline_spark.streaming.sessions_tws import sessionize_stream_tws
 
 try:  # transformWithState worker protocol dependency
@@ -52,15 +53,7 @@ def test_tws_sessionizer(spark, tws_stream_dir):
     )
     events = spark.readStream.schema("user_id long, ts timestamp").parquet(tws_stream_dir)
     sessions = sessionize_stream_tws(events, gap_seconds=30 * 60)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("t_tws_sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_tws_sessions").collect()
+    rows = drain(sessions, "update").collect()
     assert len(rows) == 1  # only user 1's first session closed
     r = rows[0]
     assert (r.user_id, r.n_events) == (1, 2)

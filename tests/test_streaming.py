@@ -33,7 +33,7 @@ def trip_stream_dir(tmp_path_factory):
 
 
 def test_hourly_counts_stream(spark, trip_stream_dir):
-    out = run_stream_to_memory(spark, trip_stream_dir, table_name="t_hourly")
+    out = run_stream_to_memory(spark, trip_stream_dir)
     got = {
         (r.taxi_type, r.pickup_place, r.window_start.hour): r.cnt
         for r in out.collect()

@@ -74,7 +74,7 @@ def crawl_dir(tmp_path_factory):
 
 
 def test_unbounded_dedup_keeps_first_sighting_only(spark, crawl_dir):
-    out = run_dedup_to_memory(spark, crawl_dir, table_name="t_dedup_all")
+    out = run_dedup_to_memory(spark, crawl_dir)
     ids = sorted(r.doc_id for r in out.collect())
     # doc 3 is a dup of 1 (case/whitespace-normalized), doc 5 a dup of 2 —
     # both suppressed regardless of how much later they arrive
@@ -84,7 +84,7 @@ def test_unbounded_dedup_keeps_first_sighting_only(spark, crawl_dir):
 def test_streaming_matches_batch_fingerprint_tier(spark, crawl_dir):
     from taxi_data_datapipeline_spark.streaming.dedup import fingerprint_expr
 
-    out = run_dedup_to_memory(spark, crawl_dir, table_name="t_dedup_batchcmp")
+    out = run_dedup_to_memory(spark, crawl_dir)
     batch_fps = {
         r.fingerprint
         for r in spark.read.parquet(crawl_dir).select(fingerprint_expr()).collect()
@@ -94,9 +94,7 @@ def test_streaming_matches_batch_fingerprint_tier(spark, crawl_dir):
 
 
 def test_watermark_bounded_dedup_forgets_old_fingerprints(spark, crawl_dir):
-    out = run_dedup_to_memory(
-        spark, crawl_dir, table_name="t_dedup_wm", bounded=True, watermark="24 hours"
-    )
+    out = run_dedup_to_memory(spark, crawl_dir, bounded=True, watermark="24 hours")
     ids = sorted(r.doc_id for r in out.collect())
     # doc 3 (5h after doc 1) still suppressed; doc 5 (3 days after doc 2)
     # falls outside the suppression window and survives as a "new" sighting

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import types as T
 
+from taxi_data_datapipeline_spark.streaming import drain
 from taxi_data_datapipeline_spark.streaming.joins import view_purchase_attribution
 
 EVENT_SCHEMA = T.StructType(
@@ -67,17 +68,9 @@ def test_stream_join_equals_batch_join(spark, stream_dirs):
     vdir, pdir = stream_dirs
     vs = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", "1").parquet(vdir)
     ps = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", "1").parquet(pdir)
-    q = (
-        view_purchase_attribution(vs, ps, window="1 hour")
-        .writeStream.format("memory")
-        .queryName("t_ssjoin")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     stream_rows = {
-        (r.view_id, r.purchase_id) for r in spark.table("t_ssjoin").collect()
+        (r.view_id, r.purchase_id)
+        for r in drain(view_purchase_attribution(vs, ps, window="1 hour")).collect()
     }
 
     batch = view_purchase_attribution(

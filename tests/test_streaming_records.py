@@ -11,6 +11,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import types as T
 
+from taxi_data_datapipeline_spark.streaming import drain
 from taxi_data_datapipeline_spark.streaming.records import record_high_stream
 
 
@@ -56,17 +57,7 @@ def test_record_highs_carry_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
     )
-    q = (
-        record_high_stream(stream)
-        .writeStream.format("memory")
-        .queryName("record_highs_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     got = sorted(
-        (r.event_id, r.vunits)
-        for r in spark.table("record_highs_test").collect()
+        (r.event_id, r.vunits) for r in drain(record_high_stream(stream)).collect()
     )
     assert got == [(1, 10_000_000), (2, 30_000_000), (6, 31_000_000)]

@@ -7,6 +7,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from taxi_data_datapipeline_spark.streaming import drain
 from taxi_data_datapipeline_spark.streaming.sessions import sessionize_stream
 
 
@@ -38,15 +39,7 @@ def test_sessionize_stream_gap_close(spark, session_stream_dir):
         .parquet(session_stream_dir)
     )
     sessions = sessionize_stream(events, gap_seconds=30 * 60)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("t_sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_sessions").collect()
+    rows = drain(sessions, "update").collect()
     # Only user 1's FIRST session closed (by gap); the open sessions stay in state.
     assert len(rows) == 1
     r = rows[0]

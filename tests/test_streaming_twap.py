@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from taxi_data_datapipeline_spark.streaming import drain
 from taxi_data_datapipeline_spark.streaming.twap import (
     SEGMENT_SCHEMA,
     twap_segment_stream,
@@ -54,17 +55,7 @@ def test_segments_carry_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
     )
-    q = (
-        twap_segment_stream(stream)
-        .writeStream.format("memory")
-        .queryName("twap_segments_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     segs = sorted(
-        (r.vunits, r.dur_us)
-        for r in spark.table("twap_segments_test").collect()
+        (r.vunits, r.dur_us) for r in drain(twap_segment_stream(stream)).collect()
     )
     assert segs == [(10_000_000, 10_000_000), (20_000_000, 30_000_000)]
