@@ -6,12 +6,25 @@ Designed to run over a ``documents(text string)`` table at corpus scale —
 every helper is a scalar/array expression that whole-stage-codegens inside
 the scan projection, so the only shuffles in downstream dedup/similarity
 plans come from their joins, not from feature extraction.
+
+The tokenizer and the shingler are defined once, as SQL text
+(``tokens_sql``, ``shingles_sql``) over a column NAME: every ``Column``-API
+call is at least one Py4J round trip to the JVM, and the shingler's
+zip_with chain built one ``Column`` at a time costs hundreds of them per use
+(thousands for a MinHash signature, which embeds the shingles per
+permutation). As text, the JVM parses the whole expression once. ``tokens``
+and ``ngram_shingles`` are that text as one ``F.expr``; callers that write
+their own SQL (the MinHash band builder in ``operators/dedup.py``) splice
+the text itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from taxi_data_datapipeline_spark.operators.pivot import sql_ident
+from taxi_data_datapipeline_spark.sources.ingest import sql_string
 
 # Tiny per-language stopword signatures for the heuristic language vote.
 # Deliberately small + transparent: this is the cheap n-gram/stopword tier
@@ -25,9 +38,18 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization (empty strings removed)."""
-    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
+# Through sql_string: Spark's parser unescapes backslashes in a literal.
+_WHITESPACE = sql_string(r"\s+")
+
+
+def tokens_sql(column: str) -> str:
+    """SQL text of the whitespace tokenization of ``column`` (empty strings
+    removed)."""
+    return f"filter(split({sql_ident(column)}, {_WHITESPACE}), t -> t != '')"
+
+
+def tokens(column: str) -> Column:
+    return F.expr(tokens_sql(column))
 
 
 def bpe_ish_tokens(text: Column) -> Column:
@@ -38,12 +60,13 @@ def bpe_ish_tokens(text: Column) -> Column:
     )
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
+def token_count(column: str) -> Column:
+    return F.size(tokens(column))
 
 
-def ngram_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array<string>.
+def shingles_sql(column: str, n: int = 3) -> str:
+    """SQL text of the distinct word n-gram shingles of ``column``, an
+    array<string>.
 
     Documents shorter than n tokens yield a single whole-text shingle so
     they still participate in dedup instead of silently vanishing.
@@ -54,22 +77,29 @@ def ngram_shingles(text: Column, n: int = 3) -> Column:
     n-gram position re-splits the whole document — O(len^2) per doc.
     zip_with evaluates each slice once, keeping shingling linear.
     """
-    toks = tokens(text)
-    m = F.size(toks) - (n - 1)  # number of n-gram positions
-    grams = F.slice(toks, 1, m)
+    toks = tokens_sql(column)
+    m = f"size({toks}) - {n - 1}"  # number of n-gram positions
+    grams = f"slice({toks}, 1, {m})"
     for k in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(toks, k + 1, m), lambda a, b: F.concat_ws(" ", a, b)
+        grams = (
+            f"zip_with({grams}, slice({toks}, {k + 1}, {m}),"
+            " (a, b) -> concat_ws(' ', a, b))"
         )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(F.array(F.concat_ws(" ", toks)))
+    return (
+        f"array_distinct(CASE WHEN size({toks}) >= {n} THEN {grams}"
+        f" ELSE array(concat_ws(' ', {toks})) END)"
     )
 
 
-def quality_features(text: Column) -> dict[str, Column]:
+def ngram_shingles(column: str, n: int = 3) -> Column:
+    return F.expr(shingles_sql(column, n))
+
+
+def quality_features(column: str) -> dict[str, Column]:
     """Length / punctuation / stopword ratio features (all doubles, rounded
     for cross-engine parity)."""
-    toks = tokens(text)
+    text = F.col(column)
+    toks = tokens(column)
     n_tok = F.size(toks)
     n_chars = F.length(text)
     punct = F.length(F.regexp_replace(text, r"[^\.,;:!\?]", ""))
@@ -84,10 +114,10 @@ def quality_features(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_score(text: Column) -> Column:
+def quality_score(column: str) -> Column:
     """Composite [0,1] quality score: rewards mid-length docs with sane word
     lengths and some stopwords (prose-ness), penalizes punctuation soup."""
-    f = quality_features(text)
+    f = quality_features(column)
     len_ok = F.when((f["n_tokens"] >= 10) & (f["n_tokens"] <= 100000), 0.25).otherwise(0.0)
     wl_ok = F.when((f["avg_word_len"] >= 2.0) & (f["avg_word_len"] <= 12.0), 0.25).otherwise(0.0)
     stop_ok = F.when(f["stopword_ratio"] >= 0.01, 0.25).otherwise(0.0)
@@ -95,16 +125,16 @@ def quality_score(text: Column) -> Column:
     return F.round(len_ok + wl_ok + stop_ok + punct_ok, 2)
 
 
-def lang_votes(text: Column) -> dict[str, Column]:
+def lang_votes(column: str) -> dict[str, Column]:
     """Per-language stopword hit counts."""
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
+    toks = F.transform(tokens(column), lambda t: F.lower(t))
     return {
         lang: F.size(F.filter(toks, lambda t: t.isin(words)))
         for lang, words in LANG_STOPWORDS.items()
     }
 
 
-def lang_id(text: Column, default: str = "en") -> Column:
+def lang_id(column: str, default: str = "en") -> Column:
     """Argmax language vote with deterministic alphabetical tie-break;
     ``default`` when no stopword hits at all.
 
@@ -114,7 +144,7 @@ def lang_id(text: Column, default: str = "en") -> Column:
     vote expression inside the next comparison, duplicating the tokenizer
     exponentially in the number of languages.
     """
-    votes = lang_votes(text)
+    votes = lang_votes(column)
     entries = [
         F.struct(v.alias("v"), F.lit(-i).alias("ni"), F.lit(lang).alias("lang"))
         for i, (lang, v) in enumerate(sorted(votes.items()))

@@ -13,7 +13,9 @@ Four tiers, each a pure DataFrame plan:
 
 Everything is built from Spark array/hash expressions (xxhash64, transform,
 aggregate) — no Python UDFs anywhere, so the whole feature extraction stays
-in whole-stage codegen.
+in whole-stage codegen. The MinHash/LSH tier is written as SQL text
+(``lsh_buckets``, ``jaccard_sql``), which the JVM parses once per
+projection instead of one Py4J round trip per ``Column`` call.
 
 Algorithms are the standard public constructions: MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
@@ -28,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from taxi_data_datapipeline_spark.functions.text import fingerprint, ngram_shingles
+from taxi_data_datapipeline_spark.functions.text import (
+    fingerprint,
+    ngram_shingles,
+    shingles_sql,
+)
+from taxi_data_datapipeline_spark.operators.pivot import sql_ident
 
 
 def exact_dedup(
@@ -50,17 +57,60 @@ def exact_dedup(
     )
 
 
-def minhash_signature(text: Column, num_perm: int = 32, ngram: int = 3) -> Column:
-    """Array of ``num_perm`` minhash values over distinct word n-grams.
+def _minhash_sql(grams: str, num_perm: int, per_row: bool = True) -> list[str]:
+    """SQL text of ``num_perm`` minhash values over the shingles ``grams``.
 
     Permutation i is xxhash64(shingle, i) — a seeded 64-bit hash per
-    shingle; the min over shingles approximates a random permutation's
-    first element (standard MinHash construction).
+    shingle (i is an INT literal, the same as ``F.lit(i)``); the min over
+    shingles approximates a random permutation's first element (standard
+    MinHash construction). ``per_row``: ``grams`` is a row's shingle array
+    and each value one array_min; otherwise ``grams`` holds one shingle per
+    row and each value is a ``min`` aggregate over a group of rows.
     """
-    grams = ngram_shingles(text, ngram)
-    return F.array(
-        *[F.array_min(F.transform(grams, lambda g: F.xxhash64(g, F.lit(i)))) for i in range(num_perm)]
+    if per_row:
+        form = "array_min(transform({}, g -> xxhash64(g, {})))"
+    else:
+        form = "min(xxhash64({}, {}))"
+    return [form.format(grams, i) for i in range(num_perm)]
+
+
+def lsh_buckets(
+    df: DataFrame,
+    keys: list[str],
+    grams: str,
+    num_perm: int = 32,
+    bands: int = 8,
+    per_row: bool = True,
+) -> DataFrame:
+    """(band, bh, *keys): one LSH bucket row per band of each key's MinHash
+    signature, written as SQL text (the JVM parses each projection once).
+
+    Signature value m_i is ``_minhash_sql`` over column ``grams``: per row
+    (a shingle array beside ``keys``) or aggregated per ``keys`` over an
+    exploded shingle column. Band b's key bh is xxhash64 over its
+    ``num_perm // bands`` consecutive values.
+    """
+    rows = num_perm // bands
+    mins = _minhash_sql(sql_ident(grams), num_perm, per_row)
+    mins = [f"{m} AS m{i}" for i, m in enumerate(mins)]
+    sig = (
+        df.selectExpr(*map(sql_ident, keys), *mins)
+        if per_row
+        else df.groupBy(*keys).agg(*map(F.expr, mins))
     )
+    band_keys = ", ".join(
+        f"named_struct('band', {b}, 'bh', xxhash64("
+        + ", ".join(f"m{b * rows + r}" for r in range(rows))
+        + "))"
+        for b in range(bands)
+    )
+    return sig.selectExpr(f"inline(array({band_keys}))", *map(sql_ident, keys))
+
+
+def minhash_signature(column: str, num_perm: int = 32, ngram: int = 3) -> Column:
+    """Array of ``num_perm`` minhash values over distinct word n-grams."""
+    mins = _minhash_sql(shingles_sql(column, ngram), num_perm)
+    return F.expr(f"array({', '.join(mins)})")
 
 
 def minhash_lsh_pairs(
@@ -97,7 +147,6 @@ def minhash_lsh_pairs(
     through their low-id representatives, which is what downstream
     connected-components grouping needs. None = no cap (exact everywhere).
     """
-    rows = num_perm // bands
     # The corpus-wide gram frame is NEVER materialized: caching 10^6+
     # Java string arrays (≈3 KB/doc deserialized) hit a GC cliff between
     # 1.6 M and 3.2 M docs (LSH stage 19 s -> 200 s at 2x the data in the
@@ -105,32 +154,18 @@ def minhash_lsh_pairs(
     # signature aggregation — one pass over the corpus, nothing cached —
     # and the verification join below re-shingles ONLY the candidate
     # documents (a semi-join-pruned, candidate-sized set).
-    grams = df.select(
-        F.col(id_col).alias("_gid"),
-        ngram_shingles(F.col(text_col), ngram).alias("grams"),
-    )
     # Explode-then-aggregate minhash: the num_perm seeded mins run as
     # codegen'd hash-aggregate columns with map-side partial aggregation —
     # vs. num_perm interpreted array traversals (each re-deriving the
     # shingle array) in the naive array_min(transform(...)) formulation.
-    exploded = grams.select(
-        F.col("_gid").alias("_id"), F.explode("grams").alias("gram")
+    exploded = df.selectExpr(
+        f"{sql_ident(id_col)} AS _id", f"explode({shingles_sql(text_col, ngram)}) AS gram"
     )
-    sig = exploded.groupBy("_id").agg(
-        *[F.min(F.xxhash64("gram", F.lit(i))).alias(f"m{i}") for i in range(num_perm)]
-    )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col(f"m{b * rows + r}") for r in range(rows)]).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    buckets = sig.select("_id", F.explode(F.array(*band_cols)).alias("bk"))
+    buckets = lsh_buckets(exploded, ["_id"], "gram", num_perm, bands, per_row=False)
     pairs = (
-        _pairs_expr(F.col("ids"))
+        _pairs_sql("ids")
         if max_bucket_fanout is None
-        else _capped_pairs_expr(F.col("ids"), max_bucket_fanout)
+        else _capped_pairs_sql("ids", max_bucket_fanout)
     )
     # Candidates are the SMALL frame (bounded by banding collisions +
     # the fanout cap): checkpoint them, then re-shingle just the docs
@@ -139,77 +174,59 @@ def minhash_lsh_pairs(
     # cached state is candidate-sized. localCheckpoint (not persist):
     # block cleanup is reference-tracked (the r3 ADVICE leak class).
     cands = (
-        buckets.groupBy("bk")
+        buckets.groupBy("band", "bh")
         .agg(F.collect_set("_id").alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        .filter("size(ids) > 1")
+        .selectExpr(f"inline({pairs}) AS (doc_a, doc_b)")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    cand_ids = cands.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("_gid")
-    ).distinct()
+    cand_ids = cands.selectExpr("explode(array(doc_a, doc_b)) AS _gid").distinct()
     cand_grams = (
         df.join(cand_ids, F.col(id_col) == F.col("_gid"), "left_semi")
-        .select(
-            F.col(id_col).alias("_gid"),
-            ngram_shingles(F.col(text_col), ngram).alias("grams"),
-        )
+        .selectExpr(f"{sql_ident(id_col)} AS _gid", f"{shingles_sql(text_col, ngram)} AS grams")
         .localCheckpoint(eager=True)
     )
-    ga, gb = cand_grams.alias("ga"), cand_grams.alias("gb")
-    verified = (
-        cands.join(ga, F.col("doc_a") == F.col("ga._gid"))
-        .join(gb, F.col("doc_b") == F.col("gb._gid"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("ga.grams", "gb.grams")).cast("double")
-                / F.size(F.array_union("ga.grams", "gb.grams")),
-                6,
-            ).alias("jaccard"),
-        )
+    return (
+        cands.join(cand_grams.selectExpr("_gid AS doc_a", "grams AS ga"), "doc_a")
+        .join(cand_grams.selectExpr("_gid AS doc_b", "grams AS gb"), "doc_b")
+        .selectExpr("doc_a", "doc_b", f"{jaccard_sql('ga', 'gb')} AS jaccard")
+        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
     )
-    return verified.filter(F.col("jaccard") >= jaccard_threshold)
 
 
-def _capped_pairs_expr(ids: Column, fanout: int) -> Column:
-    """(a,b) pairs with a<b where a is one of the ``fanout`` smallest ids.
+def jaccard_sql(a: str, b: str) -> str:
+    """SQL text of the exact Jaccard of two distinct-shingle array columns,
+    rounded to 6 digits for cross-engine parity."""
+    return (
+        f"round(CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+        f" / size(array_union({a}, {b})), 6)"
+    )
+
+
+def _capped_pairs_sql(ids: str, fanout: int) -> str:
+    """SQL text of the (a,b) pairs with a<b from array column ``ids`` where
+    a is one of the ``fanout`` smallest ids.
 
     Equal to the full pair set when the bucket has <= fanout+1 members;
     otherwise each member connects to the low-id representatives only —
     O(k*fanout) edges instead of O(k^2).
     """
-    sorted_ids = F.array_sort(ids)
-    reps = F.slice(sorted_ids, 1, fanout)
-    return F.filter(
-        F.flatten(
-            F.transform(
-                sorted_ids,
-                lambda m: F.transform(
-                    reps, lambda r: F.struct(r.alias("a"), m.alias("b"))
-                ),
-            )
-        ),
-        lambda p: p["a"] < p["b"],
+    return (
+        f"filter(flatten(transform(array_sort({ids}), m ->"
+        f" transform(slice(array_sort({ids}), 1, {fanout}), r -> struct(r AS a, m AS b)))),"
+        " p -> p.a < p.b)"
     )
 
 
-def _pairs_expr(ids: Column) -> Column:
-    """All (a,b) combinations with a<b from an array column, as structs."""
-    sorted_ids = F.array_sort(ids)
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(sorted_ids) - 2),
-            lambda i: F.transform(
-                F.slice(sorted_ids, (i + 2).cast("int"), F.size(sorted_ids)),
-                lambda x: F.struct(
-                    F.element_at(sorted_ids, (i + 1).cast("int")).alias("a"), x.alias("b")
-                ),
-            ),
-        )
+def _pairs_sql(ids: str) -> str:
+    """SQL text of all (a,b) combinations with a<b from array column
+    ``ids``, as structs."""
+    s = f"array_sort({ids})"
+    return (
+        f"flatten(transform(sequence(0, size({s}) - 2), i ->"
+        f" transform(slice({s}, i + 2, size({s})),"
+        f" x -> struct(element_at({s}, i + 1) AS a, x AS b))))"
     )
 
 
@@ -251,7 +268,7 @@ def blocked_jaccard_pairs(
     g = df.select(
         *[F.col(c) for c in block_cols],
         F.col(id_col).alias("_id"),
-        ngram_shingles(F.col(text_col), ngram).alias("grams"),
+        ngram_shingles(text_col, ngram).alias("grams"),
     )
     # Flat (block, id, sz, gram) rows consumed by BOTH self-join sides —
     # materialize so the shingle regex + explode runs once, not once per
@@ -291,14 +308,14 @@ def blocked_jaccard_pairs(
     )
 
 
-def simhash(text: Column, ngram: int = 1, bits: int = 64) -> Column:
+def simhash(column: str, ngram: int = 1, bits: int = 64) -> Column:
     """SimHash fingerprint: per-feature xxhash64, sum +/-1 per bit over all
     features, sign -> bit. Returns a signed 64-bit fingerprint.
 
     Pure array math: for each bit position, count features with that bit
     set vs total; bit set in output iff count*2 > total.
     """
-    feats = ngram_shingles(text, ngram)
+    feats = ngram_shingles(column, ngram)
     hashes = F.transform(feats, lambda g: F.xxhash64(g))
     n = F.size(hashes)
     zeros = F.array_repeat(F.lit(0).cast("long"), bits)
@@ -355,7 +372,7 @@ def simhash_table(
     h, bits = _feature_hash(F.col("gram"), hash_fn)
     feats = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(ngram_shingles(F.col(text_col), ngram)).alias("gram"),
+        F.explode(ngram_shingles(text_col, ngram)).alias("gram"),
     ).select("_id", h.alias("h"))
     aggs = [F.sum(F.getbit("h", F.lit(b))).alias(f"c{b}") for b in range(bits)] + [
         F.count("*").alias("n")
@@ -513,47 +530,28 @@ def minhash_lsh_incremental(
 
     Output: (new_doc, old_doc, jaccard >= threshold).
     """
-    rows = num_perm // bands
-    tagged = old.select(
-        F.col(id_col).alias("_gid"), F.col(text_col).alias("_text"), F.lit(0).alias("_new")
-    ).unionByName(
-        new.select(
-            F.col(id_col).alias("_gid"),
-            F.col(text_col).alias("_text"),
-            F.lit(1).alias("_new"),
-        )
+    cols = (f"{sql_ident(id_col)} AS _gid", f"{sql_ident(text_col)} AS _text")
+    tagged = old.selectExpr(*cols, "0 AS _new").unionByName(
+        new.selectExpr(*cols, "1 AS _new")
     )
     # As in minhash_lsh_pairs: the corpus-wide gram frame is never
     # materialized (the deserialized string arrays hit a GC cliff past
     # ~2M docs); shingling streams through the signature aggregation, and
     # verification re-shingles only candidate docs behind a semi join.
-    grams = tagged.select(
-        "_gid", "_new", ngram_shingles(F.col("_text"), ngram).alias("grams")
+    exploded = tagged.selectExpr(
+        "_gid", "_new", f"explode({shingles_sql('_text', ngram)}) AS gram"
     )
-    exploded = grams.select("_gid", "_new", F.explode("grams").alias("gram"))
-    sig = exploded.groupBy("_gid", "_new").agg(
-        *[F.min(F.xxhash64("gram", F.lit(i))).alias(f"m{i}") for i in range(num_perm)]
-    )
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col(f"m{b * rows + r}") for r in range(rows)]).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    buckets = sig.select(
-        "_gid", "_new", F.explode(F.array(*band_cols)).alias("bk")
+    buckets = lsh_buckets(
+        exploded, ["_gid", "_new"], "gram", num_perm, bands, per_row=False
     )
     # Per bucket: sorted old ids (capped) x new ids -> cross candidates.
-    per_bucket = buckets.groupBy("bk").agg(
-        F.sort_array(
-            F.collect_set(F.when(F.col("_new") == 0, F.col("_gid")))
-        ).alias("all_olds"),
-        F.collect_set(F.when(F.col("_new") == 1, F.col("_gid"))).alias("news"),
-    ).select(
-        F.slice("all_olds", 1, max_old_per_bucket).alias("olds"),
+    per_bucket = buckets.groupBy("band", "bh").agg(
+        F.expr("sort_array(collect_set(CASE WHEN _new = 0 THEN _gid END)) AS all_olds"),
+        F.expr("collect_set(CASE WHEN _new = 1 THEN _gid END) AS news"),
+    ).selectExpr(
+        f"slice(all_olds, 1, {max_old_per_bucket}) AS olds",
         "news",
-        (F.size("all_olds") > max_old_per_bucket).cast("long").alias("capped"),
+        f"CAST(size(all_olds) > {max_old_per_bucket} AS BIGINT) AS capped",
     )
     if observation is not None:
         # Count a truncated bucket only when it could actually cost
@@ -562,54 +560,31 @@ def minhash_lsh_incremental(
         # poison the "zero capped buckets => screen was exhaustive" signal.
         per_bucket = per_bucket.observe(
             observation,
-            F.sum(
-                F.col("capped") * (F.size("news") > 0).cast("long")
-            ).alias("capped_buckets"),
-            F.count(F.lit(1)).alias("buckets"),
+            F.expr("sum(capped * CAST(size(news) > 0 AS BIGINT)) AS capped_buckets"),
+            F.expr("count(1) AS buckets"),
         )
     cands = (
-        per_bucket.filter((F.size("olds") > 0) & (F.size("news") > 0))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(news, n ->"
-                    " transform(olds, o -> struct(n AS new_doc, o AS old_doc))))"
-                )
-            ).alias("p")
+        per_bucket.filter("size(olds) > 0 AND size(news) > 0")
+        .selectExpr(
+            "inline(flatten(transform(news, n ->"
+            " transform(olds, o -> struct(n AS new_doc, o AS old_doc)))))"
         )
-        .select("p.new_doc", "p.old_doc")
         .distinct()
         # Eager: also forces the observe() metrics above to populate on
         # the checkpoint action itself.
         .localCheckpoint(eager=True)
     )
-    cand_ids = cands.select(
-        F.explode(F.array("new_doc", "old_doc")).alias("_cid")
-    ).distinct()
+    cand_ids = cands.selectExpr("explode(array(new_doc, old_doc)) AS _cid").distinct()
     cand_grams = (
         tagged.join(cand_ids, F.col("_gid") == F.col("_cid"), "left_semi")
-        .select("_gid", ngram_shingles(F.col("_text"), ngram).alias("grams"))
+        .selectExpr("_gid", f"{shingles_sql('_text', ngram)} AS grams")
         .localCheckpoint(eager=True)
     )
-    ga = cand_grams.select(
-        F.col("_gid").alias("old_doc"), F.col("grams").alias("og")
-    )
-    gb = cand_grams.select(
-        F.col("_gid").alias("new_doc"), F.col("grams").alias("ng")
-    )
     return (
-        cands.join(ga, "old_doc")
-        .join(gb, "new_doc")
-        .select(
-            "new_doc",
-            "old_doc",
-            F.round(
-                F.size(F.array_intersect("ng", "og")).cast("double")
-                / F.size(F.array_union("ng", "og")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+        cands.join(cand_grams.selectExpr("_gid AS old_doc", "grams AS og"), "old_doc")
+        .join(cand_grams.selectExpr("_gid AS new_doc", "grams AS ng"), "new_doc")
+        .selectExpr("new_doc", "old_doc", f"{jaccard_sql('ng', 'og')} AS jaccard")
+        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
     )
 
 
@@ -628,7 +603,7 @@ def ranked_gram_index(
 
     g = df.select(
         F.col(id_col).alias("_id"),
-        ngram_shingles(F.col(text_col), ngram).alias("grams"),
+        ngram_shingles(text_col, ngram).alias("grams"),
     )
     ex = g.select(
         "_id", F.size("grams").alias("sz"), F.explode("grams").alias("gram")
@@ -741,7 +716,7 @@ def prefix_filter_jaccard_pairs(
     gsub = (
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
         .join(ids.hint("shuffle_hash"), "_id", "left_semi")  # filter raw docs BEFORE shingling
-        .select("_id", ngram_shingles(F.col("_text"), ngram).alias("grams"))
+        .select("_id", ngram_shingles("_text", ngram).alias("grams"))
     )
     ga = gsub.select(F.col("_id").alias("doc_a"), F.col("grams").alias("_ga"))
     gb = gsub.select(F.col("_id").alias("doc_b"), F.col("grams").alias("_gb"))
@@ -750,16 +725,8 @@ def prefix_filter_jaccard_pairs(
     return (
         cands.join(ga.hint("shuffle_hash"), "doc_a")
         .join(gb.hint("shuffle_hash"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("_ga", "_gb")).cast("double")
-                / F.size(F.array_union("_ga", "_gb")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(t))
+        .selectExpr("doc_a", "doc_b", f"{jaccard_sql('_ga', '_gb')} AS jaccard")
+        .filter(f"jaccard >= {t!r}D")
     )
 
 
@@ -836,7 +803,7 @@ def containment_pairs(
     gsub = (
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
         .join(ids.hint("shuffle_hash"), "_id", "left_semi")
-        .select("_id", ngram_shingles(F.col("_text"), ngram).alias("grams"))
+        .select("_id", ngram_shingles("_text", ngram).alias("grams"))
     )
     ga = gsub.select(F.col("_id").alias("doc_a"), F.col("grams").alias("_ga"))
     gb = gsub.select(F.col("_id").alias("doc_b"), F.col("grams").alias("_gb"))

@@ -418,9 +418,15 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(MICROS) without UTC adjustment infers as TIMESTAMP_NTZ under
     Spark 4 and is cast to the session-zoned TIMESTAMP that watermarks
     require. Glob form: the file-stream source needs a directory basePath,
-    which it infers from the non-glob path prefix."""
+    which it infers from the non-glob path prefix. The raw schema is
+    inferred once per session (``shared``): inferring it is a Spark job."""
     ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = shared(
+        spark,
+        sf_dir,
+        "events_schema",
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
+    )
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -209,7 +209,7 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     sig = (
         d.join(ids.hint("shuffle_hash"), "doc_id", "left_semi")
-        .select("doc_id", F.explode(ngram_shingles(F.col("text"), 3)).alias("gram"))
+        .select("doc_id", F.explode(ngram_shingles("text", 3)).alias("gram"))
         .select(
             "doc_id",
             "gram",
@@ -415,7 +415,7 @@ _SQL_DOC_LOSS = (
 
 def _doc_loss() -> F.Column:
     return F.round(
-        F.log(F.lit(1) + F.col("n_chars") / (F.lit(1.0) + F.size(tokens(F.col("text"))))),
+        F.log(F.lit(1) + F.col("n_chars") / (F.lit(1.0) + F.size(tokens("text")))),
         9,
     ).cast("decimal(28,12)")
 
@@ -514,7 +514,7 @@ def _top_pieces(spark: SparkSession, sf_dir: str):
     # query) the character histogram — materialize so the corpus
     # tokenize+explode+groupBy runs once per query, not per consumer.
     tf = (
-        d.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        d.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .localCheckpoint(eager=True)
@@ -819,7 +819,7 @@ def q_boilerplate_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True)
     n = d.agg(F.count(F.lit(1)).alias("nd"))
     df = (
-        d.select(F.explode(ngram_shingles(F.col("text"), 3)).alias("phrase"))
+        d.select(F.explode(ngram_shingles("text", 3)).alias("phrase"))
         .groupBy("phrase")
         .agg(F.count(F.lit(1)).alias("df"))
     )
@@ -1115,7 +1115,7 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts + one arithmetic expression per doc (map-side, codegen), one
     shuffle to per-source DECIMAL-folded averages."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    n_words = F.size(tokens(F.col("text")))
+    n_words = F.size(tokens("text"))
     n_sents = F.lit(1) + F.regexp_count(F.col("text"), F.lit(r"[.!?]+"))
     n_syll = F.regexp_count(F.lower(F.col("text")), F.lit("[aeiouy]+"))
     flesch = F.round(

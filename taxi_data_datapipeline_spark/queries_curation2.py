@@ -128,7 +128,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "lang",
         "source",
-        F.size(tokens(F.col("text"))).alias("n_words"),
+        F.size(tokens("text")).alias("n_words"),
         F.size(bpe_ish_tokens(F.col("text"))).alias("n_subtoks"),
         F.length("text").alias("n_chars"),
     )
@@ -206,7 +206,7 @@ def q_good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     before summing."""
     d = load(spark, sf_dir, "documents", fan_out=True)
     wc = (
-        d.select(F.explode(tokens(F.col("text"))).alias("t"))
+        d.select(F.explode(tokens("text")).alias("t"))
         .select(F.lower("t").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -304,7 +304,7 @@ def q_ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = d.select(
         "doc_id",
         bucket.alias("bucket"),
-        ngram_shingles(F.col("text")).alias("grams"),
+        ngram_shingles("text").alias("grams"),
     )
     train_g = (
         shingled.filter(F.col("bucket") < 8)
@@ -377,7 +377,7 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row type total broadcasts; the top-30 is TakeOrderedAndProject
     (per-partition heaps), never a global sort."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    toks = F.transform(tokens(F.col("text")), lambda t: F.lower(t))
+    toks = F.transform(tokens("text"), lambda t: F.lower(t))
     base = d.select("doc_id", toks.alias("toks"))
     m = F.greatest(F.lit(0), F.size("toks") - 1)
     pairs = F.zip_with(
@@ -433,40 +433,61 @@ _SCURVE_CONFIGS = [(24, 1), (12, 2), (8, 3), (6, 4), (4, 6), (2, 12)]
 
 
 def _chain_sql(term: str, n: int) -> str:
-    """Left-associated n-fold product — the same IEEE evaluation order the
-    Column chain below uses, so both engines compute bit-identical
-    doubles (pow() implementations may differ; a multiply chain can't)."""
+    """Left-associated n-fold product — one IEEE evaluation order on both
+    engines, so they compute bit-identical doubles (pow() implementations
+    may differ; a multiply chain can't)."""
     out = term
     for _ in range(n - 1):
         out = f"({out} * {term})"
     return out
 
 
-def _scurve_sql() -> str:
-    aggs, selects = [], []
+def _scurve_aggs(one: str = "1.0", half: str = "0.5") -> list[str]:
+    """SQL text of the pair-table aggregate: n_pairs, n_hi and each design's
+    e_all/e_hi/e_lo moments. ``one`` and ``half`` spell the constants 1 and
+    0.5 for the engine: a bare ``1.0`` is a DECIMAL in Spark SQL, so Spark
+    passes ``1.0D``/``0.5D``."""
+    aggs = [
+        "CAST(COUNT(*) AS BIGINT) AS n_pairs",
+        f"CAST(COUNT(CASE WHEN jaccard >= {half} THEN 1 END) AS BIGINT) AS n_hi",
+    ]
     for b, r in _SCURVE_CONFIGS:
         sr = _chain_sql("jaccard", r)
-        p = f"(1.0 - {_chain_sql(f'(1.0 - {sr})', b)})"
+        p = f"CAST(ROUND(({one} - {_chain_sql(f'({one} - {sr})', b)}), 9) AS DECIMAL(28,12))"
         key = f"{b}_{r}"
-        aggs.append(
-            f"CAST(SUM(CAST(ROUND({p}, 9) AS DECIMAL(28,12))) AS DOUBLE)"
-            f" AS e_all_{key},\n"
-            f"  CAST(SUM(CASE WHEN jaccard >= 0.5 THEN CAST(ROUND({p}, 9)"
-            f" AS DECIMAL(28,12)) ELSE CAST(0 AS DECIMAL(28,12)) END)"
-            f" AS DOUBLE) AS e_hi_{key},\n"
-            f"  CAST(SUM(CASE WHEN jaccard < 0.5 THEN CAST(ROUND({p}, 9)"
-            f" AS DECIMAL(28,12)) ELSE CAST(0 AS DECIMAL(28,12)) END)"
-            f" AS DOUBLE) AS e_lo_{key}"
-        )
-        selects.append(
-            f"SELECT {b} AS bands, {r} AS rows_per_band, n_pairs, n_hi,\n"
-            f"       ROUND(e_all_{key}, 6) AS exp_detected,\n"
-            f"       ROUND(e_hi_{key} / n_hi, 6) AS hi_recall,\n"
-            f"       ROUND(e_lo_{key}, 6) AS lo_fp_mass\n"
-            f"FROM agg"
-        )
-    agg_cols = ",\n  ".join(aggs)
-    union = "\nUNION ALL\n".join(selects)
+        aggs += [
+            f"CAST(SUM({p}) AS DOUBLE) AS e_all_{key}",
+            f"CAST(SUM(CASE WHEN jaccard >= {half} THEN {p}"
+            f" ELSE CAST(0 AS DECIMAL(28,12)) END) AS DOUBLE) AS e_hi_{key}",
+            f"CAST(SUM(CASE WHEN jaccard < {half} THEN {p}"
+            f" ELSE CAST(0 AS DECIMAL(28,12)) END) AS DOUBLE) AS e_lo_{key}",
+        ]
+    return aggs
+
+
+def _scurve_row(b: int, r: int) -> list[str]:
+    """SQL text of design (b, r)'s output row over the aggregate."""
+    key = f"{b}_{r}"
+    return [
+        str(b), str(r), "n_pairs", "n_hi", f"ROUND(e_all_{key}, 6)",
+        f"ROUND(e_hi_{key} / n_hi, 6)", f"ROUND(e_lo_{key}, 6)",
+    ]
+
+
+_SCURVE_COLUMNS = (
+    "bands", "rows_per_band", "n_pairs", "n_hi", "exp_detected", "hi_recall",
+    "lo_fp_mass",
+)
+
+
+def _scurve_sql() -> str:
+    agg_cols = ",\n  ".join(_scurve_aggs())
+    union = "\nUNION ALL\n".join(
+        "SELECT "
+        + ", ".join(f"{e} AS {c}" for e, c in zip(_scurve_row(b, r), _SCURVE_COLUMNS))
+        + " FROM agg"
+        for b, r in _SCURVE_CONFIGS
+    )
     return f"""
 WITH g AS (SELECT doc_id, lang, n_chars // 100 AS lenb, {_SQL_GRAMS} AS grams
            FROM documents),
@@ -477,9 +498,7 @@ pairs AS (
       ON a.lang = b.lang AND a.lenb = b.lenb AND a.doc_id < b.doc_id)
   WHERE jaccard >= 0.05),
 agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-  CAST(COUNT(CASE WHEN jaccard >= 0.5 THEN 1 END) AS BIGINT) AS n_hi,
-  {agg_cols}
+  SELECT {agg_cols}
   FROM pairs)
 {union}
 """
@@ -506,59 +525,21 @@ def q_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE pass over the pair table computes all 6 designs'
     moments in a single map-side-combined aggregate (no per-config
-    re-scan); the 6 output rows unpivot from the 1-row aggregate. Pair
-    generation itself is the bounded-quadratic blocked join, already
-    audited in ngram_jaccard_blocked."""
+    re-scan); one stack() unpivots the 6 output rows from the 1-row
+    aggregate. Pair generation itself is the bounded-quadratic blocked
+    join, already audited in ngram_jaccard_blocked. Both the aggregate
+    and the unpivot are the oracle's own SQL text (``_scurve_aggs``,
+    ``_scurve_row``), parsed once by the JVM."""
     from taxi_data_datapipeline_spark.queries_data import blocked_pairs_cached
 
-    pairs = blocked_pairs_cached(spark, sf_dir).select("jaccard")
-
-    def chain(col, n):
-        out = col
-        for _ in range(n - 1):
-            out = out * col
-        return out
-
-    s = F.col("jaccard")
-    dec0 = F.lit(0).cast("decimal(28,12)")
-    aggs = [
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.count(F.when(s >= 0.5, 1)).cast("long").alias("n_hi"),
-    ]
-    for b, r in _SCURVE_CONFIGS:
-        p = F.lit(1.0) - chain(F.lit(1.0) - chain(s, r), b)
-        pd = F.round(p, 9).cast("decimal(28,12)")
-        key = f"{b}_{r}"
-        aggs += [
-            F.sum(pd).cast("double").alias(f"e_all_{key}"),
-            F.sum(F.when(s >= 0.5, pd).otherwise(dec0))
-            .cast("double")
-            .alias(f"e_hi_{key}"),
-            F.sum(F.when(s < 0.5, pd).otherwise(dec0))
-            .cast("double")
-            .alias(f"e_lo_{key}"),
-        ]
-    # ONE row holding all 6 designs' moments — but each unioned output
-    # branch below re-executed the whole pair-generation + aggregate
-    # without this checkpoint (48 document scans / 120 Exchanges in the
-    # un-checkpointed plan: 6 branches x the full blocked-join subtree).
-    agg = pairs.agg(*aggs).localCheckpoint(eager=True)
-    rows = None
-    for b, r in _SCURVE_CONFIGS:
-        key = f"{b}_{r}"
-        row = agg.select(
-            F.lit(b).alias("bands"),
-            F.lit(r).alias("rows_per_band"),
-            "n_pairs",
-            "n_hi",
-            F.round(F.col(f"e_all_{key}"), 6).alias("exp_detected"),
-            F.round(F.col(f"e_hi_{key}") / F.col("n_hi"), 6).alias(
-                "hi_recall"
-            ),
-            F.round(F.col(f"e_lo_{key}"), 6).alias("lo_fp_mass"),
+    rows = ", ".join(e for b, r in _SCURVE_CONFIGS for e in _scurve_row(b, r))
+    return (
+        blocked_pairs_cached(spark, sf_dir)
+        .selectExpr(*_scurve_aggs(one="1.0D", half="0.5D"))
+        .selectExpr(
+            f"stack({len(_SCURVE_CONFIGS)}, {rows}) AS ({', '.join(_SCURVE_COLUMNS)})"
         )
-        rows = row if rows is None else rows.unionByName(row)
-    return rows
+    )
 
 
 # --- perceptual difference-hash (dHash) image dedup ---------------------------
@@ -1032,7 +1013,7 @@ def q_fasttext_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         "doc_id",
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.explode(F.transform(tokens(F.col("text")), lambda t: F.lower(t))).alias(
+        F.explode(F.transform(tokens("text"), lambda t: F.lower(t))).alias(
             "w"
         ),
     ).select("doc_id", "y", bucket.alias("b"))

@@ -337,7 +337,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True)
     return d.select(
         "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
+        token_count("text").alias("n_tokens"),
         F.size(bpe_ish_tokens(F.col("text"))).alias("n_subtokens"),
     )
 
@@ -370,7 +370,7 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality features + composite score (length / word-length /
     stopword / punctuation heuristics)."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    feats = quality_features(F.col("text"))
+    feats = quality_features("text")
     return d.select(
         "doc_id",
         feats["n_tokens"].alias("n_tokens"),
@@ -378,7 +378,7 @@ def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats["avg_word_len"].alias("avg_word_len"),
         feats["punct_ratio"].alias("punct_ratio"),
         feats["stopword_ratio"].alias("stopword_ratio"),
-        quality_score(F.col("text")).alias("quality"),
+        quality_score("text").alias("quality"),
     )
 
 
@@ -414,7 +414,7 @@ def q_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        lang_id(F.col("text")).alias("predicted_lang"),
+        lang_id("text").alias("predicted_lang"),
     )
 
 
@@ -665,7 +665,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan and shares the shuffle between dedup groupBy and the final join."""
     docs = load(spark, sf_dir, "documents", fan_out=True)
     scored = docs.select(
-        "doc_id", "text", quality_score(F.col("text")).alias("quality")
+        "doc_id", "text", quality_score("text").alias("quality")
     ).filter(F.col("quality") >= 0.75)
     dedup = (
         scored.select(
@@ -679,7 +679,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return dedup.join(
-        docs.select("doc_id", token_count(F.col("text")).alias("n_tokens")),
+        docs.select("doc_id", token_count("text").alias("n_tokens")),
         "doc_id",
     ).select("doc_id", "fingerprint", "n_copies", "quality", "n_tokens")
 
@@ -787,7 +787,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    n_tok = token_count(F.col("text"))
+    n_tok = token_count("text")
     return (
         d.select("doc_id", "lang", n_tok.alias("n_tokens"))
         .withColumn("cum_before", F.sum("n_tokens").over(w) - F.col("n_tokens"))
@@ -823,10 +823,10 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan projection — no shuffle at all (and no per-position re-
     tokenization: shingles come from the linear zip_with builder)."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    toks = tokens(F.col("text"))
+    toks = tokens("text")
     n_toks = F.size(toks)
     n_grams = F.when(n_toks >= 3, n_toks - 2).otherwise(1)
-    n_distinct_grams = F.size(ngram_shingles(F.col("text"), 3))
+    n_distinct_grams = F.size(ngram_shingles("text", 3))
     return d.select(
         "doc_id",
         F.round(
@@ -925,7 +925,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — no global sort of the vocabulary at 100 TB."""
     d = load(spark, sf_dir, "documents", fan_out=True)
     return (
-        d.select(F.explode(tokens(F.col("text"))).alias("w"))
+        d.select(F.explode(tokens("text")).alias("w"))
         .select(F.lower(F.col("w")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -1182,7 +1182,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("bigint") % 100
     s = d.select(
         "doc_id",
-        ngram_shingles(F.col("text"), 3).alias("grams"),
+        ngram_shingles("text", 3).alias("grams"),
         F.when(bucket < 80, "train").otherwise("eval").alias("split"),
     )
     train_grams = (
@@ -1292,7 +1292,7 @@ def q_bloom_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = d.select(
         "doc_id",
         "source",
-        ngram_shingles(F.col("text"), 3).alias("grams"),
+        ngram_shingles("text", 3).alias("grams"),
         bucket.alias("b"),
     )
 
@@ -1978,7 +1978,7 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregates.
     """
     docs = load(spark, sf_dir, "documents", fan_out=True)
-    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    toks = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
     # doc-sized length table and query-term tf table each feed two
     # consumers — materialize so the tokenize+explode runs twice (dl,
     # tf), not four times (8 scans / 18 Exchanges in one plan before).
@@ -2196,7 +2196,7 @@ def q_ngram_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents", fan_out=True)
     g = docs.select(
-        "doc_id", F.explode(ngram_shingles(F.col("text"))).alias("gram")
+        "doc_id", F.explode(ngram_shingles("text")).alias("gram")
     )
     nd = F.count(F.lit(1)).over(Window.partitionBy("gram"))
     dup = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
@@ -2624,7 +2624,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         (F.col("lang") == "en").alias("tgt"),
-        F.explode(tokens(F.col("text"))).alias("w"),
+        F.explode(tokens("text")).alias("w"),
     )
     counts = tok.groupBy("w").agg(
         F.sum(F.when(F.col("tgt"), 1).otherwise(0)).alias("ct"),
@@ -3103,7 +3103,7 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True)
     pred = d.select(
         F.col("lang").alias("labeled_lang"),
-        lang_id(F.col("text")).alias("predicted_lang"),
+        lang_id("text").alias("predicted_lang"),
     )
     cells = pred.groupBy("labeled_lang", "predicted_lang").agg(
         F.count(F.lit(1)).alias("n")
@@ -4435,7 +4435,7 @@ def q_lsh_screen_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index truth) is scale-stable."""
     docs = load(spark, sf_dir, "documents", fan_out=True)
     grams = docs.select(
-        "doc_id", ngram_shingles(F.col("text"), 3).alias("grams")
+        "doc_id", ngram_shingles("text", 3).alias("grams")
     ).localCheckpoint(eager=True)
     e = grams.select("doc_id", F.explode("grams").alias("gram"))
     eh = e.select(
@@ -4563,7 +4563,7 @@ def q_nucleus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (95*T+99) DIV 100; both engines truncate)."""
     d = load(spark, sf_dir, "documents", fan_out=True)
     freqs = (
-        d.select("source", F.explode(tokens(F.col("text"))).alias("w"))
+        d.select("source", F.explode(tokens("text")).alias("w"))
         .select("source", F.lower(F.col("w")).alias("word"))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -4903,7 +4903,7 @@ def q_langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         d.select(
             F.col("lang").alias("labeled"),
-            lang_id(F.col("text")).alias("predicted"),
+            lang_id("text").alias("predicted"),
         )
         .groupBy("labeled", "predicted")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -5129,7 +5129,7 @@ def q_rrf_hybrid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("drank"),
     )
     d = load(spark, sf_dir, "documents", fan_out=True)
-    grams = d.select("doc_id", ngram_shingles(F.col("text"), 3).alias("grams"))
+    grams = d.select("doc_id", ngram_shingles("text", 3).alias("grams"))
     g0 = (
         grams.filter(F.col("doc_id") == 0)
         .select(F.explode("grams").alias("gram"))

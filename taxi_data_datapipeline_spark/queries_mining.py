@@ -151,7 +151,7 @@ def q_snm_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_a", "doc_b", (F.col("rn_b") - F.col("rn_a")).cast("long").alias("gap")
     )
-    g = docs.select("doc_id", ngram_shingles(F.col("text"), 3).alias("grams"))
+    g = docs.select("doc_id", ngram_shingles("text", 3).alias("grams"))
     ga = g.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("_ga"))
     gb = g.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("_gb"))
     return (

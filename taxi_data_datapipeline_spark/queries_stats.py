@@ -442,7 +442,7 @@ def q_quality_rule_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_scores query can never disagree. Single corpus scan, one
     source-keyed rollup."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    feats = quality_features(F.col("text"))
+    feats = quality_features("text")
     flags = d.select(
         "source",
         feats["n_tokens"].alias("n_tokens"),
@@ -3833,7 +3833,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents", fan_out=True)
     sh = docs.select(
-        F.explode(ngram_shingles(F.col("text"), 3)).alias("g"), "source"
+        F.explode(ngram_shingles("text", 3)).alias("g"), "source"
     ).distinct()
     a = sh.select("g", F.col("source").alias("source_a"))
     b = sh.select(F.col("g").alias("g2"), F.col("source").alias("source_b"))

@@ -18,6 +18,12 @@ Two built-in strategies, chosen by whether arrivals carry an event time:
 
 The fingerprint is the same normalized-text md5 as the batch operator
 (``operators/dedup.py``), so streaming and batch tiers agree on identity.
+
+The LSH screen's shingles, MinHash signature, band keys and Jaccard check
+are SQL text (``shingles_sql``, ``operators.dedup.lsh_buckets`` and
+``jaccard_sql``, shared with the batch tier), parsed once by the JVM: built
+from ``Column`` calls, with a Python lambda per permutation, each side of
+the screen costs about 3,000 Py4J round trips of driver time per query.
 """
 
 from __future__ import annotations
@@ -26,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from taxi_data_datapipeline_spark.functions.text import shingles_sql
+from taxi_data_datapipeline_spark.operators.dedup import jaccard_sql, lsh_buckets
 from taxi_data_datapipeline_spark.streaming import drain
 
 DOC_STREAM_SCHEMA = T.StructType(
@@ -121,56 +129,22 @@ def lsh_incremental_stream(
     dropDuplicates state — keyed by matched pair, which is
     answer-sized, not corpus-sized.
     """
-    from taxi_data_datapipeline_spark.functions.text import ngram_shingles
-
-    rows = num_perm // bands
-    grams = ngram_shingles(F.col("text"), ngram)
     # Streaming aggregation would need a watermark; instead derive the
     # signature per-row with array expressions (each row carries its own
     # grams — no cross-row state required).
-    def _perm(i: int):
-        # Single-argument lambda ONLY: a second parameter (even with a
-        # bound default) makes transform() pass the ARRAY INDEX as the
-        # second argument, silently replacing the permutation seed.
-        return lambda g: F.xxhash64(g, F.lit(i))
-
-    mins = [
-        F.array_min(F.transform(F.col("new_grams"), _perm(i))).alias(f"m{i}")
-        for i in range(num_perm)
-    ]
-    sig = new_docs.select(
-        F.col("doc_id").alias("new_doc"), grams.alias("new_grams")
-    ).select("new_doc", "new_grams", *mins)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col(f"m{b * rows + r}") for r in range(rows)]).alias(
-                "bh"
-            ),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        "new_doc",
+    banded = lsh_buckets(
+        new_docs.selectExpr("doc_id AS new_doc", f"{shingles_sql('text', ngram)} AS new_grams"),
+        ["new_doc", "new_grams"],
         "new_grams",
-        F.explode(F.array(*band_cols)).alias("bk"),
-    ).select(
-        "new_doc",
-        "new_grams",
-        F.col("bk.band").alias("band"),
-        F.col("bk.bh").alias("bh"),
+        num_perm,
+        bands,
     )
-    joined = banded.join(old_buckets, ["band", "bh"])
-    verified = joined.select(
-        "new_doc",
-        "old_doc",
-        F.round(
-            F.size(F.array_intersect("new_grams", "old_grams")).cast("double")
-            / F.size(F.array_union("new_grams", "old_grams")),
-            6,
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= jaccard_threshold)
-    return verified.dropDuplicates(["new_doc", "old_doc"])
+    return (
+        banded.join(old_buckets, ["band", "bh"])
+        .selectExpr("new_doc", "old_doc", f"{jaccard_sql('new_grams', 'old_grams')} AS jaccard")
+        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
+        .dropDuplicates(["new_doc", "old_doc"])
+    )
 
 
 def build_old_buckets(
@@ -182,41 +156,15 @@ def build_old_buckets(
     """The static side for ``lsh_incremental_stream``: (band, bh,
     old_doc, old_grams) — in production a table the batch pipeline
     maintains per ingest."""
-    from taxi_data_datapipeline_spark.functions.text import ngram_shingles
-
-    rows = num_perm // bands
-    grams = ngram_shingles(F.col("text"), ngram)
     # Kept as per-row array expressions (NOT the batch tier's
     # explode+groupBy): the explode form was measured NEUTRAL here and
     # adds a full shuffle of the exploded gram stream, while this form
     # is mapper-only — the better shape for a static side that a batch
     # pipeline rebuilds per ingest.
-    def _perm(i: int):
-        return lambda g: F.xxhash64(g, F.lit(i))  # see lsh_incremental_stream
-
-    mins = [
-        F.array_min(F.transform(F.col("old_grams"), _perm(i))).alias(f"m{i}")
-        for i in range(num_perm)
-    ]
-    sig = old_docs.select(
-        F.col("doc_id").alias("old_doc"), grams.alias("old_grams")
-    ).select("old_doc", "old_grams", *mins)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[F.col(f"m{b * rows + r}") for r in range(rows)]).alias(
-                "bh"
-            ),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "old_doc",
+    return lsh_buckets(
+        old_docs.selectExpr("doc_id AS old_doc", f"{shingles_sql('text', ngram)} AS old_grams"),
+        ["old_doc", "old_grams"],
         "old_grams",
-        F.explode(F.array(*band_cols)).alias("bk"),
-    ).select(
-        F.col("bk.band").alias("band"),
-        F.col("bk.bh").alias("bh"),
-        "old_doc",
-        "old_grams",
+        num_perm,
+        bands,
     )

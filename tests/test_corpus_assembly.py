@@ -16,7 +16,7 @@ def test_sequence_packing_conserves_tokens_and_orders_packs(spark):
     packs = QUERIES["sequence_packing"](spark, SF).collect()
     total_packed = sum(r.pack_tokens for r in packs)
     docs = load(spark, SF, "documents").select(
-        token_count(F.col("text")).alias("n")
+        token_count("text").alias("n")
     )
     total_tokens = docs.agg(F.sum("n")).collect()[0][0]
     assert total_packed == total_tokens  # every token lands in exactly one pack
@@ -59,7 +59,7 @@ def test_repetition_ratio_flags_repeated_text(spark):
     )
     from taxi_data_datapipeline_spark.functions.text import ngram_shingles, tokens
 
-    toks = tokens(F.col("text"))
+    toks = tokens("text")
     n_toks = F.size(toks)
     n_grams = F.when(n_toks >= 3, n_toks - 2).otherwise(1)
     out = {
@@ -68,7 +68,7 @@ def test_repetition_ratio_flags_repeated_text(spark):
             "doc_id",
             F.round(1 - F.size(F.array_distinct(toks)).cast("double") / n_toks, 6).alias("dup_tok"),
             F.round(
-                1 - F.size(ngram_shingles(F.col("text"), 3)).cast("double") / n_grams, 6
+                1 - F.size(ngram_shingles("text", 3)).cast("double") / n_grams, 6
             ).alias("dup_tri"),
         ).collect()
     }

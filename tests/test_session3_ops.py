@@ -118,7 +118,7 @@ def test_ngram_dup_fraction_flags_shared_shingles(spark):
         ],
         "doc_id long, text string",
     )
-    g = docs.select("doc_id", F.explode(ngram_shingles(F.col("text"))).alias("gram"))
+    g = docs.select("doc_id", F.explode(ngram_shingles("text")).alias("gram"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("gram"))
     out = {
         r.doc_id: r

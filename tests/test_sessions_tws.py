@@ -45,12 +45,19 @@ def tws_stream_dir(tmp_path_factory):
     return str(base)
 
 
-def test_tws_sessionizer(spark, tws_stream_dir):
-    # transformWithState requires the RocksDB state store provider
+@pytest.fixture()
+def rocksdb_conf(spark):
+    """transformWithState requires the RocksDB state store provider; unset
+    afterwards so later tests run on the session's default store."""
+    key = "spark.sql.streaming.stateStore.providerClass"
     spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
+    yield
+    spark.conf.unset(key)
+
+
+def test_tws_sessionizer(spark, tws_stream_dir, rocksdb_conf):
     events = spark.readStream.schema("user_id long, ts timestamp").parquet(tws_stream_dir)
     sessions = sessionize_stream_tws(events, gap_seconds=30 * 60)
     rows = drain(sessions, "update").collect()

@@ -139,3 +139,23 @@ def test_sessions_tws_sets_no_shared_conf(spark, monkeypatch):
     shared = [spark, *queries_advanced._STREAM_SESSION_CACHE.values()]
     assert [key for conf, key in calls if any(conf is s.conf for s in shared)] == []
     assert out.count() > 0
+
+
+def test_warm_stream_call_runs_jobs_only_in_its_stream(spark):
+    """``_stream_events`` infers the raw events schema once per session, so
+    a warm ``streaming_hourly_counts`` call runs Spark jobs only inside its
+    stream: micro-batch jobs run under the stream's own job group, every
+    other job under the caller's."""
+    from taxi_data_datapipeline_spark.queries import QUERIES
+
+    query = QUERIES["streaming_hourly_counts"]
+    query(spark, SF)  # cold: infers and memoizes the schema
+    sc = spark.sparkContext
+    sc.setJobGroup("outside-stream", "warm streaming_hourly_counts")
+    try:
+        out = query(spark, SF)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup("outside-stream") == []
+    assert out.count() > 0

@@ -100,3 +100,41 @@ def test_watermark_bounded_dedup_forgets_old_fingerprints(spark, crawl_dir):
     # falls outside the suppression window and survives as a "new" sighting
     assert 3 not in ids and 1 in ids and 2 in ids and 4 in ids
     assert 5 in ids
+
+
+def test_lsh_plan_build_round_trip_budget(spark, crawl_dir):
+    """The shingler and the MinHash band builder are SQL text that the JVM
+    parses once. Built one Column call at a time (a Python lambda per
+    permutation), each LSH side took 3,000-4,500 Py4J round trips and the
+    shingles alone 200-370. No action runs here: this is plan assembly."""
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from taxi_data_datapipeline_spark.functions.text import ngram_shingles
+    from taxi_data_datapipeline_spark.streaming.dedup import (
+        build_old_buckets,
+        lsh_incremental_stream,
+        read_doc_stream,
+    )
+
+    old = spark.read.parquet(crawl_dir)
+    stream = read_doc_stream(spark, crawl_dir)
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counted(self, command):
+        # py4j releasing garbage-collected JVM references is not plan assembly.
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls[-1] += 1
+        return send(self, command)
+
+    with mock.patch.object(ClientServerConnection, "send_command", counted):
+        calls.append(0)
+        old_buckets = build_old_buckets(old)
+        calls.append(0)
+        lsh_incremental_stream(stream, old_buckets)
+        calls.append(0)
+        old.select(ngram_shingles("text", 3))
+    assert all(0 < n <= 150 for n in calls), calls

@@ -41,12 +41,30 @@ def docs(spark):
 def test_shingles_edge_cases(spark, docs):
     out = {
         r.doc_id: r.g
-        for r in docs.select("doc_id", ngram_shingles(F.col("text"), 3).alias("g")).collect()
+        for r in docs.select("doc_id", ngram_shingles("text", 3).alias("g")).collect()
     }
     assert out[5] == ["short doc"]  # sub-n doc -> single whole-text shingle
     assert "the quick brown" in out[6]  # repeated whitespace collapses in split
     assert len(out[1]) == len(set(out[1]))  # distinct
     assert set(out[1]) == set(out[2])
+    texts = {
+        # Splits on whitespace only: a regex read as "s+" would split on "s".
+        "s": "ss\tsss s\t\tssss  sass\ts",
+        "empty": "",
+        "quoted": "it's a \\ back\\slash \"quoted\" it's",
+    }
+    frame = spark.createDataFrame(list(texts.items()), "k string, text string")
+    got = {r.k: r.g for r in frame.select("k", ngram_shingles("text", 3).alias("g")).collect()}
+    assert got == {
+        "s": ["ss sss s", "sss s ssss", "s ssss sass", "ssss sass s"],
+        "empty": [""],
+        "quoted": [
+            "it's a \\",
+            "a \\ back\\slash",
+            "\\ back\\slash \"quoted\"",
+            "back\\slash \"quoted\" it's",
+        ],
+    }
 
 
 def test_token_count_and_lang(spark, docs):
@@ -54,8 +72,8 @@ def test_token_count_and_lang(spark, docs):
         r.doc_id: (r.n, r.lang)
         for r in docs.select(
             "doc_id",
-            token_count(F.col("text")).alias("n"),
-            lang_id(F.col("text")).alias("lang"),
+            token_count("text").alias("n"),
+            lang_id("text").alias("lang"),
         ).collect()
     }
     assert rows[5][0] == 2
@@ -105,19 +123,46 @@ def test_minhash_explode_equals_naive_signature(spark, docs):
     naive = {
         r.doc_id: r.sig
         for r in docs.select(
-            "doc_id", minhash_signature(F.col("text"), num_perm=8).alias("sig")
+            "doc_id", minhash_signature("text", num_perm=8).alias("sig")
         ).collect()
     }
     exploded = (
         docs.select(
             "doc_id",
-            F.explode(ngram_shingles(F.col("text"), 3)).alias("gram"),
+            F.explode(ngram_shingles("text", 3)).alias("gram"),
         )
         .groupBy("doc_id")
         .agg(*[F.min(F.xxhash64("gram", F.lit(i))).alias(f"m{i}") for i in range(8)])
     )
     fast = {r.doc_id: [r[f"m{i}"] for i in range(8)] for r in exploded.collect()}
     assert naive == fast
+
+
+def test_lsh_buckets_per_row_equals_aggregate(spark, docs):
+    """Both ``lsh_buckets`` forms give the same bucket rows, and band b's
+    key is xxhash64 over signature values 2b and 2b+1 (8 permutations, 4
+    bands), built here with the Column API as an independent reference."""
+    from taxi_data_datapipeline_spark.operators.dedup import lsh_buckets, minhash_signature
+
+    grams = docs.select("doc_id", ngram_shingles("text", 3).alias("grams"))
+    per_row = lsh_buckets(grams, ["doc_id", "grams"], "grams", 8, 4)
+    exploded = grams.select("doc_id", F.explode("grams").alias("gram"))
+    aggregated = lsh_buckets(exploded, ["doc_id"], "gram", 8, 4, per_row=False)
+    s = F.col("s")
+    reference = docs.select(
+        "doc_id", minhash_signature("text", num_perm=8).alias("s")
+    ).select(
+        "doc_id",
+        F.posexplode(F.array(*[F.xxhash64(s[2 * b], s[2 * b + 1]) for b in range(4)])).alias(
+            "band", "bh"
+        ),
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.select("band", "bh", "doc_id").collect()))
+
+    assert rows(per_row) == rows(aggregated) == rows(reference)
+    assert len(rows(reference)) == 4 * docs.count()
 
 
 def test_simhash_fold_equals_table(spark, docs):
@@ -127,7 +172,7 @@ def test_simhash_fold_equals_table(spark, docs):
 
     fold = {
         r.doc_id: r.sh
-        for r in docs.select("doc_id", simhash(F.col("text"), ngram=3).alias("sh")).collect()
+        for r in docs.select("doc_id", simhash("text", ngram=3).alias("sh")).collect()
     }
     table = {r._id: r.sh for r in simhash_table(docs, ngram=3).collect()}
     assert fold == table

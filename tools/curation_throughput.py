@@ -95,7 +95,7 @@ def main() -> None:
     docs = spark.read.parquet(corpus_dir)
 
     # quality gate
-    gated = docs.filter(quality_score(F.col("text")) >= args.quality)
+    gated = docs.filter(quality_score("text") >= args.quality)
 
     # exact dedup survivorship: keep the min doc_id per normalized text
     survivors = (
@@ -136,7 +136,7 @@ def main() -> None:
             "doc_id",
             "text",
             F.when(nibble < 13, "train").otherwise("val").alias("split"),
-            token_count(F.col("text")).alias("n_tokens"),
+            token_count("text").alias("n_tokens"),
         )
     )
 

@@ -24,6 +24,7 @@ from taxi_data_datapipeline_spark.session import get_spark
 
 SCAN_RE = re.compile(r"Location:.*?/(\w+)\.parquet")
 SCHEMA_RE = re.compile(r"ReadSchema: struct<([^>]*)>")
+STREAM_GLOB_RE = re.compile(r"/(\w+)\*\.parquet")
 
 # True sources of the localCheckpoint-memoized builders. An eager
 # localCheckpoint makes every consumer plan read `Scan ExistingRDD`, hiding
@@ -52,25 +53,42 @@ MEMO_SOURCES = {
 }
 
 
-def referenced_names(fn) -> set[str]:
-    """Every global/attribute name the function's code actually references,
-    including inside nested functions/lambdas — docstrings and comments are
-    not code, so they can't appear here."""
+def _code_objects(fn):
+    """The function's code object and every nested one (functions,
+    lambdas, comprehensions)."""
     import types
 
     try:
         stack = [fn.__code__]
     except AttributeError:
-        return set()
-    names: set[str] = set()
+        return
     while stack:
         code = stack.pop()
+        yield code
+        stack.extend(c for c in code.co_consts if isinstance(c, types.CodeType))
+
+
+def referenced_names(fn) -> set[str]:
+    """Every global/attribute name the function's code actually references,
+    including inside nested functions/lambdas — docstrings and comments are
+    not code, so they can't appear here."""
+    names: set[str] = set()
+    for code in _code_objects(fn):
         names.update(code.co_names)
         names.update(code.co_freevars)
-        for const in code.co_consts:
-            if isinstance(const, types.CodeType):
-                stack.append(const)
     return names
+
+
+def streamed_tables(fn) -> list[str]:
+    """Tables a streaming query's file streams read: ``_stream_events``
+    streams events; any other stream names its ``<table>*.parquet`` glob
+    in a string constant of the query's code."""
+    tables = {"events"} if "_stream_events" in referenced_names(fn) else set()
+    for code in _code_objects(fn):
+        for const in code.co_consts:
+            if isinstance(const, str):
+                tables.update(STREAM_GLOB_RE.findall(const))
+    return sorted(tables)
 
 
 def memo_note(fn) -> str | None:
@@ -90,7 +108,8 @@ def main() -> None:
     rows = []
     for name, fn in qs.items():
         if name.startswith("streaming_"):
-            rows.append((name, "(streaming — file-stream over events)"))
+            tables = ", ".join(streamed_tables(fn))
+            rows.append((name, f"(streaming — file-stream over {tables})"))
             continue
         try:
             df = fn(spark, sf_dir)
