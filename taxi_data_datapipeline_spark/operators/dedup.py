@@ -17,6 +17,19 @@ in whole-stage codegen. The MinHash/LSH tier is written as SQL text
 (``lsh_buckets``, ``jaccard_sql``), which the JVM parses once per
 projection instead of one Py4J round trip per ``Column`` call.
 
+Materialization rule: only answer-sized and candidate-sized frames are
+materialized (eager ``localCheckpoint``, whose block cleanup is
+reference-tracked); corpus-sized frames (shingle arrays, exploded gram
+rows) stream through their consumers uncached. Caching the corpus-wide
+gram arrays (about 3 KB per document deserialized) hit a GC cliff between
+1.6 M and 3.2 M documents. ``verify_pairs`` owns candidate verification:
+the candidate-then-verify joins (MinHash LSH, prefix filter, containment,
+sorted neighborhood) hand it their candidate pairs, and it re-shingles and
+materializes only the documents they name. The one per-document frame kept
+is ``simhash_dedup``'s fingerprint table (one long per document): both
+self-join sides read it, and without it the signature aggregate runs once
+per side.
+
 Algorithms are the standard public constructions: MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
 SEQUENCES 1997), banding-based LSH candidate generation (Leskovec/
@@ -147,13 +160,6 @@ def minhash_lsh_pairs(
     through their low-id representatives, which is what downstream
     connected-components grouping needs. None = no cap (exact everywhere).
     """
-    # The corpus-wide gram frame is NEVER materialized: caching 10^6+
-    # Java string arrays (≈3 KB/doc deserialized) hit a GC cliff between
-    # 1.6 M and 3.2 M docs (LSH stage 19 s -> 200 s at 2x the data in the
-    # curation probe). Shingling runs as a streaming map inside the
-    # signature aggregation — one pass over the corpus, nothing cached —
-    # and the verification join below re-shingles ONLY the candidate
-    # documents (a semi-join-pruned, candidate-sized set).
     # Explode-then-aggregate minhash: the num_perm seeded mins run as
     # codegen'd hash-aggregate columns with map-side partial aggregation —
     # vs. num_perm interpreted array traversals (each re-deriving the
@@ -167,12 +173,7 @@ def minhash_lsh_pairs(
         if max_bucket_fanout is None
         else _capped_pairs_sql("ids", max_bucket_fanout)
     )
-    # Candidates are the SMALL frame (bounded by banding collisions +
-    # the fanout cap): checkpoint them, then re-shingle just the docs
-    # they mention. The semi join prunes BEFORE shingling, so the extra
-    # shingle pass costs O(candidate docs), not O(corpus) — and the only
-    # cached state is candidate-sized. localCheckpoint (not persist):
-    # block cleanup is reference-tracked (the r3 ADVICE leak class).
+    # Candidates are bounded by banding collisions + the fanout cap.
     cands = (
         buckets.groupBy("band", "bh")
         .agg(F.collect_set("_id").alias("ids"))
@@ -181,18 +182,7 @@ def minhash_lsh_pairs(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    cand_ids = cands.selectExpr("explode(array(doc_a, doc_b)) AS _gid").distinct()
-    cand_grams = (
-        df.join(cand_ids, F.col(id_col) == F.col("_gid"), "left_semi")
-        .selectExpr(f"{sql_ident(id_col)} AS _gid", f"{shingles_sql(text_col, ngram)} AS grams")
-        .localCheckpoint(eager=True)
-    )
-    return (
-        cands.join(cand_grams.selectExpr("_gid AS doc_a", "grams AS ga"), "doc_a")
-        .join(cand_grams.selectExpr("_gid AS doc_b", "grams AS gb"), "doc_b")
-        .selectExpr("doc_a", "doc_b", f"{jaccard_sql('ga', 'gb')} AS jaccard")
-        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
-    )
+    return verify_pairs(df, cands, "jaccard", jaccard_threshold, id_col, text_col, ngram)
 
 
 def jaccard_sql(a: str, b: str) -> str:
@@ -201,6 +191,53 @@ def jaccard_sql(a: str, b: str) -> str:
     return (
         f"round(CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
         f" / size(array_union({a}, {b})), 6)"
+    )
+
+
+def containment_sql(a: str, b: str) -> str:
+    """SQL text of the containment of distinct-shingle array ``a`` in
+    ``b`` (|a ∩ b| / |a|, directional), rounded to 6 digits."""
+    return f"round(CAST(size(array_intersect({a}, {b})) AS DOUBLE) / size({a}), 6)"
+
+
+def verify_pairs(
+    docs: DataFrame,
+    cands: DataFrame,
+    measure: str,
+    threshold: float,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    ngram: int = 3,
+) -> DataFrame:
+    """Exact verification of candidate pairs: the shared tail of every
+    similarity join.
+
+    ``cands``' first two columns name the pair (a, b); any further
+    columns ride along. Only the documents a candidate names are
+    re-shingled (one semi join), and that candidate-sized shingle frame is
+    materialized once for both join sides. ``measure`` is ``"jaccard"``
+    or ``"containment"`` (of a in b); output: cands' columns plus
+    ``measure``, keeping pairs with measure >= threshold.
+    """
+    score = {"jaccard": jaccard_sql, "containment": containment_sql}[measure]
+    a, b, *extra = cands.columns
+    ids = cands.selectExpr(f"explode(array({sql_ident(a)}, {sql_ident(b)})) AS _vid").distinct()
+    # ids is a distinct aggregate over a Generate (an optimistic size
+    # estimate): keep the semi join shuffled.
+    grams = (
+        docs.join(ids.hint("shuffle_hash"), F.col(id_col) == F.col("_vid"), "left_semi")
+        .selectExpr(f"{sql_ident(id_col)} AS _vid", f"{shingles_sql(text_col, ngram)} AS _grams")
+        .localCheckpoint(eager=True)
+    )
+    # A checkpoint keeps its scan-backed size estimate (SCALING.md's
+    # round-12 audit), so these joins are left to the planner and AQE.
+    return (
+        cands.join(grams.selectExpr(f"_vid AS {sql_ident(a)}", "_grams AS _ga"), a)
+        .join(grams.selectExpr(f"_vid AS {sql_ident(b)}", "_grams AS _gb"), b)
+        .selectExpr(
+            *map(sql_ident, [a, b, *extra]), f"{score('_ga', '_gb')} AS {measure}"
+        )
+        .filter(f"{measure} >= {float(threshold)!r}D")
     )
 
 
@@ -249,35 +286,25 @@ def blocked_jaccard_pairs(
       2. self equi-join on (block, gram): only pairs that SHARE a gram ever
          materialize, and the join is a plain shuffled hash join on a
          fine-grained key — |intersection| = the per-pair match count;
-      3. jaccard = inter / (|A| + |B| - inter) via two cheap joins to the
-         per-doc gram counts.
+      3. jaccard = inter / (|A| + |B| - inter), each side's gram count
+         riding on its index rows.
 
     Zero-intersection pairs never appear, which is exactly right for any
     threshold > 0. Cost scales with sum over grams of df(gram)^2 within a
     block — bounded by the blocking, not by block^2 full-array scans.
     """
-    # The gram ARRAYS are never cached (the corpus-wide deserialized
-    # string-array cache is the GC cliff fixed in minhash_lsh_pairs);
-    # shingling streams ONCE into the exploded inverted index, which
-    # carries each doc's gram-set size per row (+4 B next to the gram
-    # string) — the containment_pairs convention. That kills the second
-    # full tokenize+shingle pass the separate per-doc size frame paid,
-    # its checkpoint job, and the two size joins after the aggregate
-    # (sz is functionally dependent on the doc id, so grouping by it
-    # yields identical groups).
-    g = df.select(
+    # Shingling streams once into the exploded inverted index, which
+    # carries each doc's gram-set size per row (sz is functionally
+    # dependent on the doc id, so grouping by it yields identical groups).
+    # Both self-join sides read that one exchange (exchange reuse).
+    ex = df.select(
         *[F.col(c) for c in block_cols],
         F.col(id_col).alias("_id"),
         ngram_shingles(text_col, ngram).alias("grams"),
-    )
-    # Flat (block, id, sz, gram) rows consumed by BOTH self-join sides —
-    # materialize so the shingle regex + explode runs once, not once per
-    # side (this is NOT the corpus-wide gram-ARRAY cache the note above
-    # forbids: rows are flat strings, MEMORY_AND_DISK spills).
-    ex = g.select(
+    ).select(
         *block_cols, "_id", F.size("grams").alias("sz"),
         F.explode("grams").alias("gram"),
-    ).localCheckpoint(eager=True)
+    )
     a, b = ex.alias("a"), ex.alias("b")
     # Gram-exploded self-join: both sides are the corpus-sized inverted
     # index (a Generate above the scan, whose output size Catalyst
@@ -521,12 +548,8 @@ def minhash_lsh_incremental(
 
     In production the old side's signatures/buckets would be a persisted
     table refreshed per ingest; here both sides derive in one job for
-    oracle-checkability. Only candidate-sized frames are ever
-    materialized (localCheckpoint — block cleanup is reference-tracked,
-    unlike persist()): the corpus-wide shingle table streams through the
-    signature aggregation uncached, and verification re-shingles just
-    the candidate documents behind a semi join (the GC-cliff fix shared
-    with minhash_lsh_pairs).
+    oracle-checkability. The shingle table streams through the signature
+    aggregation uncached; ``verify_pairs`` checks the candidates.
 
     Output: (new_doc, old_doc, jaccard >= threshold).
     """
@@ -534,10 +557,6 @@ def minhash_lsh_incremental(
     tagged = old.selectExpr(*cols, "0 AS _new").unionByName(
         new.selectExpr(*cols, "1 AS _new")
     )
-    # As in minhash_lsh_pairs: the corpus-wide gram frame is never
-    # materialized (the deserialized string arrays hit a GC cliff past
-    # ~2M docs); shingling streams through the signature aggregation, and
-    # verification re-shingles only candidate docs behind a semi join.
     exploded = tagged.selectExpr(
         "_gid", "_new", f"explode({shingles_sql('_text', ngram)}) AS gram"
     )
@@ -574,17 +593,8 @@ def minhash_lsh_incremental(
         # the checkpoint action itself.
         .localCheckpoint(eager=True)
     )
-    cand_ids = cands.selectExpr("explode(array(new_doc, old_doc)) AS _cid").distinct()
-    cand_grams = (
-        tagged.join(cand_ids, F.col("_gid") == F.col("_cid"), "left_semi")
-        .selectExpr("_gid", f"{shingles_sql('_text', ngram)} AS grams")
-        .localCheckpoint(eager=True)
-    )
-    return (
-        cands.join(cand_grams.selectExpr("_gid AS old_doc", "grams AS og"), "old_doc")
-        .join(cand_grams.selectExpr("_gid AS new_doc", "grams AS ng"), "new_doc")
-        .selectExpr("new_doc", "old_doc", f"{jaccard_sql('ng', 'og')} AS jaccard")
-        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
+    return verify_pairs(
+        tagged, cands, "jaccard", jaccard_threshold, "_gid", "_text", ngram
     )
 
 
@@ -657,14 +667,10 @@ def prefix_filter_jaccard_pairs(
     global order, hence first in both documents' prefixes — found with
     two plain MINs), the overlap can be at most
     1 + min(|x| - rank_x, |y| - rank_y), which must reach the pair bound
-    α(x,y) = ceil(t/(1+t)·(|x|+|y|)). Survivors are verified with exact
-    array intersections over RE-SHINGLED candidate documents (a semi
-    join; the corpus-wide gram-array frame is never materialized — the
-    cache/checkpoint of that frame is the GC cliff documented in
-    minhash_lsh_pairs). Output: (doc_a, doc_b, jaccard >= t), jaccard
-    rounded to 6 for cross-engine parity.
+    α(x,y) = ceil(t/(1+t)·(|x|+|y|)). ``verify_pairs`` checks the
+    survivors. Output: (doc_a, doc_b, jaccard >= t), jaccard rounded to 6
+    for cross-engine parity.
     """
-    t = threshold_num / threshold_den
     if ranked is None:
         ranked = ranked_gram_index(df, text_col, id_col, ngram)
     alpha = F.expr(
@@ -706,27 +712,8 @@ def prefix_filter_jaccard_pairs(
         1 + F.least(F.col("sz_a") - F.col("ra"), F.col("sz_b") - F.col("rb"))
         >= alpha_pair
     ).select("doc_a", "doc_b")
-    # Verification re-shingles only documents that SURVIVE the filters
-    # (left-semi join), instead of checkpointing every document's grams.
-    ids = cands.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("_id")
-    ).distinct()
-    # ids is a density-scaled distinct aggregate (optimistic estimate);
-    # keep the semi-join shuffled.
-    gsub = (
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .join(ids.hint("shuffle_hash"), "_id", "left_semi")  # filter raw docs BEFORE shingling
-        .select("_id", ngram_shingles("_text", ngram).alias("grams"))
-    )
-    ga = gsub.select(F.col("_id").alias("doc_a"), F.col("grams").alias("_ga"))
-    gb = gsub.select(F.col("_id").alias("doc_b"), F.col("grams").alias("_gb"))
-    # Candidate pairs (post-aggregate) vs re-shingled survivors (semi-
-    # joined corpus subset): both density-scaled -- keep shuffled.
-    return (
-        cands.join(ga.hint("shuffle_hash"), "doc_a")
-        .join(gb.hint("shuffle_hash"), "doc_b")
-        .selectExpr("doc_a", "doc_b", f"{jaccard_sql('_ga', '_gb')} AS jaccard")
-        .filter(f"jaccard >= {t!r}D")
+    return verify_pairs(
+        df, cands, "jaccard", threshold_num / threshold_den, id_col, text_col, ngram
     )
 
 
@@ -758,10 +745,7 @@ def containment_pairs(
     common gram): overlap <= 1 + min(|a| - rank_a, |b| - rank_b) must
     reach ceil(t·|a|). At sf0.1 this cuts candidates 921k -> the
     verified set's neighborhood, which is what bounds the array-
-    intersect verification stage. Verification re-shingles only
-    surviving documents behind semi joins (never a corpus-wide
-    gram-array cache)."""
-    t = threshold_num / threshold_den
+    intersect verification stage (``verify_pairs``)."""
     if ranked is None:
         ranked = ranked_gram_index(df, text_col, id_col, ngram)
     alpha = F.expr(
@@ -795,31 +779,6 @@ def containment_pairs(
         1 + F.least(F.col("sz_a") - F.col("ra"), F.col("sz_b") - F.col("rb"))
         >= alpha_a
     ).select("doc_a", "doc_b")
-    ids = cands.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("_id")
-    ).distinct()
-    # ids is a density-scaled distinct aggregate (optimistic estimate);
-    # keep the semi-join shuffled.
-    gsub = (
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .join(ids.hint("shuffle_hash"), "_id", "left_semi")
-        .select("_id", ngram_shingles("_text", ngram).alias("grams"))
-    )
-    ga = gsub.select(F.col("_id").alias("doc_a"), F.col("grams").alias("_ga"))
-    gb = gsub.select(F.col("_id").alias("doc_b"), F.col("grams").alias("_gb"))
-    # Candidate pairs (post-aggregate) vs re-shingled survivors (semi-
-    # joined corpus subset): both density-scaled -- keep shuffled.
-    return (
-        cands.join(ga.hint("shuffle_hash"), "doc_a")
-        .join(gb.hint("shuffle_hash"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("_ga", "_gb")).cast("double")
-                / F.size("_ga"),
-                6,
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= F.lit(t))
+    return verify_pairs(
+        df, cands, "containment", threshold_num / threshold_den, id_col, text_col, ngram
     )

@@ -67,13 +67,6 @@ def brute_force_topk(
     )
 
 
-def _hyperplane(plane: int, dim: int) -> Column:
-    """Deterministic pseudo-random hyperplane component in [-1, 1):
-    xxhash64(plane, dim) scaled. Reproducible anywhere, no stored model."""
-    h = F.xxhash64(F.lit(plane), F.lit(dim))
-    return (h.cast("double") / F.lit(float(2**63)))
-
-
 def srp_bucket(vec_col: Column, n_planes: int, n_dims: int) -> Column:
     """Sign-random-projection bucket id: bit p = sign(vec . hyperplane_p)."""
     bucket = F.lit(0).cast("long")

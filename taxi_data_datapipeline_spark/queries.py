@@ -57,6 +57,22 @@ def register(name: str, oracle: str | None = None):
 _NANOS_TS_COLS = {"events": ["ts"]}
 
 
+def nanos_ts(df: DataFrame, col: str) -> DataFrame:
+    """``df`` with TIMESTAMP(NANOS) column ``col`` as a session-zoned
+    TIMESTAMP. Under ``nanosAsLong`` it reads as bigint nanoseconds,
+    floored to microseconds. Parquet TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) infers as TIMESTAMP_NTZ under Spark 4; the rest
+    of the engine (watermarks, interval arithmetic, the DuckDB oracle
+    comparison under the UTC session) is written against TIMESTAMP, and
+    with a UTC session the cast is a wall-clock identity."""
+    dtype = dict(df.dtypes).get(col)
+    if dtype == "bigint":
+        return df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
+    if dtype == "timestamp_ntz":
+        return df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
+
+
 # Parquet splits at row-group granularity, so a table written as one file
 # with one row group scans as ONE partition no matter how maxPartitionBytes
 # is tuned — and every map-side stage above it (explodes, multi-distinct
@@ -156,17 +172,7 @@ def load(
         if fan_out:
             df = _fan_out_narrow_scan(spark, df, path)
         for c in nanos_cols:
-            dtype = dict(df.dtypes).get(c)
-            if dtype == "bigint":
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} DIV 1000")))
-            elif dtype == "timestamp_ntz":
-                # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers
-                # as TIMESTAMP_NTZ under Spark 4. Normalize to the
-                # session-zoned TIMESTAMP the rest of the engine
-                # (watermarks, interval arithmetic, the DuckDB oracle
-                # comparison under the UTC session) is written against;
-                # with a UTC session the cast is a wall-clock identity.
-                df = df.withColumn(c, F.col(c).cast("timestamp"))
+            df = nanos_ts(df, c)
         return df
 
     return shared(spark, sf_dir, "load", build, table, fan_out)

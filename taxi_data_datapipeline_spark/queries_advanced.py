@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from taxi_data_datapipeline_spark.functions.text import bpe_ish_tokens
 from taxi_data_datapipeline_spark.operators.asof import asof_join
-from taxi_data_datapipeline_spark.queries import load, register, shared
+from taxi_data_datapipeline_spark.queries import load, nanos_ts, register, shared
 from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
 from taxi_data_datapipeline_spark.streaming import drain
 
@@ -412,12 +412,9 @@ def _session_like(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the events table with the same timestamp
-    normalization ladder as the batch ``load()``: TIMESTAMP(NANOS) parquet
-    reads as long (nanosAsLong) and floors to micros; plain
-    TIMESTAMP(MICROS) without UTC adjustment infers as TIMESTAMP_NTZ under
-    Spark 4 and is cast to the session-zoned TIMESTAMP that watermarks
-    require. Glob form: the file-stream source needs a directory basePath,
+    """File-stream source over the events table, its ``ts`` normalized by
+    the batch ``load()``'s ``nanos_ts`` (watermarks require the
+    session-zoned TIMESTAMP). Glob form: the file-stream source needs a directory basePath,
     which it infers from the non-glob path prefix. The raw schema is
     inferred once per session (``shared``): inferring it is a Spark job."""
     ensure_nanos_as_long(spark)
@@ -432,12 +429,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{sf_dir}/events*.parquet")
     )
-    dtype = dict(raw.dtypes).get("ts")
-    if dtype == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif dtype == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return nanos_ts(raw, "ts")
 
 
 @register(

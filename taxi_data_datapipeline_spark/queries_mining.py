@@ -25,9 +25,11 @@ from pyspark.sql.window import Window
 from taxi_data_datapipeline_spark.operators.dedup import (
     prefix_filter_jaccard_pairs,
     ranked_gram_index,
+    verify_pairs,
 )
 from taxi_data_datapipeline_spark.operators.skyline import skyline_2d
 from taxi_data_datapipeline_spark.queries import load, register, shared
+from taxi_data_datapipeline_spark.queries_data import _SQL_GRAMS, _SQL_TOKS
 
 
 # Memoized df-ranked shingle index: the shared substrate of the
@@ -40,16 +42,6 @@ def _shared_gram_index(spark: SparkSession, sf_dir: str):
         return ranked_gram_index(docs).localCheckpoint(eager=True)
 
     return shared(spark, sf_dir, "gram_index", build)
-
-_SQL_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t != '')"
-_SQL_GRAMS = f"""
-CASE WHEN len({_SQL_TOKS}) >= 3
-     THEN list_distinct(list_transform(
-              generate_series(1, len({_SQL_TOKS}) - 2),
-              i -> {_SQL_TOKS}[i] || ' ' || {_SQL_TOKS}[i+1] || ' ' || {_SQL_TOKS}[i+2]))
-     ELSE [array_to_string({_SQL_TOKS}, ' ')]
-END
-"""
 
 
 # --- 1. prefix-filter (AllPairs/PPJoin) set-similarity self-join ---------------
@@ -128,8 +120,6 @@ def q_snm_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, rank), so candidate fanout is exactly w-1 per document — never
     a per-language quadratic blow-up, regardless of language skew."""
     docs = load(spark, sf_dir, "documents", fan_out=True)
-    from taxi_data_datapipeline_spark.functions.text import ngram_shingles
-
     ranked = docs.select(
         "doc_id",
         "lang",
@@ -151,24 +141,7 @@ def q_snm_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_a", "doc_b", (F.col("rn_b") - F.col("rn_a")).cast("long").alias("gap")
     )
-    g = docs.select("doc_id", ngram_shingles("text", 3).alias("grams"))
-    ga = g.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("_ga"))
-    gb = g.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("_gb"))
-    return (
-        cand.join(ga.hint("shuffle_hash"), "doc_a")
-        .join(gb.hint("shuffle_hash"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "gap",
-            F.round(
-                F.size(F.array_intersect("_ga", "_gb")).cast("double")
-                / F.size(F.array_union("_ga", "_gb")),
-                6,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.05)
-    )
+    return verify_pairs(docs, cand, "jaccard", 0.05)
 
 
 # --- 3. Johnson-Lindenstrauss random projection --------------------------------

@@ -4235,8 +4235,10 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     (no cross-row state — each row carries its own shingle set, so the
     signature is per-row array math instead of the batch tier's
     explode+aggregate), and joins stream-static against the old
-    corpus's precomputed bucket table with in-stream exact
-    verification. Drained AvailableNow it must equal the batch
+    corpus's bucket table with in-stream exact verification. The bucket
+    table stays a plan, not a materialized copy of 80% of the corpus:
+    each micro-batch reads it, and one documents file drains in one
+    micro-batch. Drained AvailableNow it must equal the batch
     dedup_incremental / brute-force oracle — the same result through a
     third execution architecture (streaming/dedup.py:
     lsh_incremental_stream). Multi-band duplicate candidates drop via
@@ -4249,9 +4251,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
     spark = _stream_session(spark, sf_dir, table="documents")
     docs = load(spark, sf_dir, "documents")
-    old_buckets = build_old_buckets(
-        docs.filter(F.col("doc_id") % 5 != 0)
-    ).localCheckpoint(eager=True)
+    old_buckets = build_old_buckets(docs.filter(F.col("doc_id") % 5 != 0))
     new_stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")

@@ -384,10 +384,6 @@ class TxTable:
 
 # -- exactly-once streaming sink support ---------------------------------------
 
-def _txn_key(app_id: str) -> str:
-    return f"txn:{app_id}"
-
-
 class TxSink:
     """Idempotent-commit extension of :class:`TxTable` for streaming
     ``foreachBatch`` sinks: each commit records (app_id, batch_id) in its

@@ -15,9 +15,11 @@ from taxi_data_datapipeline_spark.functions.text import (
     token_count,
 )
 from taxi_data_datapipeline_spark.operators.dedup import (
+    blocked_jaccard_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     simhash_table,
+    verify_pairs,
 )
 
 
@@ -324,3 +326,44 @@ def test_dup_span_islands_exact_extents(spark, tmp_path):
         (3, 1): (0, 9, 10),
         (4, 1): (0, 9, 10),
     }
+
+
+def test_verify_pairs_measures_threshold_and_extra_columns(spark):
+    """Containment is directional, a pair exactly at the threshold is kept,
+    and candidate columns past the pair ride along."""
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=1, text="a b c d e"),  # 3 shingles, all inside doc 2
+            Row(doc_id=2, text="a b c d e f g h i"),  # 7 shingles
+            Row(doc_id=3, text="a b c d x"),  # shares 2 of doc 1's 3: J = 2/4
+        ]
+    )
+    cands = spark.createDataFrame(
+        [(1, 2, 7), (2, 1, 8), (1, 3, 9)], "doc_a long, doc_b long, gap long"
+    )
+    cont = verify_pairs(docs, cands, "containment", 0.0)
+    assert cont.columns == ["doc_a", "doc_b", "gap", "containment"]
+    got = {(r.doc_a, r.doc_b): (r.gap, r.containment) for r in cont.collect()}
+    assert got == {(1, 2): (7, 1.0), (2, 1): (8, 0.428571), (1, 3): (9, 0.666667)}
+    kept = verify_pairs(docs, cands, "containment", 0.5).collect()
+    assert {(r.doc_a, r.doc_b) for r in kept} == {(1, 2), (1, 3)}
+
+    jac = verify_pairs(docs, cands, "jaccard", 0.5)
+    assert [tuple(r) for r in jac.collect()] == [(1, 3, 9, 0.5)]
+
+
+def test_blocked_jaccard_pairs_builds_without_a_job(spark, docs):
+    """Building the blocked join submits no Spark job: the corpus-sized
+    gram index is a plan, not an eager checkpoint."""
+    sc = spark.sparkContext
+    sc.setJobGroup("blocked-build", "build blocked_jaccard_pairs")
+    try:
+        pairs = blocked_jaccard_pairs(
+            docs.withColumn("one", F.lit(1)), block_cols=["one"], threshold=0.5
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("blocked-build") == []
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} >= {(1, 2)}
