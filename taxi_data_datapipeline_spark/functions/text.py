@@ -7,15 +7,16 @@ every helper is a scalar/array expression that whole-stage-codegens inside
 the scan projection, so the only shuffles in downstream dedup/similarity
 plans come from their joins, not from feature extraction.
 
-The tokenizer and the shingler are defined once, as SQL text
-(``tokens_sql``, ``shingles_sql``) over a column NAME: every ``Column``-API
-call is at least one Py4J round trip to the JVM, and the shingler's
-zip_with chain built one ``Column`` at a time costs hundreds of them per use
-(thousands for a MinHash signature, which embeds the shingles per
-permutation). As text, the JVM parses the whole expression once. ``tokens``
-and ``ngram_shingles`` are that text as one ``F.expr``; callers that write
-their own SQL (the MinHash band builder in ``operators/dedup.py``) splice
-the text itself.
+The tokenizer, the shingler, the quality features and the language vote
+are defined once, as SQL text (``*_sql``) over a column NAME: every
+``Column``-API call is at least one Py4J round trip to the JVM, and the
+shingler's zip_with chain built one ``Column`` at a time costs hundreds of
+them per use (thousands for a MinHash signature, which embeds the shingles
+per permutation; ~700 for the five-language vote). As text, the JVM parses
+the whole expression once. ``tokens``, ``ngram_shingles``,
+``quality_features``, ``quality_score`` and ``lang_id`` are that text as
+``F.expr``; callers that write their own SQL (the MinHash band builder in
+``operators/dedup.py``) splice the text itself.
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 
 # Through sql_string: Spark's parser unescapes backslashes in a literal.
 _WHITESPACE = sql_string(r"\s+")
+_NOT_PUNCT = sql_string(r"[^\.,;:!\?]")
 
 
 def tokens_sql(column: str) -> str:
@@ -95,41 +97,48 @@ def ngram_shingles(column: str, n: int = 3) -> Column:
     return F.expr(shingles_sql(column, n))
 
 
-def quality_features(column: str) -> dict[str, Column]:
-    """Length / punctuation / stopword ratio features (all doubles, rounded
-    for cross-engine parity)."""
-    text = F.col(column)
-    toks = tokens(column)
-    n_tok = F.size(toks)
-    n_chars = F.length(text)
-    punct = F.length(F.regexp_replace(text, r"[^\.,;:!\?]", ""))
-    stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(LANG_STOPWORDS["en"])))
-    avg_wl = F.round((n_chars - n_tok + 1).cast("double") / n_tok, 6)
+def quality_features_sql(column: str) -> dict[str, str]:
+    """SQL text of the length / punctuation / stopword ratio features (all
+    doubles, rounded for cross-engine parity)."""
+    c = sql_ident(column)
+    toks = tokens_sql(column)
+    n_tok = f"size({toks})"
+    stop_words = ", ".join(sql_string(w) for w in LANG_STOPWORDS["en"])
+    punct = f"length(regexp_replace({c}, {_NOT_PUNCT}, ''))"
+    stop = f"size(filter({toks}, t -> lower(t) IN ({stop_words})))"
     return {
         "n_tokens": n_tok,
-        "n_chars": n_chars,
-        "avg_word_len": avg_wl,
-        "punct_ratio": F.round(punct.cast("double") / n_chars, 6),
-        "stopword_ratio": F.round(stop.cast("double") / n_tok, 6),
+        "n_chars": f"length({c})",
+        "avg_word_len": f"round(CAST(length({c}) - {n_tok} + 1 AS DOUBLE) / {n_tok}, 6)",
+        "punct_ratio": f"round(CAST({punct} AS DOUBLE) / length({c}), 6)",
+        "stopword_ratio": f"round(CAST({stop} AS DOUBLE) / {n_tok}, 6)",
     }
 
 
+def quality_features(column: str) -> dict[str, Column]:
+    return {k: F.expr(v) for k, v in quality_features_sql(column).items()}
+
+
 def quality_score(column: str) -> Column:
-    """Composite [0,1] quality score: rewards mid-length docs with sane word
-    lengths and some stopwords (prose-ness), penalizes punctuation soup."""
-    f = quality_features(column)
-    len_ok = F.when((f["n_tokens"] >= 10) & (f["n_tokens"] <= 100000), 0.25).otherwise(0.0)
-    wl_ok = F.when((f["avg_word_len"] >= 2.0) & (f["avg_word_len"] <= 12.0), 0.25).otherwise(0.0)
-    stop_ok = F.when(f["stopword_ratio"] >= 0.01, 0.25).otherwise(0.0)
-    punct_ok = F.when(f["punct_ratio"] <= 0.2, 0.25).otherwise(0.0)
-    return F.round(len_ok + wl_ok + stop_ok + punct_ok, 2)
+    """Composite [0,1] quality score: rewards mid-length docs with sane
+    word lengths and some stopwords (prose-ness), penalizes punctuation
+    soup."""
+    f = quality_features_sql(column)
+    rules = [
+        f"{f['n_tokens']} >= 10 AND {f['n_tokens']} <= 100000",
+        f"{f['avg_word_len']} >= 2.0D AND {f['avg_word_len']} <= 12.0D",
+        f"{f['stopword_ratio']} >= 0.01D",
+        f"{f['punct_ratio']} <= 0.2D",
+    ]
+    terms = " + ".join(f"CASE WHEN {r} THEN 0.25D ELSE 0.0D END" for r in rules)
+    return F.expr(f"round({terms}, 2)")
 
 
-def lang_votes(column: str) -> dict[str, Column]:
-    """Per-language stopword hit counts."""
-    toks = F.transform(tokens(column), lambda t: F.lower(t))
+def lang_votes_sql(column: str) -> dict[str, str]:
+    """SQL text of the per-language stopword hit counts."""
+    toks = f"transform({tokens_sql(column)}, t -> lower(t))"
     return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(words)))
+        lang: f"size(filter({toks}, t -> t IN ({', '.join(map(sql_string, words))})))"
         for lang, words in LANG_STOPWORDS.items()
     }
 
@@ -140,17 +149,18 @@ def lang_id(column: str, default: str = "en") -> Column:
 
     One array_max over (vote, -rank, lang) structs: struct comparison picks
     the highest vote, ties falling to the alphabetically-first language
-    (-rank). The naive chained when(v > best, ...) formulation nests every
+    (-rank). The naive chained CASE WHEN v > best formulation nests every
     vote expression inside the next comparison, duplicating the tokenizer
     exponentially in the number of languages.
     """
-    votes = lang_votes(column)
-    entries = [
-        F.struct(v.alias("v"), F.lit(-i).alias("ni"), F.lit(lang).alias("lang"))
-        for i, (lang, v) in enumerate(sorted(votes.items()))
-    ]
-    best = F.array_max(F.array(*entries))
-    return F.when(best["v"] > 0, best["lang"]).otherwise(F.lit(default))
+    entries = ", ".join(
+        f"named_struct('v', {v}, 'ni', {-i}, 'lang', {sql_string(lang)})"
+        for i, (lang, v) in enumerate(sorted(lang_votes_sql(column).items()))
+    )
+    best = f"array_max(array({entries}))"
+    return F.expr(
+        f"CASE WHEN {best}.v > 0 THEN {best}.lang ELSE {sql_string(default)} END"
+    )
 
 
 def normalize_text(text: Column) -> Column:

@@ -7,17 +7,17 @@ neighbors; stop when a round changes nothing. Rounds = graph diameter,
 which for dedup graphs (tight cliques + chains of a few hops) is small.
 
 Scale shape: each round is one join edges-to-labels + one min-aggregate —
-both shuffles on the node id. Label state is checkpoint-truncated
-(``localCheckpoint``) so the lineage doesn't grow with iterations — the
-classic Spark iterative-algorithm pattern. The convergence check rides
-the checkpoint job as an ``Observation`` metric, so each round costs
-exactly one job and only a scalar ever reaches the driver.
+both shuffles on the node id. Every iterative operator here runs its
+rounds through ``operators/iterate.py:iterate``, whose docstring states
+how rounds are chained, materialized and stopped.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from taxi_data_datapipeline_spark.operators.iterate import iterate
 
 
 def _sym_with_self_loops(
@@ -66,30 +66,20 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """(node, component) for every node in the edge list; component =
-    min node id reachable. Undirected.
-
-    Two propagation rounds run per materialized job (the self-loop form
-    keeps the chained plan linear — see ``_sym_with_self_loops``), so a
-    diameter-d graph costs ~d/2 Spark jobs. Convergence is detected
-    collect-free from the SUM of labels riding the checkpoint job as an
-    ``Observation``: labels only ever decrease, so an unchanged sum
-    means a fixpoint (monotone invariant — no old-vs-new join needed)."""
+    min node id reachable. Undirected. At most ``max_iter`` jobs of two
+    rounds each; a diameter-d graph costs ~d/2 jobs. Labels only ever
+    decrease, so an unchanged label sum is the fixpoint."""
     symx = _sym_with_self_loops(edges, src, dst)
     labels = symx.select(F.col("u").alias("node")).distinct().withColumn(
         "comp", F.col("node")
     )
-    prev_sum = None
-    for _ in range(max_iter):
-        stepped = _propagate_min(symx, _propagate_min(symx, labels, "comp"), "comp")
-        obs = Observation()
-        labels = stepped.observe(
-            obs, F.sum("comp").alias("s")
-        ).localCheckpoint(eager=True)
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+    return iterate(
+        labels,
+        lambda s: _propagate_min(symx, s, "comp"),
+        2 * max_iter,
+        per_job=2,
+        fixpoint=[F.sum("comp")],
+    )[-1]
 
 
 def triangle_stats(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
@@ -191,10 +181,9 @@ def pagerank_units(
     fixed-point embedding quantization).
 
     Shape per iteration: one join of the symmetric edge list against the
-    rank table (shuffle on node id) + one sum aggregate — the standard
-    Spark iterative pattern. The edge list is checkpoint-materialized
-    once; 5 iterations = 5 shuffle rounds, independent of data size. On
-    an undirected graph every node has out-degree >= 1, so there is no
+    rank table (shuffle on node id) + one sum aggregate; two iterations
+    per job. The edge list is checkpoint-materialized once. On an
+    undirected graph every node has out-degree >= 1, so there is no
     dangling-mass term.
 
     ``weight`` names an integer edge-weight column: each neighbor then
@@ -251,19 +240,7 @@ def pagerank_units(
             (F.lit(base) + F.sum("c")).cast("long").alias("runits")
         )
 
-    # Two iterations chain per materialized job: the rank table appears
-    # exactly once per iteration, so the chained plan stays linear (the
-    # inner broadcast subtree builds inside the same job). The
-    # localCheckpoint every other round cuts lineage so no job ever
-    # replays more than two edge passes.
-    done = 0
-    while done < iters:
-        step = min(2, iters - done)
-        for _ in range(step):
-            r = one_iter(r)
-        r = r.localCheckpoint(eager=True)
-        done += step
-    return r
+    return iterate(r, one_iter, iters, per_job=2)[-1]
 
 
 def min_label_rounds(
@@ -280,23 +257,15 @@ def min_label_rounds(
 
     Shape per round: one join of the self-looped symmetric edge list
     against the node-sized label table + one min-aggregate, both
-    shuffling node-id keyed rows. Two rounds chain per materialized job
-    (single label reference per round keeps the chained plan linear),
-    and labels are checkpoint-truncated at each job so lineage stays
-    flat.
+    shuffling node-id keyed rows; two rounds per job.
     """
     symx = _sym_with_self_loops(edges, src, dst)
     labels = symx.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    done = 0
-    while done < iters:
-        step = min(2, iters - done)  # two chained rounds per job
-        for _ in range(step):
-            labels = _propagate_min(symx, labels, "label")
-        labels = labels.localCheckpoint(eager=True)
-        done += step
-    return labels
+    return iterate(
+        labels, lambda s: _propagate_min(symx, s, "label"), iters, per_job=2
+    )[-1]
 
 
 def bfs_depths(
@@ -311,10 +280,9 @@ def bfs_depths(
     bound. Distance relaxation over the self-looped symmetric closure —
     d'(v) = min over u in N(v) ∪ {v} of d(u) + [u != v] — is one join +
     one min-aggregate per round (the self-loop carries the node's own
-    depth at weight 0), the same single-reference shape that lets two
-    rounds chain per materialized job. The fixed hop bound keeps the
-    result a pure function of the edge list, so a SQL oracle unrolls
-    the rounds as chained CTEs.
+    depth at weight 0); two rounds per job. The fixed hop bound keeps
+    the result a pure function of the edge list, so a SQL oracle
+    unrolls the rounds as chained CTEs.
     """
     symx = _sym_with_self_loops(edges, src, dst)
     dist = (
@@ -337,14 +305,7 @@ def bfs_depths(
             .withColumnRenamed("v", "node")
         )
 
-    done = 0
-    while done < iters:
-        step = min(2, iters - done)
-        for _ in range(step):
-            dist = relax(dist)
-        dist = dist.localCheckpoint(eager=True)
-        done += step
-    return dist
+    return iterate(dist, relax, iters, per_job=2)[-1]
 
 
 def kcore_nodes(
@@ -360,33 +321,30 @@ def kcore_nodes(
     Shape per round: degrees of the induced subgraph = one aggregate
     over edges semi-joined against the surviving node set (two
     node-sized semi-joins; the node set broadcasts while it fits). The
-    edge list is checkpointed once; the node set re-materializes per
-    round to keep lineage flat.
+    edge list is checkpointed once; the node set is the round state.
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .localCheckpoint(eager=True)
     )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    nodes = deg.filter(F.col("d") >= k).select("u").localCheckpoint(eager=True)
-    for _ in range(rounds):
-        alive = (
-            sym.join(nodes, "u", "left_semi")
-            .join(nodes.withColumnRenamed("u", "v"), "v", "left_semi")
+
+    def degrees(edges_in: DataFrame) -> DataFrame:
+        return edges_in.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+
+    def induced(nodes: DataFrame) -> DataFrame:
+        return sym.join(nodes, "u", "left_semi").join(
+            nodes.withColumnRenamed("u", "v"), "v", "left_semi"
         )
-        deg = alive.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        nodes = (
-            deg.filter(F.col("d") >= k).select("u").localCheckpoint(eager=True)
-        )
-    final = (
-        sym.join(nodes, "u", "left_semi")
-        .join(nodes.withColumnRenamed("u", "v"), "v", "left_semi")
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .withColumnRenamed("u", "node")
+
+    def peel(nodes: DataFrame) -> DataFrame:
+        return degrees(induced(nodes)).filter(F.col("d") >= k).select("u")
+
+    nodes = degrees(sym).filter(F.col("d") >= k).select("u").localCheckpoint(eager=True)
+    nodes = iterate(nodes, peel, rounds)[-1]
+    return degrees(induced(nodes)).select(
+        F.col("u").alias("node"), F.col("d").alias("degree")
     )
-    return final
 
 
 # --- O(log n) connected components: alternating star contraction --------------
@@ -421,10 +379,8 @@ def connected_components_star(
     chains), hopeless for long paths. A 512-node chain converges here in
     ~6 alternations vs 256 propagation rounds.
 
-    Fixpoint detection is collect-free: edge-set count + order-free
-    bit_xor fingerprint ride the per-round checkpoint as an
-    ``Observation``; equal (count, fingerprint) two rounds running means
-    the star set is stable. Returns every node of the input edge list
+    The star set is stable once its (edge count, order-free bit_xor
+    fingerprint) repeats. Returns every node of the input edge list
     labeled with its component minimum.
     """
     base = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
@@ -437,9 +393,8 @@ def connected_components_star(
         .select(F.col("u").alias("node"))
         .localCheckpoint(eager=True)
     )
-    cur = base.filter(F.col("u") != F.col("v"))
-    prev_sig = None
-    for _ in range(max_iter):
+
+    def contract(cur: DataFrame) -> DataFrame:
         sym = (
             cur.unionByName(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .distinct()
@@ -460,7 +415,7 @@ def connected_components_star(
             .distinct()
         )
         lmins = _neighborhood_mins(lsym)
-        small = (
+        return (
             lsym.join(lmins, "u")
             .filter(F.col("v") <= F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
@@ -468,16 +423,13 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        obs = Observation()
-        cur = small.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("fp"),
-        ).localCheckpoint(eager=True)
-        sig = (obs.get["n"], obs.get["fp"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+
+    cur = iterate(
+        base.filter(F.col("u") != F.col("v")),
+        contract,
+        max_iter,
+        fixpoint=[F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))],
+    )[-1]
     # stars: (child, root); roots/isolated nodes label themselves
     stars = cur.select(
         F.greatest("u", "v").alias("node"), F.least("u", "v").alias("comp")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from taxi_data_datapipeline_spark.functions.text import bpe_ish_tokens
 from taxi_data_datapipeline_spark.operators.asof import asof_join
+from taxi_data_datapipeline_spark.operators.iterate import iterate
 from taxi_data_datapipeline_spark.queries import load, nanos_ts, register, shared
 from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
 from taxi_data_datapipeline_spark.streaming import drain
@@ -358,13 +359,9 @@ def _stream_session(
 ) -> SparkSession:
     """A session clone for streaming queries whose shuffle (= state
     store) partition count scales with the STREAM SOURCE's size instead
-    of inheriting the batch session's core count.
-
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides the derivation
-    (production knob: size state partitions to state volume / throughput,
-    e.g. thousands for a 100 TB/day backlog; the derived value is capped
-    at defaultParallelism, which on a real cluster is the executor-core
-    total). Non-local sources (s3a://...) keep the caller's session
+    of inheriting the batch session's core count, capped at
+    defaultParallelism (on a real cluster, the executor-core total).
+    Non-local sources (s3a://...) keep the caller's session
     untouched — there the store's split sizing governs and the safe
     default is the session's own configuration. Clones share the
     SparkContext (same executors). Memoized per (parent session, derived
@@ -372,20 +369,16 @@ def _stream_session(
     clone made from one session must never serve another session's
     drains. The memo holds no data blocks, so ``clear_memos`` leaves it
     alone."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env is not None:
-        parts = max(1, int(env))
-    else:
-        # Size from every file the stream source reads (its glob), not
-        # just the table's first file.
-        paths = glob.glob(f"{sf_dir}/{table}*.parquet")
-        if not paths:
-            return spark
-        nbytes = sum(os.path.getsize(p) for p in paths)
-        parts = min(
-            max(_STREAM_MIN_PARTITIONS, -(-nbytes // _STREAM_BYTES_PER_PARTITION)),
-            spark.sparkContext.defaultParallelism,
-        )
+    # Size from every file the stream source reads (its glob), not just
+    # the table's first file.
+    paths = glob.glob(f"{sf_dir}/{table}*.parquet")
+    if not paths:
+        return spark
+    nbytes = sum(os.path.getsize(p) for p in paths)
+    parts = min(
+        max(_STREAM_MIN_PARTITIONS, -(-nbytes // _STREAM_BYTES_PER_PARTITION)),
+        spark.sparkContext.defaultParallelism,
+    )
     if int(spark.conf.get("spark.sql.shuffle.partitions")) == parts:
         return spark
     key = (spark, parts)
@@ -4177,24 +4170,18 @@ def q_kcore_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    # Each round REUSES the previous round's edges twice (degree aggs) and
-    # feeds the next round: without truncation the unrolled lineage
-    # re-executes round r-1 inside round r and the 6-round plan goes
-    # quadratic in stages (measured 211 s at sf0.01). localCheckpoint per
-    # round keeps every round a constant-depth plan over the shrinking,
-    # answer-bounded edge list — the standard iterative-algorithm
-    # discipline (same as connected components in operators/graphs.py).
-    e = e.localCheckpoint()
-    for _ in range(_KCORE_ROUNDS):
+    # peel reads its input edges three times, so rounds run one per job.
+    def peel(e: DataFrame) -> DataFrame:
         dc = e.groupBy("c").agg(F.count(F.lit(1)).alias("dcn"))
         ds = e.groupBy("s").agg(F.count(F.lit(1)).alias("dsn"))
-        e = (
+        return (
             e.join(dc, "c")
             .join(F.broadcast(ds), "s")
             .filter((F.col("dcn") >= _KCORE_K) & (F.col("dsn") >= _KCORE_K))
             .select("c", "s")
-            .localCheckpoint()
         )
+
+    e = iterate(e.localCheckpoint(), peel, _KCORE_ROUNDS)[-1]
     cust = e.groupBy("c").agg(F.count(F.lit(1)).alias("degree")).select(
         F.concat(F.lit("C"), F.col("c").cast("string")).alias("node"),
         F.lit("customer").alias("side"),

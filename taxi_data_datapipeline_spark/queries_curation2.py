@@ -25,6 +25,7 @@ from taxi_data_datapipeline_spark.functions.text import (
     ngram_shingles,
     tokens,
 )
+from taxi_data_datapipeline_spark.operators.iterate import iterate, round_rows
 from taxi_data_datapipeline_spark.queries import load, register
 from taxi_data_datapipeline_spark.queries_data import (
     _SQL_GRAMS,
@@ -1002,9 +1003,8 @@ def q_fasttext_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the feature table is one explode + one map-side-
     combined groupBy per document; each round is a single full pass
-    with a broadcast 1-row weight table (scalar-broadcast idiom,
-    eagerly checkpointed so round k+1 never re-runs round k). At 100 TB
-    the model state is 17 integers and each round is one scan."""
+    with a broadcast 1-row weight table (scalar-broadcast idiom). At
+    100 TB the model state is 17 integers and each round is one scan."""
     d = load(spark, sf_dir, "documents", fan_out=True)
     bucket = (
         F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("bigint")
@@ -1027,64 +1027,57 @@ def q_fasttext_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in range(_FT_BUCKETS)
         ]
         # Persisted, NOT eagerly checkpointed: the training rounds run as
-        # SEPARATE actions (each round's gradient aggregate is an eager
-        # checkpoint), so AQE exchange reuse cannot help across rounds
+        # SEPARATE jobs, so AQE exchange reuse cannot help across rounds
         # and the tokenize + explode + groupBy re-ran per round. A
         # non-eager persist materializes inside round 1's own job (no
         # standalone barrier — the eager-checkpoint variant measured
         # +0.4 s of pure barrier in r12) and round 2 reads the cache;
         # unpersisted right after the loop so nothing outlives the build.
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    beta = spark.createDataFrame(
-        [tuple(0 for _ in range(_FT_BUCKETS + 1))],
-        ", ".join(f"u{i} bigint" for i in range(_FT_BUCKETS + 1)),
-    )
+    weights = [f"u{i}" for i in range(_FT_BUCKETS + 1)]
     dec = lambda c: F.round(c, 9).cast("decimal(28,12)")  # noqa: E731
-    out = None
-    try:
-        for k in range(1, _FT_ROUNDS + 1):
-            j = feat.crossJoin(F.broadcast(beta))
-            z = F.col("u0")
-            for b in range(_FT_BUCKETS):
-                z = z + F.col(f"u{b + 1}") * F.col(f"x{b}")
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(z.cast("double") * F.lit(1e-6))))
-            pred = (p >= 0.5).cast("int")
-            upd = j.agg(
-                F.sum(pred.cast("bigint")).alias("n_pred_pos"),
-                F.sum((pred == F.col("y")).cast("bigint")).alias("n_correct"),
-                F.floor(F.sum(dec(p - F.col("y"))) * 1000000)
-                .cast("bigint")
-                .alias("g0"),
-                *[
-                    F.floor(
-                        F.sum(dec((p - F.col("y")) * F.col(f"x{b}").cast("double")))
-                        * 1000000
-                    )
-                    .cast("bigint")
-                    .alias(f"g{b + 1}")
-                    for b in range(_FT_BUCKETS)
-                ],
-            ).localCheckpoint(eager=True)
-            beta = (
-                beta.crossJoin(F.broadcast(upd))
-                .select(
-                    *[
-                        (F.col(f"u{i}") - F.expr(f"g{i} DIV {_FT_LR}")).alias(f"u{i}")
-                        for i in range(_FT_BUCKETS + 1)
-                    ]
+
+    def step(state: DataFrame) -> DataFrame:
+        beta = state.select(*weights)
+        j = feat.crossJoin(F.broadcast(beta))
+        z = F.col("u0")
+        for b in range(_FT_BUCKETS):
+            z = z + F.col(f"u{b + 1}") * F.col(f"x{b}")
+        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(z.cast("double") * F.lit(1e-6))))
+        pred = (p >= 0.5).cast("int")
+        upd = j.agg(
+            F.sum(pred.cast("bigint")).alias("n_pred_pos"),
+            F.sum((pred == F.col("y")).cast("bigint")).alias("n_correct"),
+            F.floor(F.sum(dec(p - F.col("y"))) * 1000000)
+            .cast("bigint")
+            .alias("g0"),
+            *[
+                F.floor(
+                    F.sum(dec((p - F.col("y")) * F.col(f"x{b}").cast("double")))
+                    * 1000000
                 )
-                .localCheckpoint(eager=True)
-            )
-            row = upd.crossJoin(beta).select(
-                F.lit(k).alias("round"),
-                "n_pred_pos",
-                "n_correct",
-                *[F.col(f"u{i}") for i in range(_FT_BUCKETS + 1)],
-            )
-            out = row if out is None else out.unionAll(row)
+                .cast("bigint")
+                .alias(f"g{b + 1}")
+                for b in range(_FT_BUCKETS)
+            ],
+        )
+        return beta.crossJoin(upd).select(
+            "n_pred_pos",
+            "n_correct",
+            *[
+                (F.col(u) - F.expr(f"g{i} DIV {_FT_LR}")).alias(u)
+                for i, u in enumerate(weights)
+            ],
+        )
+
+    beta0 = spark.createDataFrame(
+        [tuple(0 for _ in weights)], ", ".join(f"{u} bigint" for u in weights)
+    )
+    try:
+        states = iterate(beta0, step, _FT_ROUNDS)
     finally:
-        # Every round's gradients are checkpointed above; the returned
-        # frame never touches feat again. Release the cache
-        # deterministically, also when a round's action raises.
+        # Every round's state is checkpointed; the returned frame never
+        # touches feat again. Release the cache deterministically, also
+        # when a round's action raises.
         feat.unpersist()
-    return out
+    return round_rows(states, "n_pred_pos", "n_correct", *weights)

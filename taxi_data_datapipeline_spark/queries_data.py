@@ -21,7 +21,6 @@ from taxi_data_datapipeline_spark.functions.text import (
     bpe_ish_tokens,
     fingerprint,
     lang_id,
-    lang_votes,
     ngram_shingles,
     quality_features,
     quality_score,

@@ -18,6 +18,7 @@ from taxi_data_datapipeline_spark.functions.text import (
     bpe_ish_tokens,
     quality_features,
 )
+from taxi_data_datapipeline_spark.operators.iterate import iterate, round_rows
 from taxi_data_datapipeline_spark.queries import load, register, shared
 from taxi_data_datapipeline_spark.streaming import drain
 
@@ -4392,11 +4393,11 @@ def q_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds as chained CTEs.
 
     Plan shape per round: one map-side-combined aggregate over the base
-    (the update vector), cross-joined back as a broadcast 1-row table —
-    the scalar-broadcast idiom; each round's 1-row beta is
-    localCheckpointed so round k's plan does not re-execute rounds
-    1..k-1 per reference (ROUND_NOTES landmine 18). At 100 TB each
-    round is a single pass; the weight vector state is 3 scalars."""
+    (the update vector) against the broadcast 1-row state — the
+    scalar-broadcast idiom. The state row carries the round's n_mis and
+    the updated coefficients, and is also that round's output row. At
+    100 TB each round is a single pass; the weight vector state is 3
+    scalars."""
     li = load(spark, sf_dir, "lineitem")
     base = li.select(
         F.when(F.col("l_returnflag") == "R", 1).otherwise(-1).alias("y"),
@@ -4407,9 +4408,10 @@ def q_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("x2"),
     )
-    beta = spark.createDataFrame([(0, 0, 0)], "c0 bigint, c1 bigint, c2 bigint")
-    rows = []
-    for k in range(1, 4):
+    coef = ["c0", "c1", "c2"]
+
+    def step(state: DataFrame) -> DataFrame:
+        beta = state.select(*coef)
         j = base.crossJoin(F.broadcast(beta))
         margin = F.col("y") * (
             F.col("c0") + F.col("c1") * F.col("x1") + F.col("c2") * F.col("x2")
@@ -4424,29 +4426,19 @@ def q_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d2"),
             F.sum(mis.cast("bigint")).alias("n_mis"),
-        ).localCheckpoint(eager=True)
-        beta = (
-            beta.crossJoin(F.broadcast(upd))
-            .select(
-                (F.col("c0") + F.col("d0")).alias("c0"),
-                (F.col("c1") + F.col("d1")).alias("c1"),
-                (F.col("c2") + F.col("d2")).alias("c2"),
-            )
-            .localCheckpoint(eager=True)
         )
-        rows.append(
-            upd.crossJoin(beta).select(
-                F.lit(k).alias("round"),
-                "n_mis",
-                F.col("c0").alias("beta0"),
-                F.col("c1").alias("beta1"),
-                F.col("c2").alias("beta2"),
-            )
+        return beta.crossJoin(upd).select(
+            "n_mis", *[(F.col(c) + F.col(f"d{i}")).alias(c) for i, c in enumerate(coef)]
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
+
+    beta0 = spark.createDataFrame([(0, 0, 0)], "c0 bigint, c1 bigint, c2 bigint")
+    return round_rows(
+        iterate(beta0, step, 3),
+        "n_mis",
+        F.col("c0").alias("beta0"),
+        F.col("c1").alias("beta1"),
+        F.col("c2").alias("beta2"),
+    )
 
 
 # --- logistic regression (batch gradient descent) -----------------------------
@@ -4503,10 +4495,9 @@ WITH base AS (
 
 # Shared trained-model chain: logistic_gd and logistic_calibration train
 # the IDENTICAL 2-round batch-GD model (integer micro-unit weights, exact
-# decimal gradient sums). Each round is a full pass over lineitem that
-# materializes eagerly (localCheckpoint), so recomputing the chain in
-# calibration would double the training passes for bit-identical 1-row
-# results — memoize the (upd, beta) pairs per session.
+# decimal gradient sums). Each round is a full pass over lineitem, so
+# recomputing the chain in calibration would double the training passes
+# for bit-identical 1-row results — memoize the round states per session.
 
 
 def _logit_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4530,15 +4521,15 @@ def _logit_z_p(beta_joined):
 
 
 def _logit_chain(spark: SparkSession, sf_dir: str, rounds: int) -> list:
-    """[(upd, beta)] per training round; upd carries n_pred_pos + the
-    integer gradient units, beta the post-update micro-unit weights."""
+    """The 1-row state of every training round: the round's n_pred_pos
+    and the post-update micro-unit weights u0..u2."""
 
     def build() -> list:
         base = _logit_base(spark, sf_dir)
-        beta = spark.createDataFrame([(0, 0, 0)], "u0 bigint, u1 bigint, u2 bigint")
-        chain = []
         dec = lambda c: F.round(c, 9).cast("decimal(28,12)")  # noqa: E731
-        for _k in range(rounds):
+
+        def step(state: DataFrame) -> DataFrame:
+            beta = state.select("u0", "u1", "u2")
             j = base.crossJoin(F.broadcast(beta))
             p = _logit_z_p(j)
             upd = j.agg(
@@ -4552,18 +4543,16 @@ def _logit_chain(spark: SparkSession, sf_dir: str, rounds: int) -> list:
                 F.floor(F.sum(dec((p - F.col("y")) * F.col("x2").cast("double"))) * 1000000)
                 .cast("bigint")
                 .alias("g2"),
-            ).localCheckpoint(eager=True)
-            beta = (
-                beta.crossJoin(F.broadcast(upd))
-                .select(
-                    (F.col("u0") - F.expr(f"g0 DIV {_LOGIT_LR0}")).alias("u0"),
-                    (F.col("u1") - F.expr(f"g1 DIV {_LOGIT_LRX}")).alias("u1"),
-                    (F.col("u2") - F.expr(f"g2 DIV {_LOGIT_LRX}")).alias("u2"),
-                )
-                .localCheckpoint(eager=True)
             )
-            chain.append((upd, beta))
-        return chain
+            return beta.crossJoin(upd).select(
+                "n_pred_pos",
+                (F.col("u0") - F.expr(f"g0 DIV {_LOGIT_LR0}")).alias("u0"),
+                (F.col("u1") - F.expr(f"g1 DIV {_LOGIT_LRX}")).alias("u1"),
+                (F.col("u2") - F.expr(f"g2 DIV {_LOGIT_LRX}")).alias("u2"),
+            )
+
+        beta0 = spark.createDataFrame([(0, 0, 0)], "u0 bigint, u1 bigint, u2 bigint")
+        return iterate(beta0, step, rounds)
 
     return shared(spark, sf_dir, "logit_chain", build, rounds)
 
@@ -4589,28 +4578,20 @@ def q_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
       the next round's weights integers.
 
     Plan per round: one map-side-combined aggregate over the base +
-    broadcast 1-row weight table (scalar-broadcast idiom, 1-row
-    checkpoints; ROUND_NOTES landmine 18). At 100 TB each round is a
-    single pass and the model state is 3 integers. Saturated sigmoids
-    are IEEE-safe on both engines (exp overflow -> inf -> p -> {{0,1}}).
+    broadcast 1-row weight table (scalar-broadcast idiom). At 100 TB
+    each round is a single pass and the model state is 3 integers.
+    Saturated sigmoids are IEEE-safe on both engines (exp overflow ->
+    inf -> p -> {{0,1}}).
     The trained chain is memoized per session and shared with
     `logistic_calibration` (_logit_chain).
     """
-    rows = []
-    for k, (upd, beta) in enumerate(_logit_chain(spark, sf_dir, 2), start=1):
-        rows.append(
-            upd.crossJoin(beta).select(
-                F.lit(k).alias("round"),
-                "n_pred_pos",
-                F.col("u0").alias("beta0_micro"),
-                F.col("u1").alias("beta1_micro"),
-                F.col("u2").alias("beta2_micro"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
+    return round_rows(
+        _logit_chain(spark, sf_dir, 2),
+        "n_pred_pos",
+        F.col("u0").alias("beta0_micro"),
+        F.col("u1").alias("beta1_micro"),
+        F.col("u2").alias("beta2_micro"),
+    )
 
 
 def _calibration_oracle() -> str:
@@ -4654,7 +4635,7 @@ def q_logistic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles in both engines. One extra pass over the base
     beyond training."""
     base = _logit_base(spark, sf_dir)
-    beta = _logit_chain(spark, sf_dir, 2)[-1][1]
+    beta = _logit_chain(spark, sf_dir, 2)[-1].select("u0", "u1", "u2")
     j = base.crossJoin(F.broadcast(beta))
     p = _logit_z_p(j)
     pbucket = F.least(F.floor(p * 100000).cast("int"), F.lit(99999))

@@ -62,12 +62,6 @@ def test_clone_is_memoized_per_partition_count(spark):
     assert _stream_session(spark, SF) is _stream_session(spark, SF)
 
 
-def test_env_override_wins(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "7")
-    sess = _stream_session(spark, SF)
-    assert int(sess.conf.get("spark.sql.shuffle.partitions")) == 7
-
-
 def test_nonlocal_source_keeps_callers_session(spark):
     # object-store paths can't be sized locally; the caller's session
     # (and therefore its configuration) must pass through unchanged
@@ -80,9 +74,12 @@ def test_load_memo_not_poisoned_by_clone(spark, monkeypatch):
     a later createOrReplaceTempView register in the CLONE's catalog —
     the main session's spark.sql then fails with TABLE_OR_VIEW_NOT_FOUND
     (r12 gate: sql_shipping_priority / sql_lateral_topk)."""
+    from taxi_data_datapipeline_spark import queries_advanced
     from taxi_data_datapipeline_spark.queries import load
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "3")
+    # sf0.001's events fit one partition: the clone gets 1, not the
+    # session's own count
+    monkeypatch.setattr(queries_advanced, "_STREAM_MIN_PARTITIONS", 1)
     clone = _stream_session(spark, SF)
     assert clone is not spark
     df_clone = load(clone, SF, "customer")
@@ -95,22 +92,20 @@ def test_load_memo_not_poisoned_by_clone(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("name", ["streaming_session_windows"])
-def test_streaming_query_result_unchanged_on_clone(spark, name):
+def test_streaming_query_result_unchanged_on_clone(spark, monkeypatch, name):
     """The drained stream result is a function of the data, not of the
     state partition count: same rows at the derived count and at the
     session default."""
+    from taxi_data_datapipeline_spark import queries_advanced
     from taxi_data_datapipeline_spark.queries import QUERIES
 
     got = QUERIES[name](spark, SF)
-    n_default = None
-    try:
-        os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = str(
-            spark.sparkContext.defaultParallelism
-        )
-        wide = QUERIES[name](spark, SF)
-        n_default = wide.count()
-    finally:
-        os.environ.pop("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", None)
+    # a minimum at the cap derives defaultParallelism partitions
+    monkeypatch.setattr(
+        queries_advanced, "_STREAM_MIN_PARTITIONS", spark.sparkContext.defaultParallelism
+    )
+    wide = QUERIES[name](spark, SF)
+    n_default = wide.count()
     assert got.count() == n_default
     assert got.exceptAll(wide).count() == 0
     assert wide.exceptAll(got).count() == 0

@@ -1,7 +1,9 @@
 """Warm SERIAL per-query profiler: isolates each query's compute with the
 noop sink (guide §1.4), one at a time on the full local core count, min of
 N warm passes after a cold pass — the contended bench numbers can't
-attribute time to a plan, this can.
+attribute time to a plan, this can. Every pass starts from
+``clear_memos()``, as perfbench's ``query_mix`` does, so a memo consumer's
+warm passes rebuild its memo instead of reading the cold pass's.
 
 Usage:
   python tools/warm_profile.py out.json query1 [query2 ...]
@@ -20,6 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as e
+from taxi_data_datapipeline_spark.queries import clear_memos
 from taxi_data_datapipeline_spark.session import get_spark
 
 
@@ -48,6 +51,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"warm_profile:{n}")
         walls = []
         for i in range(passes + 1):  # pass 0 = this query's own codegen warmup
+            clear_memos()
             t0 = time.time()
             qs[n](spark, sf_dir).write.format("noop").mode("overwrite").save()
             walls.append(round(time.time() - t0, 3))
