@@ -17,9 +17,12 @@ parallel-listing job when its scan is built:
   scheduler replaces the process pool, and partial/final HashAggregate
   replaces the hand-rolled three-level merge;
 * run metrics (input rows, month-mismatch audit, parse failures, low-count
-  drops — reference A3/A7) ride the SAME job via ``DataFrame.observe``,
-  which is exactly-once per successful action (safe under task retries,
-  unlike accumulators);
+  drops — reference A3/A7) are columns of the pivot's own aggregate
+  (``n_rows`` and a FILTER-clause mismatch count beside the 24 hour
+  counters), folded by ONE ``DataFrame.observe`` over the aggregate's
+  output — one row per (type, date, place) group, not per input row.
+  ``observe`` is exactly-once per successful action (safe under task
+  retries, unlike accumulators);
 * the final table writes straight to the output URI (an ``s3a://`` path on
   a real cluster covers the reference's separate ``aws s3 cp`` step S8);
 * the metrics report renders to JSON or LaTeX like the reference's
@@ -152,14 +155,19 @@ def build_wide_plan(
     trips: DataFrame,
     min_rides: int,
     taxi_types: Sequence[str] | None = None,
-) -> tuple[DataFrame, Observation, Observation]:
-    """Attach audit observations and build the pivot plan.
+) -> tuple[DataFrame, Observation]:
+    """Build the pivot plan with its audit counters in the same aggregate.
 
-    Returns (wide_df, ingest_observation, having_observation). The ingest
-    observation yields input_rows / parse_failures / month_mismatch
-    (reference A3 semantics: mismatches are COUNTED, the rows still
-    aggregate); the having observation yields the low-count drop count
-    (reference P3 stats dict).
+    Returns (wide_df, observation). Every input row, null timestamps
+    included, goes through ONE aggregate on (taxi type, date, place): the
+    24 hour counters plus ``n_rows`` and the month-mismatch count
+    ``n_mismatch`` (reference A3 semantics: mismatches are COUNTED, the
+    rows still aggregate). A null timestamp lands in a group whose date is
+    NULL; that group is never written. The observation sits over the
+    aggregate's output, one row per group instead of one per input row,
+    and yields all five counters: input_rows, parse_failures (the rows of
+    the NULL-date groups), month_mismatch, and over the dated groups only
+    low_count_dropped and kept (reference P3 stats dict).
 
     ``taxi_types`` (the driver-known label universe, from ingest) lets
     the aggregate key on a small INT code instead of the label string:
@@ -169,17 +177,12 @@ def build_wide_plan(
     50M-row probe); the label is decoded back per OUTPUT row. Omitted ->
     group on the string, unchanged semantics.
     """
-    ingest_obs = Observation("ingest")
-    # ONE timestamp decomposition per row. The naive form spends four
-    # calendar conversions per row (to_date + hour for the projection,
-    # year + month for the audit) — at 100M+ rows that dominates the whole
-    # map phase. Instead: epoch seconds once (timestamp->long is a pure
-    # integer op), date and hour by integer arithmetic (exact under the
-    # UTC session timezone session.py pins; floor/pmod keep pre-1970
-    # timestamps correct), and the month-mismatch audit as a half-open
-    # calendar-window test on the derived DATE (make_date/add_months are
-    # int calendar math, no zone lookups) — equivalent to the
-    # year()/month() pair for any valid (file_year, file_month).
+    # ONE timestamp decomposition per row: epoch seconds once
+    # (timestamp->long is a pure integer op), date and hour by integer
+    # arithmetic (exact under the UTC session timezone session.py pins;
+    # floor/pmod keep pre-1970 timestamps correct). The month-mismatch
+    # audit compares year*12 + month of the derived DATE with the file's
+    # (int calendar math on the day number, no zone lookups).
     secs = "CAST(pickup_datetime AS BIGINT)"
     # pickup_place keeps whatever type ingest resolved (native ints under
     # typed_place): the aggregation below keys on it, and hashing a
@@ -197,36 +200,33 @@ def build_wide_plan(
         type_key, type_out = "taxi_type", "taxi_key"
     projected = trips.selectExpr(
         f"{type_key} AS taxi_key", "file_year", "file_month",
-        "pickup_datetime IS NOT NULL AS has_ts",
         f"date_from_unix_date(CAST(floor({secs} / 86400) AS INT)) AS date",
         f"CAST(pmod({secs}, 86400) / 3600 AS INT) AS hour", "pickup_place",
     )
-    month_start = "make_date(file_year, file_month, 1)"
-    mismatch = (f"has_ts AND file_year IS NOT NULL AND (date < {month_start}"
-                f" OR date >= add_months({month_start}, 1))")
-    projected = projected.observe(
-        ingest_obs,
-        F.expr("count(1) AS input_rows"),
-        F.expr("sum(CAST(NOT has_ts AS BIGINT)) AS parse_failures"),
-        F.expr(f"sum(CAST({mismatch} AS BIGINT)) AS month_mismatch"),
+    mismatch = ("file_year IS NOT NULL AND"
+                " year(date) * 12 + month(date) <> file_year * 12 + file_month")
+    grouped = pivot_counts(
+        projected, ["taxi_key", "date", "pickup_place"], "hour", range(24), "hour_",
+        extra=["count(1) AS n_rows", f"count(1) FILTER (WHERE {mismatch}) AS n_mismatch"],
     )
-
-    prepared = projected.filter("has_ts").select("taxi_key", "date", "pickup_place", "hour")
-    unfiltered = pivot_counts(
-        prepared, ["taxi_key", "date", "pickup_place"], "hour", range(24), "hour_"
-    )
-    having_obs = Observation("having")
+    # observe() rejects FILTER aggregates: the conditional sums are CASTs.
     total = row_total(HOUR_COLUMNS)
-    unfiltered = unfiltered.observe(
-        having_obs,
-        F.expr(f"sum(CAST(({total}) < {min_rides} AS BIGINT)) AS low_count_dropped"),
-        F.expr(f"sum(CAST(({total}) >= {min_rides} AS BIGINT)) AS kept"),
+    kept = f"date IS NOT NULL AND ({total}) >= {min_rides}"
+    obs = Observation("pivot")
+    grouped = grouped.observe(
+        obs,
+        F.expr("sum(n_rows) AS input_rows"),
+        F.expr("sum(CAST(date IS NULL AS BIGINT) * n_rows) AS parse_failures"),
+        F.expr("sum(n_mismatch) AS month_mismatch"),
+        F.expr(f"sum(CAST(date IS NOT NULL AND ({total}) < {min_rides} AS BIGINT))"
+               " AS low_count_dropped"),
+        F.expr(f"sum(CAST({kept} AS BIGINT)) AS kept"),
     )
-    wide = unfiltered.filter(f"({total}) >= {min_rides}").selectExpr(
+    wide = grouped.filter(kept).selectExpr(
         f"{type_out} AS taxi_type", "date", "CAST(pickup_place AS STRING) AS pickup_place",
         *HOUR_COLUMNS,
     )
-    return wide, ingest_obs, having_obs
+    return wide, obs
 
 
 def run_pivot_pipeline(
@@ -241,7 +241,7 @@ def run_pivot_pipeline(
     types = sorted(
         {infer_taxi_type_from_path(f) for f in ingest_report.resolved}
     )
-    wide, ingest_obs, having_obs = build_wide_plan(
+    wide, obs = build_wide_plan(
         trips, config.min_rides, taxi_types=types or None
     )
 
@@ -254,17 +254,16 @@ def run_pivot_pipeline(
         writer = writer.partitionBy(*config.partition_output_by)
     writer.parquet(config.output_path)
 
-    ing = ingest_obs.get if files and ingest_report.resolved else {}
-    hav = having_obs.get if files and ingest_report.resolved else {}
+    counts = obs.get if files and ingest_report.resolved else {}
     metrics = PipelineMetrics(
         files_discovered=len(files),
         files_processed=len(ingest_report.resolved),
         files_skipped=len(ingest_report.skipped),
-        input_rows=int(ing.get("input_rows") or 0),
-        parse_failures=int(ing.get("parse_failures") or 0),
-        month_mismatch_rows=int(ing.get("month_mismatch") or 0),
-        low_count_dropped=int(hav.get("low_count_dropped") or 0),
-        output_rows=int(hav.get("kept") or 0),
+        input_rows=int(counts.get("input_rows") or 0),
+        parse_failures=int(counts.get("parse_failures") or 0),
+        month_mismatch_rows=int(counts.get("month_mismatch") or 0),
+        low_count_dropped=int(counts.get("low_count_dropped") or 0),
+        output_rows=int(counts.get("kept") or 0),
         wall_seconds=round(time.time() - t0, 2),
     )
     if config.report_path:

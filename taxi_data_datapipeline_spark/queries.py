@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
+from taxi_data_datapipeline_spark.sources.ingest import footer_schema
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -161,14 +162,18 @@ def load(
     (session, sf_dir, table) is safe and skips the parquet footer
     listing + schema read that spark.read.parquet pays on every call —
     across an 85-query suite that's hundreds of redundant footer reads.
-    This is the engine's (tiny) catalog layer."""
+    This is the engine's (tiny) catalog layer. The scan declares the
+    schema Spark would infer, read from the footer driver-side
+    (``footer_schema``): inferring it is a Spark job per scan. Where the
+    footer cannot be read that way, Spark infers it."""
 
     def build() -> DataFrame:
         nanos_cols = _NANOS_TS_COLS.get(table, [])
         if nanos_cols:
             ensure_nanos_as_long(spark)
         path = f"{sf_dir}/{table}.parquet"
-        df = spark.read.parquet(path)
+        schema = footer_schema(path)
+        df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
         if fan_out:
             df = _fan_out_narrow_scan(spark, df, path)
         for c in nanos_cols:

@@ -21,6 +21,7 @@ from taxi_data_datapipeline_spark.operators.asof import asof_join
 from taxi_data_datapipeline_spark.operators.iterate import iterate
 from taxi_data_datapipeline_spark.queries import load, nanos_ts, register, shared
 from taxi_data_datapipeline_spark.session import ensure_nanos_as_long
+from taxi_data_datapipeline_spark.sources.ingest import footer_schema
 from taxi_data_datapipeline_spark.streaming import drain
 
 # --- as-of join ---------------------------------------------------------------
@@ -408,14 +409,13 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the events table, its ``ts`` normalized by
     the batch ``load()``'s ``nanos_ts`` (watermarks require the
     session-zoned TIMESTAMP). Glob form: the file-stream source needs a directory basePath,
-    which it infers from the non-glob path prefix. The raw schema is
-    inferred once per session (``shared``): inferring it is a Spark job."""
+    which it infers from the non-glob path prefix. The raw schema is read
+    from the footer (``footer_schema``, no Spark job); where that fails it
+    is inferred once per session (``shared``): inferring it is a Spark job."""
     ensure_nanos_as_long(spark)
-    schema = shared(
-        spark,
-        sf_dir,
-        "events_schema",
-        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
+    path = f"{sf_dir}/events.parquet"
+    schema = footer_schema(path) or shared(
+        spark, sf_dir, "events_schema", lambda: spark.read.parquet(path).schema
     )
     raw = (
         spark.readStream.schema(schema)

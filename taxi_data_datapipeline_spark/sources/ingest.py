@@ -45,6 +45,7 @@ from urllib.parse import unquote, urlsplit
 
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.errors import PySparkTypeError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,11 +118,34 @@ _UNSIGNED = {
 }
 
 
-def _spark_type(at: pa.DataType):
+def _spark_type(at: pa.DataType, prefer_timestamp_ntz: bool = False):
     if pa.types.is_timestamp(at) and at.unit == "ns":
         # Read as bigint under nanosAsLong; coerce_timestamp restores it.
         return LongType()
-    return _UNSIGNED.get(at) or from_arrow_type(at)
+    return _UNSIGNED.get(at) or from_arrow_type(at, prefer_timestamp_ntz)
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers for one parquet file,
+    derived driver-side from its footer with pyarrow (no Spark job).
+    Tz-naive timestamps map to TIMESTAMP_NTZ, as Spark infers parquet
+    TIMESTAMP(isAdjustedToUTC=false) by default
+    (``spark.sql.parquet.inferTimestampNTZ.enabled``). None where ``path``
+    is not a local file, its footer cannot be read, a column is INT96
+    (which pyarrow surfaces tz-naive but Spark reads as TIMESTAMP), or a
+    type has no Spark mapping: the caller then lets Spark infer the schema."""
+    if not os.path.isfile(path):
+        return None
+    try:
+        with pq.ParquetFile(path) as pf:
+            if any(c.physical_type == "INT96" for c in pf.schema):
+                return None
+            return StructType([
+                StructField(f.name, _spark_type(f.type, prefer_timestamp_ntz=True))
+                for f in pf.schema_arrow
+            ])
+    except (OSError, pa.ArrowException, PySparkTypeError):
+        return None
 
 
 def _declared_schema(footer: pa.Schema, ts: TripSchema) -> StructType | None:
@@ -245,7 +269,7 @@ def normalize_trips(
                 coerce_timestamp(F.col(ts.datetime_col), dt_type).alias("pickup_datetime"),
                 place.alias("pickup_place"),
                 F.expr(f"{sql_string(ttype)} AS taxi_type"),
-                F.expr(f"CAST(({ym}) / 100 AS INT) AS file_year"),
+                F.expr(f"CAST(({ym}) DIV 100 AS INT) AS file_year"),
                 F.expr(f"({ym}) % 100 AS file_month"),
             )
         )

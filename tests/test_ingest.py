@@ -8,15 +8,19 @@ normalize_trips + hourly_pivot.
 from __future__ import annotations
 
 import datetime
+import glob
 import os
+import shutil
 
 import pytest
+from conftest import SF_SMOKE
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
 from taxi_data_datapipeline_spark.operators.pivot import hourly_pivot
-from taxi_data_datapipeline_spark.sources.ingest import normalize_trips, sql_string
+from taxi_data_datapipeline_spark.queries import _NANOS_TS_COLS, clear_memos, load, nanos_ts
+from taxi_data_datapipeline_spark.sources.ingest import footer_schema, normalize_trips, sql_string
 from taxi_data_datapipeline_spark.sources.paths import infer_month_from_path
 
 
@@ -428,3 +432,35 @@ def test_footer_types_resolve_like_spark_inference(spark, tmp_path, case, place_
     assert sorted((r.us, str(r.pickup_place)) for r in got.collect()) == sorted(
         zip(_MICROS, map(str, ids))
     )
+
+
+def test_load_declares_the_inferred_schema_without_a_job(spark, tmp_path):
+    """load() declares each table's schema from its parquet footer: the
+    scan starts no Spark job, and the schema is the one Spark's own
+    inference gives (TIMESTAMP_NTZ for tz-naive timestamps included).
+    The tables are copied so that no memoized scan answers the call."""
+    sf_dir = str(tmp_path)
+    for p in glob.glob(f"{SF_SMOKE}/*.parquet"):
+        shutil.copy(p, sf_dir)
+    tables = sorted(os.path.basename(p)[: -len(".parquet")]
+                    for p in glob.glob(f"{sf_dir}/*.parquet"))
+    assert tables
+    sc = spark.sparkContext
+
+    def jobs() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    try:
+        for table in tables:
+            path = f"{sf_dir}/{table}.parquet"
+            before = jobs()
+            loaded = load(spark, sf_dir, table)
+            assert jobs() == before, table
+            inferred = spark.read.parquet(path)
+            assert footer_schema(path) == inferred.schema, table
+            for c in _NANOS_TS_COLS.get(table, []):
+                inferred = nanos_ts(inferred, c)
+            assert loaded.schema == inferred.schema, table
+    finally:
+        clear_memos(sf_dir)

@@ -15,6 +15,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from taxi_data_datapipeline_spark.operators.pivot import HOUR_COLUMNS
 from taxi_data_datapipeline_spark.plans.pipeline import (
     PipelineConfig,
     PipelineMetrics,
@@ -393,3 +394,65 @@ def test_plan_build_round_trip_budget(spark, tmp_path):
         trips, _ = normalize_trips(spark, files, typed_place=True)
         build_wide_plan(trips, 1, taxi_types=["yellow"])
     assert 0 < len(calls) < 1000
+
+
+def test_flagship_plan_is_one_fused_aggregate(spark, taxi_dir):
+    """The audit counters are columns of the pivot's own aggregate: the
+    executed plan holds ONE CollectMetrics, above the final HashAggregate
+    (over one row per group, not per input row), and the hour counters are
+    FILTER clauses, so no hoisted ``_common_expr`` boolean per row."""
+    from taxi_data_datapipeline_spark.plans.pipeline import build_wide_plan
+    from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
+
+    cfg = PipelineConfig(input_path=taxi_dir, output_path="/dev/null", name_filter="tripdata")
+    trips, _ = normalize_trips(spark, select_input_files(cfg), typed_place=True)
+    wide, _ = build_wide_plan(trips, 50, taxi_types=["green", "yellow"])
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("CollectMetrics") == 1
+    assert plan.index("CollectMetrics") < plan.index("HashAggregate")
+    assert "_common_expr" not in plan
+
+
+def _write_trips(path, stamps, places):
+    pdf = pd.DataFrame({"tpep_pickup_datetime": stamps, "PULocationID": places})
+    pq.write_table(pa.Table.from_pandas(pdf), path, coerce_timestamps="us")
+
+
+@pytest.mark.parametrize("min_rides, kept, dropped", [(5, 1, 3), (0, 4, 0)])
+def test_pipeline_counters_match_hand_counts(spark, tmp_path, min_rides, kept, dropped):
+    """All five counters come from the one aggregate. A null timestamp in
+    the same (type, place) as a kept cell is a parse failure, never a
+    written row; rows of a file whose path names no month are never
+    month mismatches."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    ts = pd.Timestamp
+    # March file: 6 rides in the kept cell (place 5), a null timestamp at
+    # place 5, 2 rides at place 9, one April ride (a month mismatch).
+    _write_trips(
+        str(in_dir / "yellow_tripdata_2024-03.parquet"),
+        [ts(f"2024-03-04 10:{m:02d}") for m in range(6)]
+        + [pd.NaT, ts("2024-03-04 11:00"), ts("2024-03-04 11:30"), ts("2024-04-01 00:30")],
+        [5] * 6 + [5, 9, 9, 5],
+    )
+    # No month in the path: 3 more rides in the kept cell, 2 in July, a null.
+    _write_trips(
+        str(in_dir / "yellow_extra.parquet"),
+        [ts("2024-03-04 12:00")] * 3 + [ts("2024-07-01 08:00")] * 2 + [pd.NaT],
+        [5] * 6,
+    )
+    out = str(tmp_path / "wide")
+    cfg = PipelineConfig(input_path=str(in_dir), output_path=out, min_rides=min_rides)
+    metrics = run_pivot_pipeline(spark, cfg)
+
+    assert metrics.files_processed == 2
+    assert metrics.input_rows == 16
+    assert metrics.parse_failures == 2
+    assert metrics.month_mismatch_rows == 1
+    assert metrics.output_rows == kept
+    assert metrics.low_count_dropped == dropped
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == kept
+    assert all(r.date is not None for r in rows)
+    cell = next(r for r in rows if str(r.date) == "2024-03-04" and r.pickup_place == "5")
+    assert (cell.hour_10, cell.hour_12, sum(cell[h] for h in HOUR_COLUMNS)) == (6, 3, 9)
