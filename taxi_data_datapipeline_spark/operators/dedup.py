@@ -7,7 +7,9 @@ Four tiers, each a pure DataFrame plan:
   bucket self-pairing -> exact-Jaccard verification of candidates only.
   The scale path: cost is O(corpus) + O(candidate pairs), never O(n^2).
 * **SimHash**: 64-bit sign-of-weighted-bit-sums fingerprint; near-dups =
-  small Hamming distance within LSH-style prefix buckets.
+  small Hamming distance, candidates from pigeonhole blocks
+  (``hamming_pairs``, the one Hamming self-join, which the perceptual
+  image hashes share).
 * **blocked exact Jaccard**: O(block^2) pairwise verification inside cheap
   blocking keys — the oracle-checkable ground truth for the tiers above.
 
@@ -25,10 +27,9 @@ gram arrays (about 3 KB per document deserialized) hit a GC cliff between
 1.6 M and 3.2 M documents. ``verify_pairs`` owns candidate verification:
 the candidate-then-verify joins (MinHash LSH, prefix filter, containment,
 sorted neighborhood) hand it their candidate pairs, and it re-shingles and
-materializes only the documents they name. The one per-document frame kept
-is ``simhash_dedup``'s fingerprint table (one long per document): both
-self-join sides read it, and without it the signature aggregate runs once
-per side.
+materializes only the documents they name. ``hamming_pairs`` materializes
+its signature table (one long per document) once, for both self-join
+sides.
 
 Algorithms are the standard public constructions: MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
@@ -415,104 +416,95 @@ def simhash_table(
     return counts.select("_id", out.alias("sh"))
 
 
+def hamming_pairs(
+    sig: DataFrame,
+    max_hamming: int,
+    bits: int,
+    max_bucket_fanout: int | None = None,
+) -> DataFrame:
+    """Near-dup pairs of a signature table ``(_id, sh BIGINT)``: every
+    pair (doc_a < doc_b) whose ``bits``-bit signatures differ in at most
+    ``max_hamming`` bits, with its ``hamming`` distance.
+
+    Pigeonhole candidates (the Manku/Jain/Sarma WWW'07 construction):
+    the low ``bits`` bits split into ``max_hamming + 1`` disjoint blocks of
+    ``bits // (max_hamming + 1)`` bits. A pair with at most
+    ``max_hamming`` differing bits cannot touch every block, so it agrees
+    exactly on at least one and one self-join on (block, value) finds it:
+    full recall at the radius, each document exploded once per block. A
+    pair agreeing on k blocks surfaces k times; the Hamming filter runs
+    first, so the distinct sees answer-sized rows.
+
+    The self-join is pinned ``shuffle_hash``: both sides scale with the
+    corpus, and the build side (an aggregate or codec output under an
+    ``inline``) is the class whose optimistic row estimate let a
+    statistics-gated broadcast fail at sf3 (SCALING.md, round 11/12).
+    The signature table (one long per document) is checkpointed lazily
+    for the self-join: its first read fills the checkpoint, so it adds no
+    job, and both sides read it instead of each re-running the signature
+    plan (the two sides' column aliases differ, so the exchange is not
+    reused). In paired probes at sf0.1 under the pin, the image tables
+    read the same under a lazy and an eager checkpoint, and the SimHash
+    tables read 0-12% slower in the median under the lazy one (faster in
+    4 and 3 of 10 pairs in the longest probe); lazy is kept for the job
+    it saves. With no checkpoint the SimHash tables read slower than under
+    either checkpoint, and the image tables the same or a little faster.
+
+    ``max_bucket_fanout`` is the hot-bucket skew guard (the same contract
+    as ``minhash_lsh_pairs``): k near-identical documents share a bucket
+    in every block and emit O(k^2) pairs. With a cap F each member pairs
+    only with the F lowest-id members of its bucket (O(k*F) edges);
+    buckets of at most F + 1 members keep the exact pair set.
+    """
+    width = bits // (max_hamming + 1)
+    blocks = ", ".join(
+        f"named_struct('t', {t}, 'bv', shiftright(sh, {t * width}) & {(1 << width) - 1})"
+        for t in range(max_hamming + 1)
+    )
+    explode = f"inline(array({blocks}))"
+    if max_bucket_fanout is None:
+        keyed = sig.localCheckpoint(eager=False).selectExpr("_id", "sh", explode)
+        a = keyed.selectExpr("t", "bv", "_id AS doc_a", "sh AS sh_a")
+        b = keyed.selectExpr("t", "bv", "_id AS doc_b", "sh AS sh_b")
+        cands = a.join(b.hint("shuffle_hash"), ["t", "bv"]).filter("doc_a < doc_b")
+    else:
+        # One read of the signatures, so no checkpoint. The (_id, sh)
+        # structs sort and compare by _id first.
+        cands = (
+            sig.selectExpr("_id", "sh", explode)
+            .groupBy("t", "bv")
+            .agg(F.expr("collect_set(struct(_id, sh)) AS ms"))
+            .selectExpr(f"inline({_capped_pairs_sql('ms', max_bucket_fanout)})")
+            .selectExpr("a._id AS doc_a", "a.sh AS sh_a", "b._id AS doc_b", "b.sh AS sh_b")
+        )
+    return (
+        cands.selectExpr("doc_a", "doc_b", "bit_count(sh_a ^ sh_b) AS hamming")
+        .filter(f"hamming <= {max_hamming}")
+        .distinct()
+    )
+
+
 def simhash_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     hash_fn: str = "xxhash64",
-    num_tables: int | None = None,
     max_bucket_fanout: int | None = None,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash with GUARANTEED recall: the fingerprint
-    is split into ``num_tables`` (default ``max_hamming + 1``) disjoint
-    bit-blocks, each block is an LSH table, and candidates are the union
-    of per-block bucket self-joins; Hamming distance <= max_hamming
-    verifies inside buckets.
+    """Near-dup pairs (doc_a, doc_b, hamming) by SimHash over word
+    3-grams: ``hamming_pairs`` over ``simhash_table``, so every pair
+    within ``max_hamming`` is found (the pigeonhole guarantee; a single
+    prefix bucket missed pairs whose differing bits fell in the prefix).
 
-    Pigeonhole recall proof (the Manku/Jain/Sarma WWW'07 construction):
-    a pair with at most ``max_hamming`` differing bits cannot touch all
-    ``max_hamming + 1`` blocks, so the two fingerprints agree EXACTLY on
-    at least one block and the pair is generated by that table — 100%
-    recall at the stated radius, unlike a single prefix bucket (the
-    rounds-1-3 demo formulation, which missed pairs whose differing bits
-    fell in the prefix). Cost: each doc appears in num_tables buckets
-    (explode factor 4 for hamming 3) — the standard production trade.
-
-    ``max_bucket_fanout`` is the hot-bucket skew guard (same contract as
-    ``minhash_lsh_pairs``): a template cluster of k near-identical docs
-    puts all k in the same block bucket of every table, emitting
-    O(k^2) hamming-0 pairs — the 200k-doc scale probe measured 1.04M
-    pairs from ONE 2000-doc cluster uncapped. With a cap each member
-    pairs only with the F lowest-id members per bucket (O(k*F) edges);
-    buckets with k <= F keep exact semantics, and the guaranteed-recall
-    property holds for every pair not inside a capped mega-bucket.
-    None (default) = exact everywhere — what the oracle-checked queries
-    use.
+    ``max_bucket_fanout`` caps template clusters (the 200k-doc scale
+    probe measured 1.04M hamming-0 pairs from ONE 2000-doc cluster
+    uncapped); None (default) is exact everywhere, which the
+    oracle-checked queries use.
     """
     _, bits = _feature_hash(F.lit(""), hash_fn)
-    nt = num_tables if num_tables is not None else max_hamming + 1
-    block_bits = bits // nt
-    mask = (1 << block_bits) - 1
-    # One fingerprint row per doc, consumed by BOTH self-join sides —
-    # materialize so the shingle explode + 60-bit vote aggregate runs
-    # once, not once per side.
-    s = simhash_table(
-        df, text_col=text_col, id_col=id_col, ngram=3, hash_fn=hash_fn
-    ).localCheckpoint(eager=True)
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("t"),
-                F.shiftright("sh", r * block_bits)
-                .bitwiseAND(F.lit(mask))
-                .alias("bv"),
-            )
-            for r in range(nt)
-        ]
-    )
-    keyed = s.select("_id", "sh", F.explode(blocks).alias("bk"))
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    if max_bucket_fanout is None:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        # Banded self-join over the corpus-sized signature table (post-
-        # aggregate build side) -- shuffle_hash pin per the SCALING.md
-        # round-11 rule; the band value is the shuffle key.
-        cands = a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.bk") == F.col("b.bk")) & (F.col("a._id") < F.col("b._id")),
-        ).select(F.col("a._id").alias("doc_a"), F.col("a.sh").alias("sh_a"),
-                 F.col("b._id").alias("doc_b"), F.col("b.sh").alias("sh_b"))
-    else:
-        # sort_array on (id, sh) structs orders by id; each member pairs
-        # with the max_bucket_fanout lowest-id members of its bucket.
-        members = F.array_sort(
-            F.collect_set(F.struct(F.col("_id"), F.col("sh")))
-        )
-        per_bucket = keyed.groupBy("bk").agg(members.alias("ms"))
-        reps = F.slice(F.col("ms"), 1, max_bucket_fanout)
-        pair_structs = F.filter(
-            F.flatten(
-                F.transform(
-                    F.col("ms"),
-                    lambda m: F.transform(
-                        reps, lambda r: F.struct(r.alias("a"), m.alias("b"))
-                    ),
-                )
-            ),
-            lambda p: p["a"]["_id"] < p["b"]["_id"],
-        )
-        cands = per_bucket.select(F.explode(pair_structs).alias("p")).select(
-            F.col("p.a._id").alias("doc_a"), F.col("p.a.sh").alias("sh_a"),
-            F.col("p.b._id").alias("doc_b"), F.col("p.b.sh").alias("sh_b"),
-        )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cands.select("doc_a", "doc_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        # a pair agreeing on k blocks surfaces k times — one row per pair
-        .distinct()
-    )
+    sig = simhash_table(df, text_col=text_col, id_col=id_col, ngram=3, hash_fn=hash_fn)
+    return hamming_pairs(sig, max_hamming, bits, max_bucket_fanout)
 
 
 def minhash_lsh_incremental(

@@ -1,5 +1,5 @@
 """The one round driver for iterative operators: graph propagation,
-k-core peeling and integer gradient descent.
+k-core peeling, integer gradient descent and power iteration.
 
 Rule: an iterative operator keeps its state as ONE DataFrame and hands
 ``iterate`` a ``step`` that maps the state to the next round's state.

@@ -1029,38 +1029,32 @@ def wav_roundtrip(
     return df.select("doc_id", text_col).mapInPandas(run, out_schema)
 
 
-def ahash_bands(
-    df: "DataFrame", text_col: str = "text", w: int = 16, h: int = 16
-) -> "DataFrame":
-    """Perceptual average-hash (aHash) of a per-document image, emitted as
-    four 16-bit bands for LSH-style banding: render each document as a
-    deterministic w*h grayscale "thumbnail" whose pixel i is the CLIPPED
-    WORD-HISTOGRAM count of the words hashing to bucket i (a visual
-    bag-of-words — the stand-in for the decoded scan/photo payload this
-    stage sees in production; crucially, NEAR-DUPLICATE texts render to
+def _thumbnail_hash(df: "DataFrame", text_col: str, w: int, h: int, reduce) -> "DataFrame":
+    """(_id, sh): a 64-bit perceptual hash of each document's image.
+
+    The image is a deterministic w*h grayscale "thumbnail" whose pixel i
+    is the CLIPPED WORD-HISTOGRAM count of the words hashing to bucket i
+    (24 per word whose md5 prefix is i mod w*h, at most 255): a visual
+    bag-of-words, the stand-in for the decoded scan/photo payload this
+    stage sees in production. Near-duplicate texts render to
     near-identical images, exactly the property real re-encoded/cropped
-    image dupes have), round-trip it through the REAL BMP codec,
-    downsample the DECODED array 2x2, and set bit_i = (block mean >
-    global mean) — all in exact integer arithmetic (64*block_sum >
-    total_sum), so any engine recomputing from the same pixels lands on
-    the identical 64-bit signature.
-
-    The hash leaves as 4 x 16-bit ints rather than one int64: bit 63
-    would wrap the sign, and the bands ARE the join keys for the
-    pigeonhole candidate stage (hamming <= 3 across 4 bands guarantees
-    one band matches exactly — simhash_pairs' argument)."""
+    image dupes have. The render round-trips the REAL BMP codec, and
+    ``reduce`` maps the DECODED int64 (h, w) array to 64 bits in exact
+    integer arithmetic, so any engine recomputing from the same pixels
+    lands on the identical signature. Bit i of ``sh`` is bit i of the
+    reduction (bit 63 is the sign), the layout ``hamming_pairs`` blocks.
+    """
     import hashlib
 
     import numpy as np
 
     n = w * h
-    out_schema = "doc_id long, b0 int, b1 int, b2 int, b3 int"
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            recs = []
+            sigs = []
             bucket_cache: dict = {}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for text in pdf[text_col]:
                 pix = np.zeros(n, dtype=np.int64)
                 for word in str(text).split(" "):
                     if not word:
@@ -1072,77 +1066,48 @@ def ahash_bands(
                     pix[b] += 24
                 pix = np.minimum(pix, 255).astype(np.uint8).reshape(h, w)
                 dec = decode_bmp24(encode_bmp24(pix)).astype(np.int64)
-                # 2x2 block sums -> (h//2) x (w//2) grid, row-major bits
-                bs = dec.reshape(h // 2, 2, w // 2, 2).sum(axis=(1, 3)).ravel()
-                bits = (bs * (n // 4) > dec.sum()).astype(np.int64)
-                bands = [
-                    int((bits[16 * j:16 * (j + 1)] << np.arange(16)).sum())
-                    for j in range(4)
-                ]
-                recs.append((int(doc_id), *bands))
+                packed = np.packbits(np.asarray(reduce(dec), dtype=bool), bitorder="little")
+                sigs.append(packed.view("<i8")[0])
             yield pd.DataFrame(
-                recs, columns=["doc_id", "b0", "b1", "b2", "b3"]
+                {"_id": pdf["doc_id"].astype("int64"), "sh": np.array(sigs, dtype=np.int64)}
             )
 
-    return df.select("doc_id", text_col).mapInPandas(run, out_schema)
+    return df.select("doc_id", text_col).mapInPandas(run, "_id long, sh long")
 
 
-def dhash_bands(
-    df: "DataFrame", text_col: str = "text", w: int = 18, h: int = 16
-) -> "DataFrame":
-    """Perceptual difference-hash (dHash) of a per-document image, as four
-    16-bit bands for LSH-style banding: render the document as the same
-    deterministic word-histogram "thumbnail" ahash_bands uses (18x16 here
-    — one extra block COLUMN, because dHash compares horizontally
-    adjacent blocks and needs 9 columns to emit 8 bits per row),
-    round-trip it through the REAL BMP codec, 2x2-block-sum the DECODED
-    array into a 8x9 grid, and set bit (r, c) = (block(r, c) >
-    block(r, c+1)) — the brightness GRADIENT signature, which survives
-    global brightness/contrast shifts that flip aHash's mean-threshold
-    bits. All exact integer arithmetic, so any engine recomputing from
-    the same pixels lands on the identical 64-bit signature (same
-    argument as ahash_bands; the two hashes are complementary screens
-    and production image dedup typically runs both)."""
-    import hashlib
+def ahash_table(df: "DataFrame", text_col: str = "text") -> "DataFrame":
+    """(_id, sh): perceptual average-hash (aHash) of the 16x16
+    ``_thumbnail_hash`` image: downsample the decoded array 2x2 and set
+    bit_i = (block mean > global mean), row-major, computed as
+    64*block_sum > total_sum."""
 
-    import numpy as np
+    def reduce(dec):
+        bs = dec.reshape(8, 2, 8, 2).sum(axis=(1, 3)).ravel()
+        return bs * bs.size > dec.sum()
 
-    n = w * h
-    out_schema = "doc_id long, b0 int, b1 int, b2 int, b3 int"
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            bucket_cache: dict = {}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                pix = np.zeros(n, dtype=np.int64)
-                for word in str(text).split(" "):
-                    if not word:
-                        continue
-                    b = bucket_cache.get(word)
-                    if b is None:
-                        b = int(hashlib.md5(word.encode()).hexdigest()[:8], 16) % n
-                        bucket_cache[word] = b
-                    pix[b] += 24
-                pix = np.minimum(pix, 255).astype(np.uint8).reshape(h, w)
-                dec = decode_bmp24(encode_bmp24(pix)).astype(np.int64)
-                # 2x2 block sums -> (h//2) x (w//2) = 8 x 9 grid
-                bs = dec.reshape(h // 2, 2, w // 2, 2).sum(axis=(1, 3))
-                bits = (bs[:, :-1] > bs[:, 1:]).astype(np.int64).ravel()
-                bands = [
-                    int((bits[16 * j:16 * (j + 1)] << np.arange(16)).sum())
-                    for j in range(4)
-                ]
-                recs.append((int(doc_id), *bands))
-            yield pd.DataFrame(
-                recs, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(run, out_schema)
+    return _thumbnail_hash(df, text_col, 16, 16, reduce)
 
 
-# Fixed-point 8x32 DCT-II basis shared VERBATIM by phash_bands and the
-# dhash/phash DuckDB oracles (queries_curation2): coef[u][r] =
+def dhash_table(df: "DataFrame", text_col: str = "text") -> "DataFrame":
+    """(_id, sh): perceptual difference-hash (dHash) of the 18x16
+    ``_thumbnail_hash`` image (one extra block COLUMN, because dHash
+    compares horizontally adjacent blocks and needs 9 columns to emit 8
+    bits per row): 2x2-block-sum the decoded array into an 8x9 grid and
+    set bit (r, c) = (block(r, c) > block(r, c+1)) — the brightness
+    GRADIENT signature, which survives global brightness/contrast shifts
+    that flip aHash's mean-threshold bits (the two hashes are
+    complementary screens and production image dedup typically runs
+    both)."""
+
+    def reduce(dec):
+        bs = dec.reshape(8, 2, 9, 2).sum(axis=(1, 3))
+        return (bs[:, :-1] > bs[:, 1:]).ravel()
+
+    return _thumbnail_hash(df, text_col, 18, 16, reduce)
+
+
+# Fixed-point 8x32 DCT-II basis shared VERBATIM by phash_table and the
+# phash_dct_dedup DuckDB oracle (queries_curation2): coef[u][r] =
 # round(2^14 * cos(pi*(2r+1)u/64)). Integer constants inlined into both
 # engines make the low-frequency DCT an exact int64 matrix product —
 # no libm cos() at query time, no cross-engine float drift, no overflow
@@ -1162,59 +1127,23 @@ def dct_basis_8x32() -> list[list[int]]:
     ]
 
 
-def phash_bands(
-    df: "DataFrame", text_col: str = "text", w: int = 32, h: int = 32
-) -> "DataFrame":
-    """Perceptual DCT-hash (pHash) of a per-document image, as four 16-bit
-    bands: render the document as the deterministic 32x32 word-histogram
-    thumbnail (the ahash/dhash render at pHash's canonical input size),
-    round-trip it through the REAL BMP codec, take the 8x8 LOW-FREQUENCY
-    block of the 2-D DCT-II via the fixed-point integer basis above
-    (D = C P C^T — two int64 matrix products), and set bit k =
-    (63 * coef_k > sum of the 63 non-DC coefficients), DC forced to 0.
-    pHash survives blur/resize/compression perturbations that move many
-    individual pixels but little low-frequency energy — the third
-    complementary screen next to aHash (mean) and dHash (gradient).
-    Exact integer arithmetic end-to-end: both engines reproduce the
-    identical 64-bit signature from the same pixels."""
-    import hashlib
-
+def phash_table(df: "DataFrame", text_col: str = "text") -> "DataFrame":
+    """(_id, sh): perceptual DCT-hash (pHash) of the 32x32
+    ``_thumbnail_hash`` image (pHash's canonical input size): take the
+    8x8 LOW-FREQUENCY block of the 2-D DCT-II via the fixed-point integer
+    basis above (D = C P C^T — two int64 matrix products), and set bit
+    k = (63 * coef_k > sum of the 63 non-DC coefficients), DC forced to
+    0. pHash survives blur/resize/compression perturbations that move
+    many individual pixels but little low-frequency energy — the third
+    complementary screen next to aHash (mean) and dHash (gradient)."""
     import numpy as np
 
-    n = w * h
-    basis = None
-    out_schema = "doc_id long, b0 int, b1 int, b2 int, b3 int"
+    basis = np.array(dct_basis_8x32(), dtype=np.int64)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nonlocal basis
-        if basis is None:
-            basis = np.array(dct_basis_8x32(), dtype=np.int64)
-        for pdf in it:
-            recs = []
-            bucket_cache: dict = {}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                pix = np.zeros(n, dtype=np.int64)
-                for word in str(text).split(" "):
-                    if not word:
-                        continue
-                    b = bucket_cache.get(word)
-                    if b is None:
-                        b = int(hashlib.md5(word.encode()).hexdigest()[:8], 16) % n
-                        bucket_cache[word] = b
-                    pix[b] += 24
-                pix = np.minimum(pix, 255).astype(np.uint8).reshape(h, w)
-                dec = decode_bmp24(encode_bmp24(pix)).astype(np.int64)
-                coefs = (basis @ dec @ basis.T).ravel()
-                s63 = int(coefs[1:].sum())
-                bits = np.zeros(64, dtype=np.int64)
-                bits[1:] = (63 * coefs[1:] > s63).astype(np.int64)
-                bands = [
-                    int((bits[16 * j:16 * (j + 1)] << np.arange(16)).sum())
-                    for j in range(4)
-                ]
-                recs.append((int(doc_id), *bands))
-            yield pd.DataFrame(
-                recs, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
+    def reduce(dec):
+        coefs = (basis @ dec @ basis.T).ravel()
+        bits = 63 * coefs > coefs[1:].sum()
+        bits[0] = False
+        return bits
 
-    return df.select("doc_id", text_col).mapInPandas(run, out_schema)
+    return _thumbnail_hash(df, text_col, 32, 32, reduce)

@@ -25,12 +25,14 @@ from taxi_data_datapipeline_spark.functions.text import (
     ngram_shingles,
     tokens,
 )
+from taxi_data_datapipeline_spark.operators.dedup import hamming_pairs
 from taxi_data_datapipeline_spark.operators.iterate import iterate, round_rows
 from taxi_data_datapipeline_spark.queries import load, register
 from taxi_data_datapipeline_spark.queries_data import (
     _SQL_GRAMS,
     _SQL_JACCARD,
     _SQL_TOKS,
+    _image_hash_oracle,
 )
 
 # Normalized-text fingerprint, shared with dedup_exact's oracle.
@@ -548,17 +550,10 @@ def q_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dhash_gradient_dedup",
-    """
-WITH words AS (
-  SELECT doc_id, w.w AS word
-  FROM documents, LATERAL unnest(string_split(text, ' ')) AS w(w)
-  WHERE w.w <> ''),
-px AS (
-  SELECT doc_id,
-         CAST(('0x' || substring(md5(word), 1, 8)) AS BIGINT) % 288 AS idx,
-         LEAST(CAST(COUNT(*) AS BIGINT) * 24, 255) AS v
-  FROM words GROUP BY 1, 2),
-bsum AS (
+    _image_hash_oracle(
+        "dh",
+        288,
+        """bsum AS (
   SELECT doc_id,
          ((idx // 18) // 2) * 9 + ((idx % 18) // 2) AS blk,
          CAST(SUM(v) AS BIGINT) AS bs
@@ -579,31 +574,8 @@ dh AS MATERIALIZED (
          CAST(COALESCE(SUM(CASE WHEN k >= 32 AND k < 48 THEN bit << (k - 32) ELSE 0 END), 0) AS INT) AS b2,
          CAST(COALESCE(SUM(CASE WHEN k >= 48 THEN bit << (k - 48) ELSE 0 END), 0) AS INT) AS b3
   FROM bits GROUP BY doc_id),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.b0 AS a0, a.b1 AS a1, a.b2 AS a2, a.b3 AS a3,
-         b.b0 AS c0, b.b1 AS c1, b.b2 AS c2, b.b3 AS c3
-  FROM (
-    SELECT a.doc_id AS ida, b.doc_id AS idb FROM dh a JOIN dh b
-      ON a.b0 = b.b0 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM dh a JOIN dh b
-      ON a.b1 = b.b1 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM dh a JOIN dh b
-      ON a.b2 = b.b2 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM dh a JOIN dh b
-      ON a.b3 = b.b3 AND a.doc_id < b.doc_id) p
-  JOIN dh a ON a.doc_id = p.ida
-  JOIN dh b ON b.doc_id = p.idb)
-SELECT doc_a, doc_b,
-       CAST(bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-          + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) AS INT) AS hamming
-FROM cand
-WHERE bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-    + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) <= 3
 """,
+    ),
 )
 def q_dhash_gradient_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate image detection by perceptual DIFFERENCE-hash — the
@@ -614,41 +586,17 @@ def q_dhash_gradient_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production image dedup runs BOTH screens). The per-document image is
     the deterministic word-histogram render (18x16 — one extra block
     column buys 8 gradient bits per row) round-tripped through the real
-    BMP codec (operators/multimodal.py:dhash_bands); pairs within
-    hamming <= 3 surface via the same 4-band pigeonhole candidate
-    generator, whose band-equality joins are lossless for that radius.
+    BMP codec (operators/multimodal.py:dhash_table); pairs within
+    hamming <= 3 surface via the same ``hamming_pairs`` 4-block
+    pigeonhole candidate join, lossless for that radius.
 
-    Scale shape: one mapInPandas codec pass, four self-joins keyed on
-    16-bit bands, verification on candidates only — never all-pairs;
-    the signature table is answer-sized and checkpointed once."""
-    from taxi_data_datapipeline_spark.operators.multimodal import dhash_bands
+    Scale shape: one mapInPandas codec pass, one self-join keyed on
+    (block, 16-bit value), verification on candidates only — never
+    all-pairs."""
+    from taxi_data_datapipeline_spark.operators.multimodal import dhash_table
 
     d = load(spark, sf_dir, "documents", fan_out=True)
-    dh = dhash_bands(d).localCheckpoint(eager=False)
-    left = dh.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"b{j}").alias(f"a{j}") for j in range(4)],
-    )
-    right = dh.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"b{j}").alias(f"c{j}") for j in range(4)],
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a{j}").bitwiseXOR(F.col(f"c{j}"))) for j in range(4)
-    ).cast("int")
-    cands = None
-    for j in range(4):
-        c = (
-            left.join(
-                right,
-                (F.col(f"a{j}") == F.col(f"c{j}"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .select("doc_a", "doc_b", hamming.alias("hamming"))
-            .filter(F.col("hamming") <= 3)
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    return cands.distinct()
+    return hamming_pairs(dhash_table(d), max_hamming=3, bits=64)
 
 
 # --- perceptual DCT-hash (pHash) image dedup ----------------------------------
@@ -664,17 +612,10 @@ def _phash_oracle() -> str:
         for u, row in enumerate(dct_basis_8x32())
         for r, coef in enumerate(row)
     )
-    return f"""
-WITH words AS (
-  SELECT doc_id, w.w AS word
-  FROM documents, LATERAL unnest(string_split(text, ' ')) AS w(w)
-  WHERE w.w <> ''),
-px AS (
-  SELECT doc_id,
-         CAST(('0x' || substring(md5(word), 1, 8)) AS BIGINT) % 1024 AS idx,
-         LEAST(CAST(COUNT(*) AS BIGINT) * 24, 255) AS v
-  FROM words GROUP BY 1, 2),
-basis(u, r, coef) AS (VALUES {basis_rows}),
+    return _image_hash_oracle(
+        "ph",
+        1024,
+        f"""basis(u, r, coef) AS (VALUES {basis_rows}),
 d1 AS (
   SELECT p.doc_id, b.u, p.idx % 32 AS c,
          CAST(SUM(b.coef * p.v) AS BIGINT) AS s
@@ -702,31 +643,8 @@ ph AS MATERIALIZED (
          CAST(COALESCE(SUM(CASE WHEN k >= 32 AND k < 48 THEN bit << (k - 32) ELSE 0 END), 0) AS INT) AS b2,
          CAST(COALESCE(SUM(CASE WHEN k >= 48 THEN bit << (k - 48) ELSE 0 END), 0) AS INT) AS b3
   FROM documents d LEFT JOIN bits b USING (doc_id) GROUP BY d.doc_id),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.b0 AS a0, a.b1 AS a1, a.b2 AS a2, a.b3 AS a3,
-         b.b0 AS c0, b.b1 AS c1, b.b2 AS c2, b.b3 AS c3
-  FROM (
-    SELECT a.doc_id AS ida, b.doc_id AS idb FROM ph a JOIN ph b
-      ON a.b0 = b.b0 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM ph a JOIN ph b
-      ON a.b1 = b.b1 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM ph a JOIN ph b
-      ON a.b2 = b.b2 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM ph a JOIN ph b
-      ON a.b3 = b.b3 AND a.doc_id < b.doc_id) p
-  JOIN ph a ON a.doc_id = p.ida
-  JOIN ph b ON b.doc_id = p.idb)
-SELECT doc_a, doc_b,
-       CAST(bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-          + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) AS INT) AS hamming
-FROM cand
-WHERE bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-    + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) <= 3
-"""
+""",
+    )
 
 
 @register("phash_dct_dedup", _phash_oracle())
@@ -739,40 +657,16 @@ def q_phash_dct_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer basis inlined identically into both engines (no libm cos at
     query time — the multiply-chain discipline applied to a matrix
     product), and bit k compares 63*coef_k against the non-DC total in
-    exact int64. Pairs within hamming <= 3 via the same lossless 4-band
-    pigeonhole as the aHash/dHash queries.
+    exact int64. Pairs within hamming <= 3 via the same lossless
+    ``hamming_pairs`` pigeonhole as the aHash/dHash queries.
 
     Scale shape: one mapInPandas codec+DCT pass (the 8x32 basis is a
-    constant), answer-sized signature table, banded self-joins,
-    verification on candidates only — never all-pairs."""
-    from taxi_data_datapipeline_spark.operators.multimodal import phash_bands
+    constant), one blocked self-join, verification on candidates only —
+    never all-pairs."""
+    from taxi_data_datapipeline_spark.operators.multimodal import phash_table
 
     d = load(spark, sf_dir, "documents", fan_out=True)
-    ph = phash_bands(d).localCheckpoint(eager=False)
-    left = ph.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"b{j}").alias(f"a{j}") for j in range(4)],
-    )
-    right = ph.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"b{j}").alias(f"c{j}") for j in range(4)],
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a{j}").bitwiseXOR(F.col(f"c{j}"))) for j in range(4)
-    ).cast("int")
-    cands = None
-    for j in range(4):
-        c = (
-            left.join(
-                right,
-                (F.col(f"a{j}") == F.col(f"c{j}"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .select("doc_a", "doc_b", hamming.alias("hamming"))
-            .filter(F.col("hamming") <= 3)
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    return cands.distinct()
+    return hamming_pairs(phash_table(d), max_hamming=3, bits=64)
 
 
 # --- IVF nprobe/recall sweep --------------------------------------------------

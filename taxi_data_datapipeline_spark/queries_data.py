@@ -30,6 +30,7 @@ from taxi_data_datapipeline_spark.functions.text import (
 from taxi_data_datapipeline_spark.operators.dedup import (
     blocked_jaccard_pairs,
     exact_dedup,
+    hamming_pairs,
     minhash_lsh_pairs,
     simhash_dedup,
 )
@@ -4935,19 +4936,55 @@ def q_langid_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "multimodal_ahash_dedup",
-    """
+def _image_hash_oracle(sig: str, modulus: int, ctes: str) -> str:
+    """DuckDB oracle of a perceptual-hash near-dup query: the word render
+    (pixel ``idx`` = md5 bucket mod ``modulus``, ``v`` = clipped count),
+    then the query's own ``ctes``, which end in the signature CTE ``sig``
+    with 16-bit bands b0..b3, then the 4-band pigeonhole candidates and
+    their hamming <= 3 filter."""
+    return f"""
 WITH words AS (
   SELECT doc_id, w.w AS word
   FROM documents, LATERAL unnest(string_split(text, ' ')) AS w(w)
   WHERE w.w <> ''),
 px AS (
   SELECT doc_id,
-         CAST(('0x' || substring(md5(word), 1, 8)) AS BIGINT) % 256 AS idx,
+         CAST(('0x' || substring(md5(word), 1, 8)) AS BIGINT) % {modulus} AS idx,
          LEAST(CAST(COUNT(*) AS BIGINT) * 24, 255) AS v
   FROM words GROUP BY 1, 2),
-tot AS (
+{ctes}cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         a.b0 AS a0, a.b1 AS a1, a.b2 AS a2, a.b3 AS a3,
+         b.b0 AS c0, b.b1 AS c1, b.b2 AS c2, b.b3 AS c3
+  FROM (
+    SELECT a.doc_id AS ida, b.doc_id AS idb FROM {sig} a JOIN {sig} b
+      ON a.b0 = b.b0 AND a.doc_id < b.doc_id
+    UNION
+    SELECT a.doc_id, b.doc_id FROM {sig} a JOIN {sig} b
+      ON a.b1 = b.b1 AND a.doc_id < b.doc_id
+    UNION
+    SELECT a.doc_id, b.doc_id FROM {sig} a JOIN {sig} b
+      ON a.b2 = b.b2 AND a.doc_id < b.doc_id
+    UNION
+    SELECT a.doc_id, b.doc_id FROM {sig} a JOIN {sig} b
+      ON a.b3 = b.b3 AND a.doc_id < b.doc_id) p
+  JOIN {sig} a ON a.doc_id = p.ida
+  JOIN {sig} b ON b.doc_id = p.idb)
+SELECT doc_a, doc_b,
+       CAST(bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
+          + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) AS INT) AS hamming
+FROM cand
+WHERE bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
+    + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) <= 3
+"""
+
+
+@register(
+    "multimodal_ahash_dedup",
+    _image_hash_oracle(
+        "ah",
+        256,
+        """tot AS (
   SELECT doc_id, CAST(SUM(v) AS BIGINT) AS total FROM px GROUP BY doc_id),
 blocks AS (
   SELECT doc_id,
@@ -4965,31 +5002,8 @@ ah AS MATERIALIZED (
          CAST(COALESCE(SUM(CASE WHEN blk >= 32 AND blk < 48 THEN bit << (blk - 32) ELSE 0 END), 0) AS INT) AS b2,
          CAST(COALESCE(SUM(CASE WHEN blk >= 48 THEN bit << (blk - 48) ELSE 0 END), 0) AS INT) AS b3
   FROM documents d LEFT JOIN bits b USING (doc_id) GROUP BY d.doc_id),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.b0 AS a0, a.b1 AS a1, a.b2 AS a2, a.b3 AS a3,
-         b.b0 AS c0, b.b1 AS c1, b.b2 AS c2, b.b3 AS c3
-  FROM (
-    SELECT a.doc_id AS ida, b.doc_id AS idb FROM ah a JOIN ah b
-      ON a.b0 = b.b0 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM ah a JOIN ah b
-      ON a.b1 = b.b1 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM ah a JOIN ah b
-      ON a.b2 = b.b2 AND a.doc_id < b.doc_id
-    UNION
-    SELECT a.doc_id, b.doc_id FROM ah a JOIN ah b
-      ON a.b3 = b.b3 AND a.doc_id < b.doc_id) p
-  JOIN ah a ON a.doc_id = p.ida
-  JOIN ah b ON b.doc_id = p.idb)
-SELECT doc_a, doc_b,
-       CAST(bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-          + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) AS INT) AS hamming
-FROM cand
-WHERE bit_count(xor(a0, c0)) + bit_count(xor(a1, c1))
-    + bit_count(xor(a2, c2)) + bit_count(xor(a3, c3)) <= 3
 """,
+    ),
 )
 def q_multimodal_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate IMAGE detection by perceptual average-hash — the
@@ -4997,49 +5011,20 @@ def q_multimodal_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     screen in multimodal corpus dedup (identical re-encodes, crops of
     flat regions, brightness-shifted copies all collapse to small
     hamming distances). Each document's synthesized image round-trips
-    the REAL BMP codec (operators/multimodal.py:ahash_bands), the
+    the REAL BMP codec (operators/multimodal.py:ahash_table), the
     decoded pixels reduce to a 64-bit aHash in exact integer
-    arithmetic, and pairs within hamming <= 3 surface via the 4-band
-    pigeonhole: a <=3-bit difference cannot touch all 4 bands, so
-    band-equality joins are a LOSSLESS candidate generator (the
+    arithmetic, and pairs within hamming <= 3 surface via
+    ``hamming_pairs``' 4-block pigeonhole: a <=3-bit difference cannot
+    touch all 4 blocks, so block-equality candidates are LOSSLESS (the
     simhash_pairs argument, applied to images).
 
-    Scale shape: one mapInPandas codec pass, four self-joins keyed on
-    16-bit bands (uniformly distributed, no skew), verification only on
-    candidates — never all-pairs. At 100 TB the bands become the
-    shuffle keys of a banded join exactly as in MinHash-LSH."""
-    from taxi_data_datapipeline_spark.operators.multimodal import ahash_bands
+    Scale shape: one mapInPandas codec pass, one self-join keyed on
+    (block, 16-bit value), verification only on candidates — never
+    all-pairs. The oracle's b0..b3 are the same 16-bit blocks."""
+    from taxi_data_datapipeline_spark.operators.multimodal import ahash_table
 
     d = load(spark, sf_dir, "documents", fan_out=True)
-    ah = ahash_bands(d).localCheckpoint(eager=False)  # answer-sized signature table
-    left = ah.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"b{j}").alias(f"a{j}") for j in range(4)],
-    )
-    right = ah.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"b{j}").alias(f"c{j}") for j in range(4)],
-    )
-    # Hamming is computable inside each band-join branch (both signatures
-    # are already on the row), so the <=3 filter runs BEFORE the distinct —
-    # the dedup then sees only the answer-sized survivor set instead of the
-    # full candidate fanout, and no signature re-join is needed.
-    hamming = sum(
-        F.bit_count(F.col(f"a{j}").bitwiseXOR(F.col(f"c{j}"))) for j in range(4)
-    ).cast("int")
-    cands = None
-    for j in range(4):
-        c = (
-            left.join(
-                right,
-                (F.col(f"a{j}") == F.col(f"c{j}"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .select("doc_a", "doc_b", hamming.alias("hamming"))
-            .filter(F.col("hamming") <= 3)
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    return cands.distinct()
+    return hamming_pairs(ahash_table(d), max_hamming=3, bits=64)
 
 
 # --- Reciprocal-rank fusion (hybrid retrieval) ---------------------------------

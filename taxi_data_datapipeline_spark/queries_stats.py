@@ -2660,15 +2660,8 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = spark.range(1, 65).select(
         F.col("id").alias("j"), F.lit(_PCA_UNITS).cast("bigint").alias("vu")
     )
-    for _ in range(_PCA_ITERS):
-        # av (64 rows) is consumed TWICE per iteration (the max-abs
-        # normalizer AND the new v), and v feeds the next iteration —
-        # without truncation the returned plan embeds each iteration's
-        # subtree twice per consumer: 2^k growth, measured 333 physical
-        # operators / 60 re-references of the covariance RDD after 4
-        # iterations (plans/r13/pca_power_iteration_before.txt), paying
-        # exponential Catalyst planning per run. One eager checkpoint of
-        # the 64-row av per iteration keeps the plan iteration-sized.
+
+    def step(v: DataFrame) -> DataFrame:
         av = (
             c.join(F.broadcast(v), "j")
             .groupBy("i")
@@ -2677,22 +2670,20 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("decimal(38,0)")
                 .alias("av")
             )
-            .localCheckpoint(eager=True)
         )
         sc = av.agg(F.max(F.abs(F.col("av"))).alias("m"))
-        v = (
-            av.crossJoin(F.broadcast(sc))
-            .select(
-                F.col("i").alias("j"),
-                F.floor(
-                    F.col("av").cast("double")
-                    / F.col("m").cast("double")
-                    * F.lit(float(_PCA_UNITS))
-                )
-                .cast("bigint")
-                .alias("vu"),
+        return av.crossJoin(F.broadcast(sc)).select(
+            F.col("i").alias("j"),
+            F.floor(
+                F.col("av").cast("double")
+                / F.col("m").cast("double")
+                * F.lit(float(_PCA_UNITS))
             )
+            .cast("bigint")
+            .alias("vu"),
         )
+
+    v = iterate(v, step, _PCA_ITERS)[-1]
     return v.select(F.col("j").alias("dim"), F.col("vu").alias("eigvec_units"))
 
 

@@ -253,6 +253,74 @@ def test_simhash_block_lsh_full_recall(spark):
     assert found == truth  # full recall AND no false pairs
 
 
+def _signed64(v: int) -> int:
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+@pytest.mark.parametrize("bits", [64, 60])
+def test_hamming_pairs_matches_brute_force(spark, bits):
+    """``hamming_pairs`` finds exactly the pairs within radius 3 of a
+    brute-force all-pairs check. Hand-built signatures differ from their
+    base in 1-4 bits, with flips in every block (16-bit blocks of the
+    64-bit layout, 15-bit blocks of simhash_pairs_checked's 60-bit one),
+    including bit 63 (negative ``sh``) in the 64-bit layout."""
+    import random
+
+    from taxi_data_datapipeline_spark.operators.dedup import hamming_pairs
+
+    w = bits // 4
+    top = bits - 1
+    flips = [
+        (), (), (0,), (top,), (w - 1, w), (2 * w - 1, 3 * w), (0, w, 2 * w),
+        (w + 1, 2 * w + 1, top), (1, w + 2, 2 * w + 3, top),  # 4 bits: all blocks
+        (top - 1, top), (3, 4, 5), (w, w + 1, w + 2, w + 3),
+    ]
+    rng = random.Random(7)
+    sigs = {}
+    for base in (rng.getrandbits(bits) for _ in range(4)):
+        for f in flips:
+            v = base
+            for bit in f:
+                v ^= 1 << bit
+            sigs[len(sigs) + 1] = _signed64(v)
+    assert any(v < 0 for v in sigs.values()) == (bits == 64)
+    sig = spark.createDataFrame(list(sigs.items()), "_id long, sh long")
+    found = {tuple(r) for r in hamming_pairs(sig, 3, bits).collect()}
+    truth = set()
+    for a in sigs:
+        for b in sigs:
+            d = bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1")
+            if a < b and d <= 3:
+                truth.add((a, b, d))
+    assert {d for *_, d in truth} == {0, 1, 2, 3}
+    assert found == truth
+
+
+def test_simhash_capped_fanout(spark):
+    """The simhash hot-bucket cap: identical documents share a bucket in
+    every block. A fanout of at least k-1 keeps the exact pair set; a
+    smaller fanout F keeps exactly the pairs whose lower id is one of the
+    F lowest ids."""
+    from taxi_data_datapipeline_spark.operators.dedup import simhash_dedup
+
+    k = 7
+    tmpl = "all work and no play makes jack a dull boy " * 3
+    rows = [(i, tmpl) for i in range(1, k + 1)] + [
+        (100, "completely different words entirely unrelated content here"),
+        (101, "another unrelated document about a quiet river valley town"),
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def pairs(**kw):
+        return {tuple(r) for r in simhash_dedup(docs, max_hamming=3, **kw).collect()}
+
+    full = pairs()
+    ids = list(range(1, k + 1))
+    assert full == {(a, b, 0) for a in ids for b in ids if a < b}
+    assert pairs(max_bucket_fanout=k - 1) == full
+    assert pairs(max_bucket_fanout=2) == {p for p in full if p[0] in ids[:2]}
+
+
 def test_incremental_capped_buckets_only_counts_candidate_producing(spark):
     """The capped_buckets observation counts ONLY truncated buckets that
     contain at least one NEW document: a boilerplate mega-bucket made
